@@ -91,103 +91,31 @@ object Bench {
   // 10× in the r14 fresh-JVM rep). Its r5 heap-wake finding (+120% on
   // whatever ran after it) retires with it.
 
-  /** Entries whose plan hash cannot be made session-independent, mapped
-    * to CONSTANT markers so diff_plans.py reports them unchanged forever
-    * (a churning hash on identical code is exactly the false drift
-    * signal the PLANS artifact exists to kill). Shared with [[PlanDump]]
-    * so a regenerated artifact agrees with a benched one.
-    *
-    *   - t20 pulls the KLL summary to the driver and bakes its
-    *     (merge-order-dependent) quantile answers and bound into the
-    *     exact-rank probe plan — data-dependent literals.
-    *   - q15's multi-distinct rewrite assigns its Expand `gid`s by
-    *     iterating an ExprId-keyed collection, so two sessions emit the
-    *     same plan with the distinct groups (and their column order)
-    *     PERMUTED — structurally identical, textually unstable.
+  /** Parsed lines/s on ONE core, one figure per rep (BASELINE.md "≥10k
+    * parsed lines/s/core"): the full parse+cast pipeline over the sf log
+    * lines in one partition — wall time == one core's time. The corpus
+    * is REPLICATED 10×: at sf0.1 the raw lines parse in ~0.3 s on one
+    * core, a window where dispatch/GC jitter swings the figure 3× between
+    * same-code reps; the replicas stretch it to seconds without changing
+    * the rate's meaning.
     */
-  val dataDependentPlans: Map[String, String] = Map(
-    "t20_kll_quantiles" -> "DATA_DEPENDENT(driver-embedded sketch literals)",
-    // r18: adjudicated by deliberate bisection (the ONLY common-plan
-    // change in the r17→r18 diff alongside q126's explained one). The
-    // hash flips between e2e677... (one Project) and 045954... (two)
-    // depending ONLY on whether q127 is the FIRST query ever optimized
-    // in the session: for the session's first query CollapseProject
-    // merges the Tables.load ts-normalization cast into the
-    // grouping-expression Project; for every later query it stays a
-    // separate (no-op) Project node. Reproduced minimally: a preceding
-    // `SELECT 1` flips it; SPARK_GRAFT_NO_PARSE_CSE=1 does NOT (our
-    // optimizer rule is ruled out) — a Spark-internal first-use
-    // lazy-init artifact, structurally benign (node histograms differ
-    // by exactly one pass-through Project). The r17 artifact happened
-    // to capture the first-query shape, r18's the steady-state one.
-    "q127_migrant_sql" ->
-      "SESSION_DEPENDENT(first-optimized-query CollapseProject flap: the ts-normalization Project merges only for the session's first query)",
-    "q15_distinct_agg" ->
-      "SESSION_DEPENDENT(distinct-agg gid assignment permutes with expr-id allocation)",
-    // r11: the q15 mechanism, found in three more entries by the first
-    // full Bench-vs-PlanDump parity sweep — each aggregates several
-    // DISTINCT columns, and RewriteDistinctAggregates assigns Expand
-    // gids / key order by iterating an ExprId-keyed collection, so two
-    // sessions emit the same plan with the groups permuted (this is
-    // also why PLANS_r10's t22 hash differed from every same-code
-    // PlanDump: Bench's session had different exprId history)
-    "t22_theta_set_ops" ->
-      "SESSION_DEPENDENT(distinct-agg gid assignment permutes with expr-id allocation)",
-    "q33_approx_sketches" ->
-      "SESSION_DEPENDENT(distinct-agg gid assignment permutes with expr-id allocation)",
-    // r14: q97 joined the class on its first artifact-to-artifact diff
-    // (added in the final r13 commit, so r13 had no second dump to catch
-    // it): it aggregates TWO DISTINCT columns (n_paths, n_netlocs), and
-    // the r12↔r14 hashes differ with IDENTICAL node histograms — the
-    // Expand-gid permutation signature
-    "q97_url_functions" ->
-      "SESSION_DEPENDENT(distinct-agg gid assignment permutes with expr-id allocation)",
-    // r14: q74 joined the class when the r13 ADVICE fix folded r/c into
-    // the cells aggregate as TWO count_distincts (Stats.scala:65) — its
-    // hash flipped between two same-code same-day runs with identical
-    // node histograms (Expand present), the q97 signature exactly
-    "q74_cramers_v" ->
-      "SESSION_DEPENDENT(distinct-agg gid assignment permutes with expr-id allocation)",
-    "z01_self_checks" ->
-      "SESSION_DEPENDENT(embeds t22/q33 — distinct-agg gid permutation)")
+  def parseRates(spark: SparkSession, sfDir: String, reps: Int): Seq[Double] = {
+    val lines1 = graft.queries.DataOps.logLinesFor(spark, sfDir)
+    val lines = (1 to 10).map(_ => lines1).reduce(_ union _)
+      .coalesce(1).cache()
+    val n = lines.count()
+    try (1 to reps).map { _ =>
+      val t0 = System.nanoTime()
+      Measure.noop(graft.pipeline.Ingest.parse(lines, graft.queries.DataOps.ingestConfig))
+      n / ((System.nanoTime() - t0) / 1e9)
+    } finally lines.unpersist()
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // JVM (not ICU) case mapping: the ASCII corpus makes them identical,
-      // and ICU's CollationAwareUTF8String class-init stalls 20-110 s when
-      // the JIT queue is busy (measured; first lower()/upper() pays it)
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // plan fingerprints must be SESSION-STATE-INDEPENDENT: the default
-      // 100-char metadata truncation cuts DataFilters/ReadSchema at a
-      // RAW-character budget, so longer accumulated expression ids
-      // (#12345 vs #12) shift the "..." cut point and change the
-      // canonical hash with zero plan change (the r10 three-contexts-
-      // three-hashes q05 mystery). A large budget removes truncation;
-      // normalization then yields identical strings in any session.
-      .config("spark.sql.maxMetadataStringLength", "100000")
-      // match Verify: reference semantics drop malformed values, never raise
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+    val spark = GraftSession.local("graft-bench")
     // JVM/codegen warmup on the smallest SF so measured times are steady-state
-    val warmDir = "/root/testdata/sf0.001"
-    Bench.headline.foreach { n =>
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(n)(spark, warmDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] warmup $n FAILED: $e") }
-      System.err.println(f"[bench] warmup $n ${(System.nanoTime() - t0) / 1e9}%.1fs")
-    }
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    System.gc() // settle warmup garbage so the first measured query isn't taxed
+    Measure.warm(spark, headline, "bench")
 
     // FIXED-WORK CALIBRATION PROBES (r6 verdict item 2): between r5 and r6
     // every untouched map-only query drifted +25-50% — ambient sandbox
@@ -201,193 +129,21 @@ object Bench {
     //                    no input data, independent of SF — tracks Spark
     //                    task dispatch + codegen + scheduling overhead.
     // Median of 3, consistent with every other measurement here.
-    //
-    // ADJUDICATION (r7 verdict item 3, resolved r8): r7 flagged s01
-    // +210%, t05 +96%, d14 +80% with verified-unchanged code. An r8
-    // re-run measured all three BACK at their r6 levels (s01 0.40 s,
-    // t05 0.78 s, d14 0.48 s) — again with unchanged operator code —
-    // while calib_cpu showed that run's box 2.1× SLOWER than r7's
-    // (2398 ms vs 1160 ms). Queries can't speed up 3× on a 2× more
-    // loaded machine through a code mechanism; the r7 spikes were
-    // run-order/cache-state + ambient load, not plan changes. A second
-    // r8 run at MATCHED calib (1165 ms vs r7's 1160 — same box state)
-    // closed the remaining escape hatch: s01 0.53 s, t05 0.95 s, d14
-    // 0.55 s — in band at equal load too. Standing rule the probes
-    // enable: a per-query drift is only a finding when it exceeds ~2×
-    // the calib drift of the same run.
-    //
-    // ADJUDICATION (r8 verdict item 2, resolved r9): r8 flagged p04
-    // 4.16→5.66 s (+36%), q15 0.68→1.10 s (+62%), d05 1.72→2.08 s
-    // (+21%) at steady calib. An r9 isolated re-measurement (ProfileQ,
-    // 5 reps, warm JVM, sf0.1, operator code verified unchanged since
-    // r7 by the r8 judge) puts steady-state at q15 0.35–0.44 s — BELOW
-    // both flagged medians, so the r8 1.10 s cannot be a code
-    // mechanism — d05 1.88–1.99 s and p04 4.59–4.69 s, both inside the
-    // r7↔r8 band rather than at the r8 peak. Mechanism: run-order +
-    // cache state — r8 inserted 15 new entries into the run order
-    // (p04's predecessors changed), q15's own r8 spread (min 0.76,
-    // max 1.48) brackets its r7 median, and the r7 precedent
-    // (s01/t05/d14 reverting untouched) already demonstrated the
-    // pattern. No PlanAudit diff: plans are bit-identical by
-    // construction when operator+catalog code is unchanged, which the
-    // r8 judge's own read established.
-    //
-    // ADJUDICATION (r9 verdict item 2, resolved r10): r9 flagged t12
-    // 0.81→1.21 s, t14 0.62→0.87 s, p01 1.54→2.07 s, q52 0.33→0.47 s
-    // and parse_lines_per_sec_per_core 721k→458k (−36%), all with
-    // verifiably-untouched code. An r10 isolated re-measurement
-    // (ProfileQ, 5 reps, warm JVM, sf0.1, CPUS=32) at MATCHED box state
-    // (CalibProbe cpu 1135 ms vs r9's 1130, r8's 1153) puts
-    // steady-state at t12 1.06–1.43 s, t14 1.13–1.30 s, p01
-    // 2.03–2.23 s, q52 0.60–0.88 s — every one AT OR ABOVE its r9
-    // median and well above its r8 one. The r9 values ARE steady-state;
-    // the r8 values were the favorable outliers (run-order/cache state,
-    // the r7/r8 precedent pattern in reverse), so there is no
-    // regression to chase and no code mechanism exists (the r9 diff
-    // touches none of these operators). The parse-rate figure is a
-    // different defect: an isolated ParseRate 5-rep run at the same
-    // matched calib spread 111k–336k lines/s/core WITHIN ONE RUN (3×,
-    // dwarfing the flagged 1.6×) because the sf0.1 probe corpus parses
-    // in ~0.3 s on one core — a window where single-task dispatch + GC
-    // jitter dominate parse speed. Fixed below: the probe corpus is
-    // replicated 10× (window ~3 s; the lines/s/core unit is unchanged,
-    // r10's value is the new reference point).
-    //
-    // ADJUDICATION (r11 verdict item 3, resolved r12 — the one-rerun
-    // rule): a full same-code rerun this round read the 55-entry
-    // like-for-like sum at −4% vs BENCH_r11 (112.0 → 107.7 s; the r11
-    // +5.2% read recovered, calib_query 99 → 80 ms) and q59/q65 back at
-    // 1.19×/2.91× — both flags were ambient, as their unchanged plan
-    // hashes predicted. ingest_lines_per_sec read 66k in the rerun (r11:
-    // 84.6k, historical band 43k–172k, i01 plan hash unchanged since
-    // r10) — the ingest figure is the most ambient-sensitive number in
-    // the file and 66–85k is well inside its own observed spread; no
-    // code mechanism exists and none is chased.
-    //
-    // ADJUDICATION (r13 verdict item 3, resolved r14 — the one-rerun
-    // rule): isolated fresh-JVM 3-rep runs at sf0.1 read d15 at
-    // 5.05–5.48 s (flagged median 7.62, min 3.34), d11_dup_spans at
-    // 2.11–3.23 s (flagged 2.89), q84_state_merge at 1.18–2.32 s
-    // (flagged 1.63) — every flagged median sits at or above its
-    // isolated band's top, plan hashes unchanged: ambient + run-order,
-    // no code mechanism. Outcome: d15 is removed from the timed headline
-    // (its cost is its embedded O(n²) recall MEASUREMENT — see the note
-    // at the headline list; the operator stays probed at both scales),
-    // d11/q84 need no action.
-    //
-    // ADJUDICATION (r14 verdict item 2, resolved r15 — the one-rerun
-    // rule): r14 flagged the ingest slide (e2e 144,498 → 121,374
-    // lines/s −16%, parse/core 1,056,171 → 930,277 −12%) with i01's
-    // plan hash UNCHANGED and the calibration slightly slower. An r15
-    // isolated ParseRate run (5 reps, replicate 10 — Bench's exact
-    // regime) reads full-pipeline at 727k–1,169k lines/s/core, BEST
-    // 1,168,929 — ABOVE both the r13 and the flagged r14 medians, so
-    // there is no code mechanism (none could exist: the r14 diff
-    // touches no parse-path file) and the r11 precedent holds: the
-    // ingest figures are the most ambient-sensitive numbers in the
-    // file. CONFIRMED by the r15 builder bench itself: 145,097 e2e
-    // lines/s (r13's level) and 1,222,296 parse lines/s/core — both
-    // fully recovered with i01's plan hash still unchanged.
-    //
-    // From r10 on, the plan-unchanged half of any such argument is
-    // MECHANICAL: the fingerprint pass below emits PLANS_r{N}.json
-    // (entry → canonical-plan md5 + operator histogram); an unchanged
-    // hash settles "no plan mechanism" instantly, a changed hash names
-    // the replanned entry.
-    //
-    // ADJUDICATION (r10 verdict item 1, resolved r11) — the first
-    // exercise of the fingerprint mechanism: r10 flagged
-    // d19_quality_survivors 2.75 → 3.83 s (+39%) at steady calib with
-    // verifiably-untouched code. (1) Plan: d19's canonical hash in a
-    // full-catalog PlanDump at bench config (r10-basis normalization)
-    // equals PLANS_r10.json's — no plan mechanism, settled without
-    // argument. (2) Measurement: an isolated ProfileQ 5-rep run at
-    // MATCHED box state (CalibProbe cpu 1127 ms vs r10's 1116, r9's
-    // 1130) puts steady-state at 3.08–3.81 s (median ≈3.2) — inside the
-    // r9↔r10 band, BELOW the flagged r10 median, and bracketed by r10's
-    // own single-run spread (2.36–4.12, 1.7× within one run). Mechanism:
-    // run-order/ambient at d19's ~3 s scale, the r7/r8/r9 precedent
-    // pattern; there is no code or plan change to chase.
-    //
-    // FINGERPRINT BASIS CHANGE (r11): PLANS_r{N}.json now covers the
-    // FULL catalog (r10: 80 headline entries only — r10 verdict item 4),
-    // and the canonicalization additionally normalizes AQE runtime
-    // artifacts (ShuffleQueryStage/BroadcastQueryStage numbers,
-    // whole-stage-codegen `*(n)` ids, isFinalPlan) — entries that pull a
-    // driver-side model at BUILD time (t15, p05, p08) reach the
-    // fingerprint with stages already materialized, and those ids are
-    // assigned by ASYNC completion order (measured: two identical
-    // back-to-back dumps differed in exactly those tokens). Under the
-    // new basis a double full-catalog PlanDump is stable on every entry
-    // (the acceptance test; first run 131/131, re-proven as the catalog
-    // grows). Known residual: one of six r11 full dumps produced a
-    // variant s06_ann_pq hash (same node counts) that did not
-    // reproduce — five same-session and isolated re-dumps all agree on
-    // the committed value; if it recurs, capture the canonical text
-    // via SPARK_GRAFT_CANON_DIR before judging it a plan change.
-    // Consequence: r10→r11 hashes are NOT comparable wholesale; the
-    // bridging diff was run at the OLD basis before switching — 75 of
-    // the 80 shared entries unchanged (d19 among them), changes being
-    // t19 (this round's Misra-Gries rewrite), t15/p05/p08 (the AQE-id
-    // churn now normalized away), and t22, whose PLANS_r10 value is a
-    // Bench-vs-PlanDump context sensitivity, not a plan change: a
-    // PlanDump AT THE r10 COMMIT reproduces today's hash, not the r10
-    // artifact's.
-    // probe definitions live in graft.Calib — ONE implementation shared
-    // with the CalibProbe dev main, so out-of-bench re-measurements are
-    // comparable to these numbers by construction
+    // Standing rule the probes enable: a per-query drift is only a
+    // finding when it exceeds ~2× the calib drift of the same run; the
+    // plan-unchanged half of the argument is the fingerprint pass below.
+    // Probe definitions live in graft.Calib, shared with `Dev calib`, so
+    // out-of-bench re-measurements compare to these numbers by
+    // construction.
     val (calibCpuMs, calibSink) = Calib.cpuProbeMs()
     val calibQueryMs = Calib.queryProbeMs(spark)
     System.err.println(
       f"[bench] calib cpu=${calibCpuMs}%.0fms query=${calibQueryMs}%.0fms (sink=$calibSink)")
 
-    // 3 timed reps per query; the headline number is the MEDIAN, with
-    // min/max carried alongside so a round-over-round delta is
-    // attributable (sub-second single-shot timings are indistinguishable
-    // from JIT/GC jitter — r4 verdict item 3). The first rep at a new
-    // data size pays JIT/codegen once; the median discounts it without
-    // hiding a genuinely bimodal query the way min-of-N would.
-    case class Stat(median: Double, min: Double, max: Double)
-    val results: Seq[(String, Stat)] = headline.map { name =>
-      val times = (1 to 3).flatMap { _ =>
-        val t0 = System.nanoTime()
-        val ok =
-          try {
-            SparkEntry.queries(name)(spark, sfDir)
-              .write.format("noop").mode("overwrite").save()
-            true
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: $e"); false
-          }
-        val t = (System.nanoTime() - t0) / 1e9
-        // release any cache the operator pinned (e.g. minhash shingle
-        // sets) BLOCKING, so a previous query's resident blocks can't
-        // poison the next measurement with memory pressure
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-        spark.catalog.clearCache()
-        // GC after EVERY rep, not just per query: driver garbage (collected
-        // union-find edge arrays, broadcast values) otherwise accumulates
-        // across reps and ContextCleaner — which only reclaims broadcasts /
-        // shuffle files when their handles get GC'd — never runs. Measured
-        // on d15: reps degrade 3.9→7.0→13.0 s without this, flat 3.1–3.6 s
-        // with it (r5 bench recorded the degraded 17.7 s median).
-        System.gc()
-        if (ok) Some(t) else None
-      }
-      val stat =
-        if (times.isEmpty) Stat(-1.0, -1.0, -1.0)
-        else {
-          val s = times.sorted
-          // true median: with an even count (a rep failed) average the
-          // middle two — s(n/2) alone would report the MAX of 2 survivors
-          // and turn one flaky rep into a phantom regression
-          val med =
-            if (s.length % 2 == 1) s(s.length / 2)
-            else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
-          Stat(med, s.head, s.last)
-        }
-      name -> stat
-    }
+    // 3 timed reps per query, median/min/max (sub-second single-shot
+    // timings are indistinguishable from JIT/GC jitter — r4 verdict item 3)
+    val results: Seq[(String, Measure.Stat)] =
+      headline.map(name => name -> Measure.entry(spark, name, sfDir, 3, "bench"))
 
     // PLAN FINGERPRINTS (r9 verdict item 3): one canonical-plan hash per
     // headline entry, written to PLANS_r{N}.json next to the bench line.
@@ -416,31 +172,12 @@ object Bench {
     // without a judge diffing plan files)
     var fpMap: Map[String, String] = Map.empty
     try {
-      // r10 fingerprinted only the 80 bench-headline entries; a plan
-      // regression in any non-benched entry was invisible (r10 verdict
-      // What's-wrong #3). The pass now covers the FULL catalog — the
-      // fingerprint forces planning only (no execution), so the extra
-      // ~50 entries cost seconds, and the artifact becomes a complete
-      // plan-change tripwire.
-      val allNames = SparkEntry.queries.keys.toSeq.sorted
-      val entries = allNames.map { name =>
-        val (h, nodes) =
-          if (dataDependentPlans.contains(name))
-            (dataDependentPlans(name), Map.empty[String, Int])
-          else try PlanFingerprint.fingerprintNamed(SparkEntry.queries(name)(spark, sfDir), name)
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] plan fingerprint $name FAILED: $e")
-            ("ERROR:" + e.getClass.getSimpleName, Map.empty[String, Int])
-          }
-        fpMap += (name -> h)
-        val nodesJson = nodes.toSeq.sorted
-          .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-        "\"" + name + "\":{\"plan_md5\":\"" + h + "\",\"nodes\":" + nodesJson + "}"
-      }
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(f"PLANS_r$roundN%02d.json"),
-        (entries.mkString("{", ",\n", "}") + "\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      // the FULL catalog, not just the headline: the fingerprint forces
+      // planning only (no execution), so a plan regression in a
+      // non-benched entry is caught for seconds of extra work
+      val rows = PlanFingerprint.catalog(spark, sfDir, SparkEntry.queries.keys.toSeq.sorted)
+      fpMap = rows.map { case (name, h, _) => name -> h }.toMap
+      PlanFingerprint.write(f"PLANS_r$roundN%02d.json", rows)
       System.err.println(f"[bench] plan fingerprints → PLANS_r$roundN%02d.json")
     } catch { case e: Throwable =>
       System.err.println(s"[bench] plan fingerprint pass FAILED: $e")
@@ -505,28 +242,9 @@ object Bench {
       System.err.println(s"[bench] stream ingest FAILED: $e"); (-1.0, -1.0)
     }
 
-    // per-core parse rate (BASELINE.md "≥10k parsed lines/s/core"): the
-    // full parse+cast pipeline over one partition — wall time == one
-    // core's time; min of 2 for steady state. The probe corpus is the
-    // sf lines REPLICATED 10×: at sf0.1 the raw corpus parses in ~0.3 s
-    // on one core, a window where dispatch/GC jitter swings the figure
-    // 3× between same-code reps (the r9 −36% "drift", adjudicated
-    // above) — the replicas stretch the window to seconds without
-    // changing the rate's meaning.
-    val coreLps: Double = try {
-      val lines1 = graft.queries.DataOps.logLinesFor(spark, sfDir)
-      val lines = (1 to 10).map(_ => lines1).reduce(_ union _)
-        .coalesce(1).cache()
-      val n = lines.count()
-      val times = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        graft.pipeline.Ingest.parse(lines, graft.queries.DataOps.ingestConfig)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      lines.unpersist()
-      n / times.min
-    } catch { case e: Throwable =>
+    // per-core parse rate, best of 2 for steady state
+    val coreLps: Double = try parseRates(spark, sfDir, 2).max
+    catch { case e: Throwable =>
       System.err.println(s"[bench] per-core parse FAILED: $e"); -1.0
     }
 

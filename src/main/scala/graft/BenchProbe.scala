@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** The 10× scale-probe sweep as a standalone main, forked by [[Bench]]
   * into a FRESH JVM each round (r13 verdict items 1+2 — the structural
   * fix for the long-lived-JVM probe-bias class).
@@ -136,8 +134,8 @@ import org.apache.spark.sql.SparkSession
   *     on the same corpus — the n²/mod assignment term is gone from
   *     the measurement, not just the asymptotic argument; the probe
   *     path AND the catalog entry both pass the auto mod now.
-  *   - ingest band (r17 "low end" note): fresh-JVM ParseRate at the
-  *     bench's exact 10×-replicated regime reads full-pipeline BEST
+  *   - ingest band (r17 "low end" note): a fresh-JVM per-core parse
+  *     run at the bench's exact 10×-replicated regime reads full-pipeline BEST
   *     1,043,417 lines/s/core (reps 707k–1,043k), extract-only
   *     1,835,637 — squarely inside the r14–r17 band (727k–1,169k), so
   *     the r17 sweep's 121,876 e2e read is the documented
@@ -154,7 +152,7 @@ import org.apache.spark.sql.SparkSession
   *     signature, not an operator mechanism; the round's own filtered
   *     probes (d23 0.95 s, s07 1.19×, q137 in the probe set) and the
   *     199/199 oracle gate are the per-entry evidence. The three top
-  *     drifts were additionally re-repped fresh-JVM (ProfileQ, 3 reps,
+  *     drifts were additionally re-repped fresh-JVM (3 noop-write reps,
   *     same day): t09 steady state 1.26–1.38 s — ON its r17 median
   *     (1.37) — q42 1.06–1.52 s, q58 1.50–1.98 s, all far below their
   *     sweep reads with bit-identical plan hashes; the cluster is
@@ -296,18 +294,7 @@ object BenchProbe {
     val outPath = args(2)
     val only: Option[Set[String]] =
       if (args.length > 3) Some(args(3).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-bench-probe")
 
     def keep(name: String): Boolean = only.forall(_.contains(name))
 
@@ -315,15 +302,7 @@ object BenchProbe {
     // without it the 1× legs would fold first-use JIT into the
     // denominator. Custom (non-catalog) probes self-warm through their
     // own 1× min-of-2 leg.
-    val warmDir = "/root/testdata/sf0.001"
-    probeEntries.filter(keep).foreach { n =>
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(n)(spark, warmDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[probe] warmup $n FAILED: $e") }
-      System.err.println(f"[probe] warmup $n ${(System.nanoTime() - t0) / 1e9}%.1fs")
-    }
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    System.gc()
+    Measure.warm(spark, probeEntries.filter(keep), "probe")
 
     // ---- amplified tables (SALTED replicas; see Bench history) --------
     // documents: every token of replica r>0 gets an `_r$r` suffix so
@@ -375,21 +354,12 @@ object BenchProbe {
     }.reduce(_ unionByName _)
       .write.mode("overwrite").parquet(s"$tmp/orders.parquet")
 
-    def once(work: => Unit): Double = {
-      val t0 = System.nanoTime()
-      work
-      val t = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      spark.catalog.clearCache()
-      System.gc()
-      t
-    }
     // min-of-2: single-shot probe times swung up to 4× between same-code
     // runs (ambient GC/load spikes). Second rep skipped above 60 s — the
     // quadratic case is unambiguous and a rep there costs minutes.
     def robust(work: => Unit): Double = {
-      val t1 = once(work)
-      if (t1 >= 60.0) t1 else math.min(t1, once(work))
+      val t1 = Measure.once(spark)(work)
+      if (t1 >= 60.0) t1 else math.min(t1, Measure.once(spark)(work))
     }
     // per-entry fault isolation (r8 lesson: one transient failure must
     // degrade that one ratio to -1, not null the whole blob)
@@ -632,7 +602,7 @@ object BenchProbe {
         // asymmetric handling would bias the ratio (one leg min-of-2, or
         // a failed leg reporting time-until-failure as a measurement)
         def tryOnce(name: String)(work: => Unit): Double =
-          try once(work) catch {
+          try Measure.once(spark)(work) catch {
             case e: Throwable =>
               System.err.println(s"[probe] $name FAILED: $e")
               e.printStackTrace()

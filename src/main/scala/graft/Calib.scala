@@ -3,12 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The fixed-work calibration probes — ONE definition shared by Bench
-  * (which stamps them into every `BENCH_r{N}.json`) and CalibProbe (the
+  * (which stamps them into every `BENCH_r{N}.json`) and `Dev calib` (the
   * out-of-bench box-state check), so the two are comparable by
-  * construction: the probes exist precisely so an isolated ProfileQ /
-  * ParseRate re-measurement can be framed against the bench's load
-  * state, and two hand-synced copies would silently desynchronize that
-  * comparison on the next tweak.
+  * construction: the probes exist precisely so an isolated `Dev time` /
+  * `Dev parse-rate` re-measurement can be framed against the bench's
+  * load state, and two hand-synced copies would silently desynchronize
+  * that comparison on the next tweak.
   *
   *   - `cpuProbeMs`   — single-threaded splitmix64 mixing loop (3e8
   *     rounds), pure ALU, zero allocation: raw per-core CPU

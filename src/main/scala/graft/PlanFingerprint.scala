@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Canonical physical-plan fingerprints — the mechanical half of bench
   * drift adjudication (r9 verdict item 3). Three consecutive rounds paid
@@ -26,6 +26,66 @@ import org.apache.spark.sql.DataFrame
   * regression.
   */
 object PlanFingerprint {
+
+  /** Entries whose plan hash cannot be made session-independent, mapped
+    * to CONSTANT markers so diff_plans.py reports them unchanged forever
+    * (a churning hash on identical code is exactly the false drift
+    * signal the PLANS artifact exists to kill). Applied by [[catalog]], so
+    * an artifact regenerated with `Dev plan` agrees with a benched one.
+    *
+    *   - t20 pulls the KLL summary to the driver and bakes its
+    *     (merge-order-dependent) quantile answers and bound into the
+    *     exact-rank probe plan — data-dependent literals.
+    *   - q15's multi-distinct rewrite assigns its Expand `gid`s by
+    *     iterating an ExprId-keyed collection, so two sessions emit the
+    *     same plan with the distinct groups (and their column order)
+    *     PERMUTED — structurally identical, textually unstable.
+    */
+  val dataDependentPlans: Map[String, String] = Map(
+    "t20_kll_quantiles" -> "DATA_DEPENDENT(driver-embedded sketch literals)",
+    // r18: adjudicated by deliberate bisection (the ONLY common-plan
+    // change in the r17→r18 diff alongside q126's explained one). The
+    // hash flips between e2e677... (one Project) and 045954... (two)
+    // depending ONLY on whether q127 is the FIRST query ever optimized
+    // in the session: for the session's first query CollapseProject
+    // merges the Tables.load ts-normalization cast into the
+    // grouping-expression Project; for every later query it stays a
+    // separate (no-op) Project node. Reproduced minimally: a preceding
+    // `SELECT 1` flips it; SPARK_GRAFT_NO_PARSE_CSE=1 does NOT (our
+    // optimizer rule is ruled out) — a Spark-internal first-use
+    // lazy-init artifact, structurally benign (node histograms differ
+    // by exactly one pass-through Project). The r17 artifact happened
+    // to capture the first-query shape, r18's the steady-state one.
+    "q127_migrant_sql" ->
+      "SESSION_DEPENDENT(first-optimized-query CollapseProject flap: the ts-normalization Project merges only for the session's first query)",
+    "q15_distinct_agg" ->
+      "SESSION_DEPENDENT(distinct-agg gid assignment permutes with expr-id allocation)",
+    // r11: the q15 mechanism, found in three more entries by the first
+    // full Bench-vs-standalone-dump parity sweep — each aggregates several
+    // DISTINCT columns, and RewriteDistinctAggregates assigns Expand
+    // gids / key order by iterating an ExprId-keyed collection, so two
+    // sessions emit the same plan with the groups permuted (this is
+    // also why PLANS_r10's t22 hash differed from every same-code
+    // standalone dump: Bench's session had different exprId history)
+    "t22_theta_set_ops" ->
+      "SESSION_DEPENDENT(distinct-agg gid assignment permutes with expr-id allocation)",
+    "q33_approx_sketches" ->
+      "SESSION_DEPENDENT(distinct-agg gid assignment permutes with expr-id allocation)",
+    // r14: q97 joined the class on its first artifact-to-artifact diff
+    // (added in the final r13 commit, so r13 had no second dump to catch
+    // it): it aggregates TWO DISTINCT columns (n_paths, n_netlocs), and
+    // the r12↔r14 hashes differ with IDENTICAL node histograms — the
+    // Expand-gid permutation signature
+    "q97_url_functions" ->
+      "SESSION_DEPENDENT(distinct-agg gid assignment permutes with expr-id allocation)",
+    // r14: q74 joined the class when the r13 ADVICE fix folded r/c into
+    // the cells aggregate as TWO count_distincts (Stats.scala:65) — its
+    // hash flipped between two same-code same-day runs with identical
+    // node histograms (Expand present), the q97 signature exactly
+    "q74_cramers_v" ->
+      "SESSION_DEPENDENT(distinct-agg gid assignment permutes with expr-id allocation)",
+    "z01_self_checks" ->
+      "SESSION_DEPENDENT(embeds t22/q33 — distinct-agg gid permutation)")
 
   /** The plan string with volatile tokens normalized away. Uses the
     * pre-execution plan (under AQE: `isFinalPlan=false` + the initial
@@ -108,5 +168,37 @@ object PlanFingerprint {
     val md = java.security.MessageDigest.getInstance("MD5")
       .digest(c.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     (md.map("%02x".format(_)).mkString, nodeHistogram(c))
+  }
+
+  /** (name, hash, node histogram) for each named catalog entry built over
+    * `sfDir`: the [[dataDependentPlans]] marker where one exists, and
+    * `ERROR:<exception class>` for an entry that fails to build.
+    */
+  def catalog(spark: SparkSession, sfDir: String,
+      names: Seq[String]): Seq[(String, String, Map[String, Int])] =
+    names.map { name =>
+      val (h, nodes) =
+        if (dataDependentPlans.contains(name))
+          (dataDependentPlans(name), Map.empty[String, Int])
+        else try fingerprintNamed(SparkEntry.queries(name)(spark, sfDir), name)
+        catch { case e: Throwable =>
+          System.err.println(s"[plan] $name FAILED: $e")
+          ("ERROR:" + e.getClass.getSimpleName, Map.empty[String, Int])
+        }
+      (name, h, nodes)
+    }
+
+  /** Writes `PLANS_rNN.json`'s format, `{name: {plan_md5, nodes}}` one
+    * entry per line — what `tools/diff_plans.py` reads.
+    */
+  def write(path: String, rows: Seq[(String, String, Map[String, Int])]): Unit = {
+    val entries = rows.map { case (name, h, nodes) =>
+      val nodesJson = nodes.toSeq.sorted
+        .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+      "\"" + name + "\":{\"plan_md5\":\"" + h + "\",\"nodes\":" + nodesJson + "}"
+    }
+    java.nio.file.Files.write(java.nio.file.Paths.get(path),
+      (entries.mkString("{", ",\n", "}") + "\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 }

@@ -6,8 +6,6 @@ import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -23,22 +21,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-verify")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // JVM (not ICU) case mapping: the ASCII corpus makes them identical,
-      // and ICU's CollationAwareUTF8String class-init stalls 20-110 s when
-      // the JIT queue is busy (measured; first lower()/upper() pays it)
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      // reference semantics: malformed values drop rows, never raise
-      // (SURVEY §1.2); also required by wrap-around hash arithmetic
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-verify")
     new java.io.File(outDir).mkdirs()
 
     val pool = Executors.newFixedThreadPool(4)

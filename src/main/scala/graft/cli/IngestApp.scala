@@ -58,15 +58,8 @@ object IngestApp {
     // its lifecycle alone; stop only a session this main created
     val preExisting = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession).isDefined
-    val spark = SparkSession.builder()
-      .master(opts.getOrElse("master", "local[*]"))
-      .appName("graft-ingest")
-      .config("spark.sql.session.timeZone", "UTC")
-      // JVM (not ICU) case mapping: the ASCII corpus makes them identical,
-      // and ICU's CollationAwareUTF8String class-init stalls 20-110 s when
-      // the JIT queue is busy (measured; first lower()/upper() pays it)
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
+    val spark = graft.GraftSession
+      .builder("graft-ingest", opts.getOrElse("master", "local[*]"))
       .getOrCreate()
     // expose parse_log_line/dot_product/... to spark.sql on this session
     graft.plans.GraftExtensions.install(spark)

@@ -749,8 +749,8 @@ object Dedup {
     * CACHE LIFETIME: the returned frame reads the cache lazily, so this
     * method cannot unpersist it. A long-lived session calling this per
     * batch should drop it after the consuming action
-    * (`getPersistentRDDs.values.foreach(_.unpersist(true))`, as Bench and
-    * ProfileQ do between reps) or pass `persistToks = false`.
+    * (`getPersistentRDDs.values.foreach(_.unpersist(true))`, as
+    * [[graft.Measure.settle]] does between reps) or pass `persistToks = false`.
     */
   def scrubDuplicatedSpans(
       docs: DataFrame,

@@ -348,7 +348,7 @@ object TextAnalysis {
     * document frequency (df) — the corpus-statistics pass behind tokenizer
     * training, stopword induction, and IDF tables.
     *
-    * One explode + a two-round aggregate (verified with PlanAudit): the
+    * One explode + a two-round aggregate (verified in the executed plan): the
     * mixed distinct/non-distinct aggregate plans Expand + partial hash
     * aggregate on (term, id) MAP-SIDE — the exploded token stream
     * compresses to per-partition (term, id) partials before anything

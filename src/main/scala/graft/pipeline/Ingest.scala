@@ -44,19 +44,6 @@ object Ingest {
     if (tpl.scannable) ParseLogTemplate(col("value"), tpl.format)
     else ParseLogLine(col("value"), tpl.regex)
 
-  /** Extract each log field as a string column: one parse pass,
-    * mismatching lines dropped.
-    */
-  def extracted(df: DataFrame, tpl: LogTemplate): DataFrame = {
-    val withGroups = df
-      .withColumn("__groups", OptimizerFence(parseCol(tpl)))
-      .filter(col("__groups").isNotNull)
-    val fieldCols = tpl.fields.zipWithIndex.map { case (f, i) =>
-      col("__groups").getItem(i).as(f)
-    }
-    withGroups.select(fieldCols: _*)
-  }
-
   /** Full pipeline: returns only the valid, typed rows in the target
     * column order. Missing scheme field → plan-time error (the reference
     * drops such rows at runtime, `pkg/nginx/entry.go:17-23`; SURVEY §2.2 T3

@@ -18,8 +18,8 @@ import org.apache.spark.sql.types.BooleanType
   * This rule pulls every parse subtree that appears in TWO OR MORE
   * places into a child Project under a shared alias and rewrites the
   * consumers to reference it — one text parse per row, however many
-  * accessors read the document. Measured on q125 (13 accessors, same
-  * ProfileQ noop-write harness): 13 parses/row → 1, entry time
+  * accessors read the document. Measured on q125 (13 accessors, noop-write
+  * timing): 13 parses/row → 1, entry time
   * 6.8–7.1 s → 4.7–5.8 s (~30% — the interpreted per-accessor
   * NAVIGATION trees dominate once the parse is shared; see the
   * GraftExtensions jsonFunctions cost note).

@@ -108,7 +108,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }.reduce((a, b) => BitwiseOr(a, b))
   }
 
-  private[plans] def functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+  private[graft] def functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     (FunctionIdentifier("parse_log_line"),
       info("parse_log_line", "parse_log_line(line, regex) - all capture groups as array<string>, NULL on mismatch"),
       (args: Seq[Expression]) => ParseLogLine(args(0), strLit(args(1), "parse_log_line"))),
@@ -1340,7 +1340,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     *
     * COST PROFILE (measured, q125 bench medians — full noop-write
     * evaluation; a `count()`-based timing PRUNES the projection and
-    * reads 17× lower, the ProfileQ r16 fix): variant and HOF
+    * reads 17× lower): variant and HOF
     * expressions have no codegen — the r16 stock-composition trees
     * evaluated interpreted at ~0.6 s per accessor-column over sf0.1
     * events (~7.8 s for q125's deliberate 13-accessor battery). Two

@@ -46,9 +46,9 @@ import org.apache.spark.sql.types.IntegerType
   * Correctness gate: catalog query q39 runs the REWRITTEN plan and
   * hash-matches the DuckDB window oracle; the spec additionally pins
   * rewrite-fires / rewrite-declines cases and result equality with the
-  * unrewritten window form. Measured vs stock with `graft.TopKCompare`
-  * (interleaved min-of-5, sf0.1 lineitem, 1000 supplier keys): 2.65×
-  * at k=3, 1.64× at k=100.
+  * unrewritten window form. Measured vs the stock WindowGroupLimit+Sort
+  * plan on the same query in one session (interleaved min-of-5, sf0.1
+  * lineitem, 1000 supplier keys): 2.65× at k=3, 1.64× at k=100.
   *
   * The rewrite declines (leaving the stock window plan) when: the rank is
   * not `row_number` (rank/dense_rank admit >k survivors on ties), the

@@ -1,5 +1,8 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -72,6 +75,28 @@ class PlanFingerprintSpec extends AnyFunSuite {
     assert(nodes.get("HashAggregate").contains(1), nodes.toString)
     assert(nodes.get("ColumnarToRow").contains(1), nodes.toString)
     assert(nodes.get("Exchange").contains(1), nodes.toString)
+  }
+
+  test("a data-dependent entry yields its constant marker, unbuilt") {
+    val Seq((name, h, nodes)) =
+      PlanFingerprint.catalog(spark, "/nonexistent", Seq("t20_kll_quantiles"))
+    assert(name == "t20_kll_quantiles")
+    assert(h == PlanFingerprint.dataDependentPlans(name) && nodes.isEmpty)
+  }
+
+  test("the written plans file reads back as {name: {plan_md5, nodes}}") {
+    val (h, nodes) = PlanFingerprint.fingerprint(agg(dirA))
+    val marker = PlanFingerprint.dataDependentPlans("t20_kll_quantiles")
+    val f = java.nio.file.Files.createTempFile("graft_plans", ".json")
+    PlanFingerprint.write(f.toString,
+      Seq(("agg", h, nodes), ("t20_kll_quantiles", marker, Map.empty[String, Int])))
+    val json = new ObjectMapper().readTree(f.toFile)
+    assert(json.fieldNames.asScala.toSeq == Seq("agg", "t20_kll_quantiles"))
+    assert(json.get("agg").get("plan_md5").asText == h)
+    assert(json.get("agg").get("nodes").fields.asScala
+      .map(e => e.getKey -> e.getValue.asInt).toMap == nodes)
+    assert(json.get("t20_kll_quantiles").get("plan_md5").asText == marker)
+    assert(json.get("t20_kll_quantiles").get("nodes").isEmpty)
   }
 
   test("canonical form contains no absolute paths or expression ids") {

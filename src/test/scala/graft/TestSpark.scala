@@ -2,17 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole test run. */
+/** One shared local session for the whole test run; 4 workers keep the
+  * tests' partitioning independent of the machine.
+  */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.icu.caseMappings.enabled", "false") // ASCII corpus: JVM == ICU, skips ICU class-init stall
-    // engine sessions (Verify/Bench/IngestApp) run non-ANSI — reference
-    // semantics drop malformed values instead of raising; tests match
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local("graft-test", cpus = 4)
 }
