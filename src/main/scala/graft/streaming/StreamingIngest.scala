@@ -24,11 +24,24 @@ object StreamingIngest {
     * archive/delete reproduces the backup/delete policy
     * (`pkg/fileio/rotate.go:28-71`, `io.go:16-73`). The `nginx -s reopen`
     * side effect has no engine analog (external hook).
+    *
+    * Raises the session's `spark.sql.sources.parallelPartitionDiscovery.threshold`
+    * to `maxFilesPerTrigger` when it is lower, and never lowers it. Each
+    * batch lists its exact file paths again in `getBatch`; above the
+    * threshold (Spark's default is 32) that listing runs as a Spark job of
+    * one task per file, a second job in every trigger besides the sink
+    * write. At or under the threshold the driver stats the paths itself,
+    * which on a local or NFS filesystem is faster. The setting applies to
+    * the whole session: a batch read in it over more paths than the old
+    * threshold, up to `maxFilesPerTrigger`, also lists on the driver.
     */
   def fileSource(
       spark: SparkSession, dir: String,
       archiveDir: Option[String] = None,
       maxFilesPerTrigger: Int = 100): DataFrame = {
+    val listingThreshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    if (spark.conf.get(listingThreshold).toInt < maxFilesPerTrigger)
+      spark.conf.set(listingThreshold, maxFilesPerTrigger.toLong)
     val base = spark.readStream
       .option("maxFilesPerTrigger", maxFilesPerTrigger) // backpressure (impl.go:121 blocking send)
     val withClean = archiveDir match {

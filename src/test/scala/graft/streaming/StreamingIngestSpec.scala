@@ -1,11 +1,15 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.config.GraftConfig
+import graft.pipeline.Ingest
 
 /** Streaming pipeline tests: MemoryStream → parse → memory sink (SURVEY §5
   * port test plan item 4).
@@ -92,6 +96,59 @@ class StreamingIngestSpec extends AnyFunSuite {
     assert(written.count() == 2)
     assert(written.columns.contains("insert_month"))
     assert(written.select("insert_month").distinct().as[String].collect().head == "202207")
+  }
+
+  test("file source lists a batch of more than 32 files on the driver: no per-file listing job") {
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val saved = spark.conf.get(key)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_listing").toString
+    val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val cp = s"$tmp/cp"
+    new java.io.File(inDir).mkdirs()
+    (0 until 40).foreach { i =>
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(f"$inDir/access-$i%02d.log"),
+        s"10.0.0.$i - - [21/Jul/2022:00:30:43 +0000] \"GET /f$i HTTP/1.1\" 200 ${i * 10} 0.05\n" +
+          s"$badLine\n$badCast\n")
+    }
+    // read before the stream: cleanSource deletes the inputs once consumed
+    val expected = Ingest.parse(spark.read.text(inDir), cfg)
+    val want = expected.collect().map(_.toString).sorted.toSeq
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(descriptions.add)
+    }
+    spark.conf.set(key, "32") // Spark's default
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val lines = StreamingIngest.fileSource(spark, inDir, maxFilesPerTrigger = 100)
+      val q = StreamingIngest.parquetSink(StreamingIngest.parse(lines, cfg), outDir, cp).start()
+      try q.processAllAvailable() finally q.stop()
+      // listener events arrive in order: once this job's start is seen,
+      // every job of the stream has been seen too
+      spark.sparkContext.setJobDescription("listing-spec-marker")
+      try spark.sparkContext.parallelize(Seq(1)).count()
+      finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!descriptions.contains("listing-spec-marker") &&
+        System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(descriptions.contains("listing-spec-marker"))
+      val listing = descriptions.asScala.filter(_.startsWith("Listing leaf files"))
+      assert(listing.isEmpty, listing.mkString("; "))
+
+      val got = spark.read.parquet(outDir).select(expected.columns.map(col).toSeq: _*)
+      assert(want.size == 40)
+      assert(got.collect().map(_.toString).sorted.toSeq == want)
+
+      // raised to maxFilesPerTrigger, and never lowered
+      assert(spark.conf.get(key) == "100")
+      spark.conf.set(key, "1000")
+      StreamingIngest.fileSource(spark, inDir, maxFilesPerTrigger = 100)
+      assert(spark.conf.get(key) == "1000")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.set(key, saved)
+    }
   }
 
   test("jdbc sink end-to-end against embedded Derby (K1 parity: batch insert + retry loop)") {
