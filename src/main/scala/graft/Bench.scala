@@ -205,7 +205,6 @@ object Bench {
     // does; production deployments tune trigger intervals so the fixed
     // cost amortizes toward this bound.
     val (streamLps, streamLpsProc): (Double, Double) = try {
-      import org.apache.spark.sql.functions.col
       val tmp = java.nio.file.Files.createTempDirectory("graft_bench_stream")
       val inDir = s"$tmp/in"; val cp = s"$tmp/cp"; val outDir = s"$tmp/out"
       val cfg = graft.queries.DataOps.ingestConfig

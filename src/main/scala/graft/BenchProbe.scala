@@ -102,7 +102,7 @@ package graft
   * 6.48 s read was JVM-age, the documented noise-band signature.
   * Ratios all in band (p02 2.18×, p05 1.48×, t15 1.46×, p03 1.10×,
   * p01 1.02×). The one candidate mechanism — [[plans.DedupProjectParse]]
-  * walking every Project — was A/B'd with SPARK_GRAFT_NO_PARSE_CSE=1:
+  * walking every Project — was A/B'd against a session without the rule:
   * no directional effect (p02/p03 ran FASTER with the rule installed,
   * p01/t15/p05 slower, every delta within the ±25% same-day noise the
   * r14 protocol measured) — the rule is ruled OUT; cluster retired as

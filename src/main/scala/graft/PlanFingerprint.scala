@@ -51,8 +51,8 @@ object PlanFingerprint {
     // merges the Tables.load ts-normalization cast into the
     // grouping-expression Project; for every later query it stays a
     // separate (no-op) Project node. Reproduced minimally: a preceding
-    // `SELECT 1` flips it; SPARK_GRAFT_NO_PARSE_CSE=1 does NOT (our
-    // optimizer rule is ruled out) — a Spark-internal first-use
+    // `SELECT 1` flips it; dropping the DedupProjectParse rule does NOT
+    // (our optimizer rule is ruled out) — a Spark-internal first-use
     // lazy-init artifact, structurally benign (node histograms differ
     // by exactly one pass-through Project). The r17 artifact happened
     // to capture the first-query shape, r18's the steady-state one.

@@ -20,20 +20,23 @@ import graft.streaming.StreamingIngest
   *   --sink parquet --output /warehouse/access_log \
   *   [--checkpoint /chk] [--trigger-ms 2000] [--batch-size 5000] \
   *   [--master local[*]]
+  * IngestApp --config cfg.yaml --mode stream --source syslog \
+  *   --listeners tcp,udp,unix [--host localhost] --tcp-port 5140 \
+  *   [--bind 0.0.0.0] --udp-port 5141 --socket-path /run/graft-syslog.sock \
+  *   --sink parquet --output /warehouse/access_log
   * }}}
   *
   * Sources: `file` (S1/S2 rotating-scan parity via cleanSource/archive),
-  * `socket` (S4 dev syslog; RFC3164 envelope stripped), `syslog-tcp` /
-  * `syslog-udp` / `syslog-unix` (S4 native), `syslog` (the reference
-  * server's multi-listener mode: `--listeners tcp,udp,unix` unioned into
-  * one pipeline; `--tcp-port`/`--udp-port`/`--socket-path`), `kafka` (S5
-  * stock connector;
-  * `--brokers`, `--topic`), `kafka-lite` (S5 native wire, magic-2 to
-  * 4.x brokers or magic-0 legacy — no Kafka jars needed; `--brokers`,
-  * `--topic`, `--starting-offsets`, `--max-offsets`, `--dialect`,
-  * `--sasl-user`/`--sasl-password`/`--sasl-mechanism` for SASL PLAIN or
-  * SCRAM-SHA-256), `filebuf` (S6 native
-  * gRPC stream server; `--port`).
+  * `syslog` (S4: the reference server's listeners, any subset of
+  * `--listeners tcp,udp,unix`, default `tcp`, into one source; the TCP
+  * listener dials `--host`:`--tcp-port`, UDP binds `--bind`:`--udp-port`,
+  * UNIX binds `--socket-path`; RFC3164 envelope stripped), `kafka` (S5
+  * stock connector; `--brokers`, `--topic`), `kafka-lite` (S5 native
+  * wire, magic-2 to 4.x brokers or magic-0 legacy — no Kafka jars needed;
+  * `--brokers`, `--topic`, `--starting-offsets`, `--max-offsets`,
+  * `--dialect`, `--sasl-user`/`--sasl-password`/`--sasl-mechanism` for
+  * SASL PLAIN or SCRAM-SHA-256), `filebuf` (S6 native gRPC stream server;
+  * `--port`, `--bind`).
   * Sinks: `parquet` (K4 parity: insert_date + month partitioning), `jdbc`
   * (K1 parity: batched, retried — `--url`, `--table`), `filebuf` (K3 gRPC
   * relay to a remote FileBuf server; `--sink-port`), `kafka-lite` (K2
@@ -42,7 +45,8 @@ import graft.streaming.StreamingIngest
   * `console` (dev). `--mode batch` reads `--input` as a static
   * text directory and writes once — same pipeline, bounded input.
   * `--dead-letter` persists rejected raw lines (delivers the reference's
-  * README.md:30 TODO).
+  * README.md:30 TODO); in stream mode it runs a second query, so the
+  * listener sources (`syslog`, `filebuf`) reject it.
   */
 object IngestApp {
 
@@ -76,7 +80,8 @@ object IngestApp {
         opts.get("dead-letter").foreach(p => bad.write.mode("append").text(p))
         opts.getOrElse("sink", "parquet") match {
           case "parquet" =>
-            Ingest.withInsertDate(good).write.mode("append").parquet(need("output"))
+            Ingest.withTableLayout(good).write.mode("append")
+              .partitionBy(Ingest.PartitionColumn).parquet(need("output"))
           case "jdbc" =>
             good.write.format("jdbc").option("url", need("url"))
               .option("dbtable", need("table")).option("batchsize", batchSize)
@@ -86,40 +91,29 @@ object IngestApp {
         }
 
       case "stream" =>
-        val lines = opts.getOrElse("source", "file") match {
+        val source = opts.getOrElse("source", "file")
+        // the dead-letter query builds its own source: for a listener
+        // source that is a second listener on the same address
+        require(!(opts.contains("dead-letter") && Set("syslog", "filebuf")(source)),
+          s"--dead-letter is not supported with --source $source: " +
+            "a second query would open its listeners again")
+        val lines = source match {
           case "file" => StreamingIngest.fileSource(spark, need("input"),
             archiveDir = opts.get("archive-dir"))
-          case "socket" => StreamingIngest.stripSyslogEnvelope(
-            StreamingIngest.socketSource(spark,
-              opts.getOrElse("host", "localhost"), need("port").toInt))
-          case "syslog-tcp" => StreamingIngest.stripSyslogEnvelope(
-            StreamingIngest.syslogTcpSource(spark,
-              opts.getOrElse("host", "localhost"), need("port").toInt))
-          case "syslog-udp" => StreamingIngest.stripSyslogEnvelope(
-            StreamingIngest.syslogUdpSource(spark, need("port").toInt,
-              bind = opts.getOrElse("bind", "0.0.0.0")))
-          case "syslog-unix" => StreamingIngest.stripSyslogEnvelope(
-            StreamingIngest.syslogUnixSource(spark, need("socket-path")))
           // the reference syslog server's --listeners: any subset of
-          // tcp/udp/unix running SIMULTANEOUSLY into one pipeline
+          // tcp/udp/unix running SIMULTANEOUSLY into one source
           // (`internal/services/syslog/syslog.go:33-53` starts all
-          // configured listeners against one handler) — here a union of
-          // the native sources, one streaming plan
+          // configured listeners against one handler)
           case "syslog" =>
-            // .distinct: '--listeners tcp,tcp' would build two sources
-            // binding the same port and die at stream start with an opaque
-            // bind error; a repeated listener can only mean "that one, once"
-            val ls = opts.getOrElse("listeners", "tcp").split(',').map(_.trim).distinct
+            val ls = opts.getOrElse("listeners", "tcp").split(',').map(_.trim).toSet
             require(ls.nonEmpty && ls.forall(Set("tcp", "udp", "unix")),
               s"--listeners must be a comma list of tcp/udp/unix, got '${ls.mkString(",")}'")
-            val dfs = ls.toSeq.map {
-              case "tcp" => StreamingIngest.syslogTcpSource(spark,
-                opts.getOrElse("host", "localhost"), need("tcp-port").toInt)
-              case "udp" => StreamingIngest.syslogUdpSource(spark,
-                need("udp-port").toInt, bind = opts.getOrElse("bind", "0.0.0.0"))
-              case "unix" => StreamingIngest.syslogUnixSource(spark, need("socket-path"))
-            }
-            StreamingIngest.stripSyslogEnvelope(dfs.reduce(_ unionByName _))
+            StreamingIngest.stripSyslogEnvelope(StreamingIngest.syslogSource(spark,
+              tcp = Option.when(ls("tcp"))(
+                s"${opts.getOrElse("host", "localhost")}:${need("tcp-port")}"),
+              udp = Option.when(ls("udp"))(
+                s"${opts.getOrElse("bind", "0.0.0.0")}:${need("udp-port")}"),
+              unix = Option.when(ls("unix"))(need("socket-path"))))
           case "kafka" => StreamingIngest.kafkaSource(spark, need("brokers"), need("topic"))
           case "kafka-lite" => StreamingIngest.kafkaLiteSource(spark,
             need("brokers"), need("topic"),

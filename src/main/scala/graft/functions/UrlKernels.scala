@@ -408,7 +408,7 @@ object UrlKernels {
     // host span: [se, first '/' or '?')
     var he = se
     while (he < len && { val c = b(s, he); c != '/' && c != '?' }) he += 1
-    var hostU = slice(s, se, he)
+    val hostU = slice(s, se, he)
     val host = hostU.toLowerCase
     // ":(80|443)$" — literal suffixes only
     val hb = host.numBytes

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -216,7 +216,6 @@ object Multimodal {
     * initialized once per partition here.
     */
   def extractFeatures(media: DataFrame, dim: Int = 8): DataFrame = {
-    val spark = media.sparkSession
     val outSchema = StructType(Seq(
       StructField("media_id", LongType, nullable = false),
       StructField("features", ArrayType(FloatType, containsNull = false), nullable = false)))

@@ -8,7 +8,7 @@ import graft.format.LogTemplate
 import graft.functions.{Casts, OptimizerFence, ParseLogLine, ParseLogTemplate}
 
 /** Batch/streaming-agnostic ingest transform: one `value: String` column in
-  * (as produced by `spark.read.text`, the Kafka source, or the socket
+  * (as produced by `spark.read.text`, the Kafka source, or the syslog
   * source), the typed target schema out.
   *
   * Logical plan shape (fused by whole-stage codegen into a single
@@ -98,4 +98,14 @@ object Ingest {
     */
   def withInsertDate(df: DataFrame, timeCol: String = "time_local"): DataFrame =
     df.withColumn("insert_date", to_date(col(timeCol)))
+
+  /** The parquet table layout, one for stream and batch writes:
+    * [[withInsertDate]] plus the yyyyMM [[PartitionColumn]]
+    * (month partitioning, `migrations/sample_test.sql:18`).
+    */
+  def withTableLayout(df: DataFrame, timeCol: String = "time_local"): DataFrame =
+    withInsertDate(df, timeCol)
+      .withColumn(PartitionColumn, date_format(col("insert_date"), "yyyyMM"))
+
+  val PartitionColumn = "insert_month"
 }

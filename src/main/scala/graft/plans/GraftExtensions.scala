@@ -1367,7 +1367,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     val KeyOk = "[A-Za-z0-9_]+".r
     // plan-time validated path steps: Left(key) / Right(zero-based index)
     def rawSteps(args: Seq[Expression], fn: String,
-        minSteps: Int = 1): Seq[Either[String, Long]] = {
+        minSteps: Int): Seq[Either[String, Long]] = {
       if (args.size < minSteps + 1) throw new IllegalArgumentException(
         s"$fn expects (json, key_or_index, ...) with at least " +
           s"$minSteps step(s)")
@@ -1408,10 +1408,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           case Left(k) => UTF8String.fromString("k:" + k)
           case Right(i) => UTF8String.fromString("i:" + i)
         }.toArray[Any]), ArrayType(StringType, containsNull = false))
-    def pathStr(e: Expression): String = e match {
-      case Literal(s: UTF8String, StringType) => s.toString
-      case other => throw new IllegalStateException(s"not a path: $other")
-    }
     def get(args: Seq[Expression], fn: String): Expression =
       UnresolvedFunction(Seq("get_json_object"),
         Seq(args.head, jsonPath(args, fn)), isDistinct = false)
@@ -2482,20 +2478,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     functions.foreach(ext.injectFunction)
-    if (!GraftExtensions.parseCseDisabled)
-      ext.injectOptimizerRule(_ => DedupProjectParse)
+    ext.injectOptimizerRule(_ => DedupProjectParse)
   }
 }
 
 object GraftExtensions {
-  /** Bench-adjudication switch (r16 verdict item 2): set
-    * SPARK_GRAFT_NO_PARSE_CSE=1 to run WITHOUT the [[DedupProjectParse]]
-    * rule — the A/B that rules the always-on optimizer pass in or out
-    * of a timing drift. Never set in production paths.
-    */
-  private[plans] def parseCseDisabled: Boolean =
-    sys.env.get("SPARK_GRAFT_NO_PARSE_CSE").contains("1")
-
   /** Runtime installation into an already-built session (extensions via
     * the builder only apply at session construction). The
     * [[DedupProjectParse]] optimizer rule rides the experimental hook
@@ -2508,7 +2495,7 @@ object GraftExtensions {
         .registerFunction(spark, id, inf, builder)
     }
     val cur = spark.experimental.extraOptimizations
-    if (!parseCseDisabled && !cur.contains(DedupProjectParse))
+    if (!cur.contains(DedupProjectParse))
       spark.experimental.extraOptimizations = cur :+ DedupProjectParse
   }
 }

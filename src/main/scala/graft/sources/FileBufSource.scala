@@ -8,13 +8,6 @@ import io.netty.channel.nio.NioEventLoopGroup
 import io.netty.channel.socket.SocketChannel
 import io.netty.channel.socket.nio.NioServerSocketChannel
 import io.netty.handler.codec.http2.{DefaultHttp2DataFrame, DefaultHttp2Headers, DefaultHttp2HeadersFrame, DefaultHttp2WindowUpdateFrame, Http2DataFrame, Http2FrameCodecBuilder, Http2HeadersFrame, Http2MultiplexHandler}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Native FileBuf gRPC streaming source (DataSource V2) — transport
   * parity for the reference's gRPC stream ingest (S6):
@@ -24,7 +17,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * `/root/reference/internal/services/filegrpc/server.go:80-91`).
   *
   * Usage: `spark.readStream.format("filebuf").option("port", p).load()`
-  * → one `value: String` column, same shape as the syslog trio, feeding
+  * → one `value: String` column, same shape as the syslog source, feeding
   * the shared [[graft.pipeline.Ingest]] pipeline. `option("port", 0)`
   * binds an ephemeral port (the bound address is logged; tests read it
   * via [[FileBufServer]] directly).
@@ -35,50 +28,16 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * concurrent client streams are supported (the reference client opens
   * `--parallelism` of them); each appends into the shared driver buffer.
   *
-  * Delivery: at-most-once, the same driver-buffer contract as the syslog
-  * sources ([[LineBufferMicroBatchStream]]); the reference's channel
+  * Delivery: at-most-once, the same driver buffer as the syslog source
+  * ([[LineBufferMicroBatchStream]]); the reference's channel
   * buffer is equally volatile. For at-least-once, front with Kafka.
   */
-class FileBufSourceProvider extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "filebuf"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    SyslogTcpSource.Schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new FileBufTable
-}
-
-private[sources] class FileBufTable extends Table with SupportsRead {
-  override def name(): String = "filebuf"
-  override def schema(): StructType = SyslogTcpSource.Schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with Scan {
-      private val host = Option(options.get("host")).getOrElse("0.0.0.0")
-      private val port = Option(options.get("port"))
-        .map(_.toInt).getOrElse(throw new IllegalArgumentException(
-          "filebuf source requires option 'port'"))
-      override def build(): Scan = this
-      override def readSchema(): StructType = SyslogTcpSource.Schema
-      override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-        new FileBufMicroBatchStream(host, port)
-    }
-}
-
-private[sources] class FileBufMicroBatchStream(host: String, port: Int)
-    extends LineBufferMicroBatchStream {
-
-  @volatile private var server: FileBufServer = _
-
-  override protected def startIngest(append: String => Unit): Unit = {
-    server = new FileBufServer(host, port, append)
-    server.start()
-  }
-
-  override protected def stopIngest(): Unit =
-    if (server != null) server.stop()
-}
+class FileBufSourceProvider extends LineBufferSourceProvider("filebuf", options => {
+  val host = Option(options.get("host")).getOrElse("0.0.0.0")
+  val port = Option(options.get("port")).map(_.toInt).getOrElse(
+    throw new IllegalArgumentException("filebuf source requires option 'port'"))
+  Seq(FileBufServer.listener(host, port))
+})
 
 /** Minimal gRPC server for the FileBuf service on netty HTTP/2: accepts
   * any number of concurrent `CreateDataStreamer` client streams, invokes
@@ -116,6 +75,14 @@ private[graft] class FileBufServer(host: String, port: Int, onLine: String => Un
   def stop(): Unit = {
     if (channel != null) { try channel.close().sync() catch { case _: Throwable => () } }
     if (group != null) group.shutdownGracefully(0, 1, java.util.concurrent.TimeUnit.SECONDS)
+  }
+}
+
+private[sources] object FileBufServer {
+  def listener(host: String, port: Int): LineBufferMicroBatchStream.Listener = append => {
+    val server = new FileBufServer(host, port, append)
+    server.start()
+    () => server.stop()
   }
 }
 

@@ -6,14 +6,20 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Shared machinery for driver-buffered line sources (syslog TCP/UDP):
-  * a transport thread appends lines, micro-batches are offset ranges over
-  * the absolute line index, committed prefixes are dropped from the
-  * buffer. Delivery is at-most-once (driver buffer is volatile) — exactly
+/** Driver-buffered line source (syslog, filebuf): listener threads append
+  * lines, micro-batches are offset ranges over the absolute line index,
+  * committed prefixes are dropped from the buffer. All listeners of one
+  * stream feed one buffer, so one server is one source with one offset
+  * space. Delivery is at-most-once (driver buffer is volatile) — exactly
   * the reference's syslog contract
   * (`/root/reference/README.md:545`; its channel buffer is equally
   * volatile). For at-least-once, front the stream with Kafka.
@@ -22,22 +28,32 @@ private[sources] case class LineOffset(index: Long) extends Offset {
   override def json(): String = index.toString
 }
 
-private[sources] abstract class LineBufferMicroBatchStream extends MicroBatchStream {
+object LineBufferMicroBatchStream {
+  /** One `value: String` column, the shape of the text/kafka sources. */
+  val Schema: StructType = StructType(Seq(StructField("value", StringType)))
+
+  /** Starts a transport that calls `append` once per received line;
+    * closing the result tears the transport down.
+    */
+  type Listener = (String => Unit) => AutoCloseable
+}
+
+private[sources] class LineBufferMicroBatchStream(
+    listeners: Seq[LineBufferMicroBatchStream.Listener]) extends MicroBatchStream {
 
   private val lock = new Object
   private var baseIndex = 0L
   private val buffer = ArrayBuffer.empty[String]
   private val started = new AtomicBoolean(false)
+  @volatile private var running = List.empty[AutoCloseable]
 
-  /** Start the transport; call `append` once per received line. */
-  protected def startIngest(append: String => Unit): Unit
-
-  /** Tear the transport down (idempotent). */
-  protected def stopIngest(): Unit
-
+  // listeners start one by one, so a failing one leaves the earlier ones
+  // in `running` for stop() to close
   private def ensureStarted(): Unit =
-    if (started.compareAndSet(false, true))
-      startIngest(line => lock.synchronized { buffer += line })
+    if (started.compareAndSet(false, true)) {
+      val append: String => Unit = line => lock.synchronized { buffer += line }
+      listeners.foreach(l => running ::= l(append))
+    }
 
   override def initialOffset(): Offset = LineOffset(0L)
 
@@ -72,7 +88,36 @@ private[sources] abstract class LineBufferMicroBatchStream extends MicroBatchStr
     }
   }
 
-  override def stop(): Unit = stopIngest()
+  override def stop(): Unit =
+    running.foreach(c => try c.close() catch { case _: Throwable => () })
+}
+
+/** A DSv2 format over [[LineBufferMicroBatchStream]]: `listeners` reads the
+  * query's options when it starts and throws on a missing or bad one.
+  */
+private[sources] abstract class LineBufferSourceProvider(
+    format: String,
+    listeners: CaseInsensitiveStringMap => Seq[LineBufferMicroBatchStream.Listener])
+    extends TableProvider with DataSourceRegister {
+  override def shortName(): String = format
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    LineBufferMicroBatchStream.Schema
+  override def getTable(schema: StructType, partitioning: Array[Transform],
+      properties: java.util.Map[String, String]): Table =
+    new Table with SupportsRead {
+      override def name(): String = format
+      override def schema(): StructType = LineBufferMicroBatchStream.Schema
+      override def capabilities(): java.util.Set[TableCapability] =
+        java.util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
+      override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+        new ScanBuilder with Scan {
+          private val ls = listeners(options)
+          override def build(): Scan = this
+          override def readSchema(): StructType = LineBufferMicroBatchStream.Schema
+          override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
+            new LineBufferMicroBatchStream(ls)
+        }
+    }
 }
 
 private[sources] case class LineSlicePartition(lines: Array[String])

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
-import graft.config.GraftConfig
 import graft.pipeline.Ingest
 
 /** Streaming flavor of the ingest pipeline: sources (SURVEY §2.1), the
@@ -201,38 +200,22 @@ object StreamingIngest {
       }
   }
 
-  /** S4 (dev): socket source standing in for the syslog listener; prod is
-    * an rsyslog→Kafka sidecar (SURVEY §2.1 S4 recommendation) or the
-    * native [[syslogTcpSource]].
+  /** S4 (native): the engine's own syslog DataSource V2
+    * ([[graft.sources.SyslogSourceProvider]]) — the reference's syslog
+    * server as one source: every given listener feeds one driver buffer,
+    * at-most-once like the reference. `tcp` is `host:port` of an emitter
+    * to dial, `udp` is `bind:port` of a datagram listener, `unix` is the
+    * path of an AF_UNIX stream listener; give at least one.
     */
-  def socketSource(spark: SparkSession, host: String, port: Int): DataFrame =
-    spark.readStream.format("socket")
-      .option("host", host).option("port", port).load()
+  def syslogSource(spark: SparkSession, tcp: Option[String] = None,
+      udp: Option[String] = None, unix: Option[String] = None): DataFrame =
+    spark.readStream.format("syslog")
+      .options(Map("tcp" -> tcp, "udp" -> udp, "unix" -> unix).collect { case (k, Some(v)) => k -> v })
+      .load()
 
-  /** S4 (native): the engine's own syslog-over-TCP DataSource V2
-    * ([[graft.sources.SyslogTcpSourceProvider]]) — direct transport parity
-    * with the reference's TCP listener, same at-most-once contract.
-    */
+  /** [[syslogSource]] with one TCP listener dialing `host:port`. */
   def syslogTcpSource(spark: SparkSession, host: String, port: Int): DataFrame =
-    spark.readStream.format("syslog-tcp")
-      .option("host", host).option("port", port).load()
-
-  /** S4 (native, UDP leg): binds a local datagram listener
-    * ([[graft.sources.SyslogUdpSourceProvider]]); one datagram = one
-    * record, fire-and-forget — the reference documents the same
-    * no-delivery-guarantee for UDP syslog (`README.md:545`).
-    */
-  def syslogUdpSource(spark: SparkSession, port: Int, bind: String = "0.0.0.0"): DataFrame =
-    spark.readStream.format("syslog-udp")
-      .option("bind", bind).option("port", port).load()
-
-  /** S4 (native, UNIX leg): binds an AF_UNIX stream listener at `path`
-    * ([[graft.sources.SyslogUnixSourceProvider]]); newline-delimited
-    * messages from local emitters, the JDK-expressible counterpart of the
-    * reference's unixgram listener.
-    */
-  def syslogUnixSource(spark: SparkSession, path: String): DataFrame =
-    spark.readStream.format("syslog-unix").option("path", path).load()
+    syslogSource(spark, tcp = Some(s"$host:$port"))
 
   /** S6 (native): the engine's own FileBuf gRPC DataSource V2
     * ([[graft.sources.FileBufSourceProvider]]) — direct transport parity
@@ -280,27 +263,20 @@ object StreamingIngest {
       "^<\\d{1,3}>[A-Z][a-z]{2} [ \\d]\\d \\d\\d:\\d\\d:\\d\\d \\S+ [^:]*: (.*)$", 1)
       .as("value"))
 
-  /** The shared transform: identical Column pipeline for batch and
-    * streaming (unbounded-table model).
-    */
-  def parse(lines: DataFrame, cfg: GraftConfig): DataFrame =
-    Ingest.parse(lines, cfg)
-
-  /** K4-parity parquet table sink: derived `insert_date`, month
-    * partitioning (`migrations/sample_test.sql:13,18`), trigger =
-    * flush-interval parity (default 2000 ms, `cmd/filelog/main.go:82-88`).
+  /** K4-parity parquet table sink: [[Ingest.withTableLayout]] (derived
+    * `insert_date`, month partitioning), trigger = flush-interval parity
+    * (default 2000 ms, `cmd/filelog/main.go:82-88`).
     */
   def parquetSink(
       parsed: DataFrame, path: String, checkpoint: String,
       timeCol: String = "time_local",
       flushIntervalMs: Long = 2000L): DataStreamWriter[org.apache.spark.sql.Row] =
-    Ingest.withInsertDate(parsed, timeCol)
-      .withColumn("insert_month", date_format(col("insert_date"), "yyyyMM"))
+    Ingest.withTableLayout(parsed, timeCol)
       .writeStream
       .format("parquet")
       .option("path", path)
       .option("checkpointLocation", checkpoint)
-      .partitionBy("insert_month")
+      .partitionBy(Ingest.PartitionColumn)
       .trigger(Trigger.ProcessingTime(flushIntervalMs))
 
   /** K1: buffered JDBC (ClickHouse) sink via foreachBatch — batchsize =
@@ -330,7 +306,7 @@ object StreamingIngest {
               .save()
             done = true
           } catch {
-            case e: Throwable if attempt < maxRetries =>
+            case _: Throwable if attempt < maxRetries =>
               attempt += 1
               Thread.sleep(500L * attempt) // linear backoff like clickhouse-buffer retry
             case e: Throwable => throw e

@@ -42,8 +42,38 @@ class IngestAppSpec extends AnyFunSuite {
     assert(out.count() == 2)
     assert(out.columns.contains("insert_date"))
     assert(out.where(out("status") === 404).count() == 1)
+    // the stream parquet sink's layout: month partitions of insert_date
+    assert(Files.isDirectory(Paths.get(s"$tmp/out/insert_month=202207")))
     val dead = spark.read.text(s"$tmp/dead").collect().map(_.getString(0))
     assert(dead.toSeq == Seq("garbage line"))
+  }
+
+  test("stream mode: --dead-letter with a listener source fails fast, no query started") {
+    val tmp = Files.createTempDirectory("graft_cli_dl").toString
+    Files.writeString(Paths.get(s"$tmp/cfg.yaml"),
+      """nginx:
+        |  log_format: '$remote_addr - $remote_user [$time_local] "$request" $status $bytes_sent'
+        |  log_time_format: 02/Jan/2006:15:04:05 -0700
+        |scheme:
+        |  logs_table: access_log
+        |  columns:
+        |    remote_addr: remote_addr
+        |    time_local: time_local
+        |    status: status
+        |    bytes_sent: bytes_sent
+        |""".stripMargin)
+    val udpPort = {
+      val s = new java.net.DatagramSocket(0)
+      try s.getLocalPort finally s.close()
+    }
+    val before = spark.streams.active.map(_.id).toSet
+    val e = intercept[IllegalArgumentException](IngestApp.main(Array(
+      "--config", s"$tmp/cfg.yaml", "--mode", "stream",
+      "--source", "syslog", "--listeners", "udp", "--bind", "127.0.0.1",
+      "--udp-port", udpPort.toString, "--dead-letter", s"$tmp/dead",
+      "--sink", "parquet", "--output", s"$tmp/out", "--checkpoint", s"$tmp/cp")))
+    assert(e.getMessage.contains("--dead-letter"))
+    assert(spark.streams.active.map(_.id).toSet == before)
   }
 
   test("stream mode: kafka-lite source → parquet, end-to-end through the CLI") {

@@ -8,6 +8,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.pipeline.Ingest
 import graft.streaming.StreamingIngest
 
 /** FileBuf gRPC transport (S6 source / K3 sink): wire-format units plus
@@ -89,7 +90,7 @@ class FileBufSpec extends AnyFunSuite {
         "status", "bytes_sent", "request_time").map(c => c -> c).toMap,
       logsTable = "access_log")
     val lines = StreamingIngest.filebufSource(spark, port, bind = "127.0.0.1")
-    val parsed = StreamingIngest.parse(lines, cfg)
+    val parsed = Ingest.parse(lines, cfg)
     val q = parsed.writeStream.format("memory")
       .queryName("filebuf_test").outputMode("append").start()
     try {

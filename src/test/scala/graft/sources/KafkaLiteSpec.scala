@@ -4,6 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.pipeline.Ingest
 import graft.streaming.StreamingIngest
 
 /** Kafka transport (S5 source / K2 sink) over the hand-rolled v0 wire:
@@ -106,7 +107,7 @@ class KafkaLiteSpec extends AnyFunSuite {
     broker.append("logs", 0, Seq(goodLine, "complete garbage"))
     broker.append("logs", 1, Seq(goodLine))
     val lines = StreamingIngest.kafkaLiteSource(spark, s"127.0.0.1:$port", "logs")
-    val parsed = StreamingIngest.parse(lines, cfg)
+    val parsed = Ingest.parse(lines, cfg)
     val q = parsed.writeStream.format("memory")
       .queryName("kafka_lite_test").outputMode("append").start()
     try {

@@ -33,7 +33,7 @@ class StreamingIngestSpec extends AnyFunSuite {
   test("memory stream → parse → memory sink: drops malformed, types good rows") {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[String]
-    val parsed = StreamingIngest.parse(stream.toDF().toDF("value"), cfg)
+    val parsed = Ingest.parse(stream.toDF().toDF("value"), cfg)
     val q = parsed.writeStream.format("memory")
       .queryName("ingest_test").outputMode("append").start()
     try {
@@ -89,7 +89,7 @@ class StreamingIngestSpec extends AnyFunSuite {
       java.nio.file.Paths.get(s"$inDir/access.log"),
       s"$goodLine\n$badLine\n$goodLine\n")
     val lines = StreamingIngest.fileSource(spark, inDir, archiveDir = Some(s"$tmp/archive"))
-    val parsed = StreamingIngest.parse(lines, cfg)
+    val parsed = Ingest.parse(lines, cfg)
     val q = StreamingIngest.parquetSink(parsed, outDir, cp).start()
     try q.processAllAvailable() finally q.stop()
     val written = spark.read.parquet(outDir)
@@ -122,7 +122,7 @@ class StreamingIngestSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     try {
       val lines = StreamingIngest.fileSource(spark, inDir, maxFilesPerTrigger = 100)
-      val q = StreamingIngest.parquetSink(StreamingIngest.parse(lines, cfg), outDir, cp).start()
+      val q = StreamingIngest.parquetSink(Ingest.parse(lines, cfg), outDir, cp).start()
       try q.processAllAvailable() finally q.stop()
       // listener events arrive in order: once this job's start is seen,
       // every job of the stream has been seen too
@@ -155,7 +155,7 @@ class StreamingIngestSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val url = "jdbc:derby:memory:graftk1;create=true"
     val stream = MemoryStream[String]
-    val parsed = StreamingIngest.parse(stream.toDF().toDF("value"), cfg)
+    val parsed = Ingest.parse(stream.toDF().toDF("value"), cfg)
     val cp = java.nio.file.Files.createTempDirectory("graft_jdbc_cp").toString
     val q = StreamingIngest.jdbcSink(parsed, url, "access_log", cp,
       batchSize = 2, flushIntervalMs = 100).start()
@@ -178,7 +178,7 @@ class StreamingIngestSpec extends AnyFunSuite {
     val plainUrl = "jdbc:derby:memory:graftk1retry"
     val createUrl = "jdbc:derby:memory:graftk1retry;create=true"
     val stream = MemoryStream[String]
-    val parsed = StreamingIngest.parse(stream.toDF().toDF("value"), cfg)
+    val parsed = Ingest.parse(stream.toDF().toDF("value"), cfg)
     val cp = java.nio.file.Files.createTempDirectory("graft_jdbc_retry_cp").toString
 
     // phase 1: no retries → the micro-batch fails and kills the query,
@@ -231,8 +231,8 @@ class StreamingIngestSpec extends AnyFunSuite {
     writer.setDaemon(true)
     writer.start()
 
-    val lines = StreamingIngest.syslogTcpSource(spark, "localhost", port)
-    val parsed = StreamingIngest.parse(StreamingIngest.stripSyslogEnvelope(lines), cfg)
+    val lines = StreamingIngest.syslogSource(spark, tcp = Some(s"localhost:$port"))
+    val parsed = Ingest.parse(StreamingIngest.stripSyslogEnvelope(lines), cfg)
     val q = parsed.writeStream.format("memory")
       .queryName("syslog_tcp_test").outputMode("append").start()
     try {
@@ -261,8 +261,8 @@ class StreamingIngestSpec extends AnyFunSuite {
     val port = probe.getLocalPort
     probe.close() // freed for the source to bind (loopback test; tiny race is fine)
 
-    val lines = StreamingIngest.syslogUdpSource(spark, port, bind = "127.0.0.1")
-    val parsed = StreamingIngest.parse(StreamingIngest.stripSyslogEnvelope(lines), cfg)
+    val lines = StreamingIngest.syslogSource(spark, udp = Some(s"127.0.0.1:$port"))
+    val parsed = Ingest.parse(StreamingIngest.stripSyslogEnvelope(lines), cfg)
     val q = parsed.writeStream.format("memory")
       .queryName("syslog_udp_test").outputMode("append").start()
     val sender = new java.net.DatagramSocket()
@@ -297,8 +297,8 @@ class StreamingIngestSpec extends AnyFunSuite {
 
   test("multi-listener syslog: tcp + udp unioned into ONE pipeline (server parity)") {
     // the reference syslog server runs all configured listeners against a
-    // single handler (`syslog.go:33-53`); here the same shape is the union
-    // of two native DSv2 sources inside one streaming query
+    // single handler (`syslog.go:33-53`); here both listeners feed the one
+    // buffer of one syslog source
     val server = new java.net.ServerSocket(0)
     val tcpPort = server.getLocalPort
     val probe = new java.net.DatagramSocket(0)
@@ -316,9 +316,9 @@ class StreamingIngestSpec extends AnyFunSuite {
     tcpWriter.setDaemon(true)
     tcpWriter.start()
 
-    val unioned = StreamingIngest.syslogTcpSource(spark, "localhost", tcpPort)
-      .unionByName(StreamingIngest.syslogUdpSource(spark, udpPort, bind = "127.0.0.1"))
-    val parsed = StreamingIngest.parse(StreamingIngest.stripSyslogEnvelope(unioned), cfg)
+    val lines = StreamingIngest.syslogSource(spark,
+      tcp = Some(s"localhost:$tcpPort"), udp = Some(s"127.0.0.1:$udpPort"))
+    val parsed = Ingest.parse(StreamingIngest.stripSyslogEnvelope(lines), cfg)
     val q = parsed.writeStream.format("memory")
       .queryName("syslog_multi_test").outputMode("append").start()
     val sender = new java.net.DatagramSocket()
@@ -334,10 +334,11 @@ class StreamingIngestSpec extends AnyFunSuite {
         n = spark.table("syslog_multi_test").count()
         if (n < 2) Thread.sleep(200)
       }
-      // one line over each transport, both through the one pipeline
+      // one line over each transport, both through the one source
       assert(n >= 2)
       assert(spark.table("syslog_multi_test")
         .where(col("status") === 200).count() == n)
+      assert(q.lastProgress.sources.length == 1)
     } finally {
       q.stop()
       sender.close()
@@ -347,8 +348,8 @@ class StreamingIngestSpec extends AnyFunSuite {
 
   test("native syslog-unix DSv2 source end-to-end (S4 UNIX transport parity)") {
     val path = java.nio.file.Files.createTempDirectory("graft_unixsock").toString + "/syslog.sock"
-    val lines = StreamingIngest.syslogUnixSource(spark, path)
-    val parsed = StreamingIngest.parse(StreamingIngest.stripSyslogEnvelope(lines), cfg)
+    val lines = StreamingIngest.syslogSource(spark, unix = Some(path))
+    val parsed = Ingest.parse(StreamingIngest.stripSyslogEnvelope(lines), cfg)
     val q = parsed.writeStream.format("memory")
       .queryName("syslog_unix_test").outputMode("append").start()
     try {
@@ -377,6 +378,18 @@ class StreamingIngestSpec extends AnyFunSuite {
       val r = spark.table("syslog_unix_test").collect().head
       assert(r.getAs[Int]("status") == 200)
       assert(r.getAs[Long]("bytes_sent") == 512L)
+    } finally q.stop()
+  }
+
+  test("syslog source with no listener option fails at query start, naming tcp, udp and unix") {
+    val q = spark.readStream.format("syslog").load()
+      .writeStream.format("memory").queryName("syslog_none_test").start()
+    try {
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        q.awaitTermination(30000))
+      val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+      Seq("'tcp'", "'udp'", "'unix'").foreach(o => assert(msg.contains(o), msg))
     } finally q.stop()
   }
 
