@@ -32,11 +32,11 @@ import graft.streaming.StreamingIngest
   * listener dials `--host`:`--tcp-port`, UDP binds `--bind`:`--udp-port`,
   * UNIX binds `--socket-path`; RFC3164 envelope stripped), `kafka` (S5
   * stock connector; `--brokers`, `--topic`), `kafka-lite` (S5 native
-  * wire, magic-2 to 4.x brokers or magic-0 legacy — no Kafka jars needed;
+  * wire, magic-2 batches to 0.11 → 4.x brokers — no Kafka jars needed;
   * `--brokers`, `--topic`, `--starting-offsets`, `--max-offsets`,
-  * `--dialect`, `--sasl-user`/`--sasl-password`/`--sasl-mechanism` for
-  * SASL PLAIN or SCRAM-SHA-256), `filebuf` (S6 native gRPC stream server;
-  * `--port`, `--bind`).
+  * `--sasl-user`/`--sasl-password`/`--sasl-mechanism` for SASL PLAIN or
+  * SCRAM-SHA-256), `filebuf` (S6 native gRPC stream server; `--port`,
+  * `--bind`).
   * Sinks: `parquet` (K4 parity: insert_date + month partitioning), `jdbc`
   * (K1 parity: batched, retried — `--url`, `--table`), `filebuf` (K3 gRPC
   * relay to a remote FileBuf server; `--sink-port`), `kafka-lite` (K2
@@ -45,15 +45,39 @@ import graft.streaming.StreamingIngest
   * `console` (dev). `--mode batch` reads `--input` as a static
   * text directory and writes once — same pipeline, bounded input.
   * `--dead-letter` persists rejected raw lines (delivers the reference's
-  * README.md:30 TODO); in stream mode it runs a second query, so the
-  * listener sources (`syslog`, `filebuf`) reject it.
+  * README.md:30 TODO); in stream mode it runs a second query over its own
+  * copy of the source, so `file` (a second cleanSource over the same
+  * directory), `syslog` and `filebuf` (second listeners) reject it.
+  *
+  * Every argument is a `--flag value` pair; an unknown flag or a flag
+  * without a value fails with an `IllegalArgumentException` naming it.
   */
 object IngestApp {
 
+  /** Every flag [[main]] reads. */
+  private val Flags = Set("config", "mode", "master", "source", "sink",
+    "input", "output", "checkpoint", "trigger-ms", "batch-size", "dead-letter",
+    "archive-dir", "backup-files", "backup-max-age-ms", "live-port",
+    "listeners", "host", "tcp-port", "bind", "udp-port", "socket-path", "port",
+    "brokers", "topic", "starting-offsets", "max-offsets",
+    "sasl-user", "sasl-password", "sasl-mechanism",
+    "url", "table", "sink-port", "sink-topic", "compress")
+
+  private def parseFlags(args: Array[String]): Map[String, String] = {
+    val it = args.iterator.buffered
+    val opts = Map.newBuilder[String, String]
+    while (it.hasNext) {
+      val k = it.next()
+      require(k.startsWith("--"), s"expected a --flag, got '$k'")
+      require(Flags(k.stripPrefix("--")), s"unknown flag $k")
+      require(it.hasNext && !it.head.startsWith("--"), s"flag $k has no value")
+      opts += k.stripPrefix("--") -> it.next()
+    }
+    opts.result()
+  }
+
   def main(args: Array[String]): Unit = {
-    val opts = args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.stripPrefix("--") -> v
-    }.toMap
+    val opts = parseFlags(args)
     def need(k: String): String =
       opts.getOrElse(k, sys.error(s"missing required flag --$k"))
 
@@ -93,10 +117,12 @@ object IngestApp {
       case "stream" =>
         val source = opts.getOrElse("source", "file")
         // the dead-letter query builds its own source: for a listener
-        // source that is a second listener on the same address
-        require(!(opts.contains("dead-letter") && Set("syslog", "filebuf")(source)),
+        // source that is a second listener on the same address, for the
+        // file source a second cleanSource archiving or deleting files
+        // the other query has yet to read
+        require(!(opts.contains("dead-letter") && Set("file", "syslog", "filebuf")(source)),
           s"--dead-letter is not supported with --source $source: " +
-            "a second query would open its listeners again")
+            "a second query would read the source again")
         val lines = source match {
           case "file" => StreamingIngest.fileSource(spark, need("input"),
             archiveDir = opts.get("archive-dir"))
@@ -119,7 +145,6 @@ object IngestApp {
             need("brokers"), need("topic"),
             startingOffsets = opts.getOrElse("starting-offsets", "earliest"),
             maxOffsetsPerTrigger = opts.get("max-offsets").map(_.toLong),
-            dialect = opts.getOrElse("dialect", "modern"),
             saslUser = opts.get("sasl-user"),
             saslPass = opts.get("sasl-password"),
             saslMechanism = opts.getOrElse("sasl-mechanism", "PLAIN"))
@@ -153,13 +178,12 @@ object IngestApp {
             StreamingIngest.filebufSink(lines,
               opts.getOrElse("host", "localhost"), need("sink-port").toInt,
               checkpoint).trigger(Trigger.ProcessingTime(triggerMs))
-          // raw-line relay to a Kafka topic over the native v0 wire (K2;
+          // raw-line relay to a Kafka topic over the native wire (K2;
           // the reference kafkalog client's role) — like filebuf, relays
           // the raw source stream, not the parsed one
           case "kafka-lite" =>
             StreamingIngest.kafkaLiteSink(lines, need("brokers"),
               need("sink-topic"), checkpoint, produceBatch = batchSize,
-              dialect = opts.getOrElse("dialect", "modern"),
               produceCodec = opts.getOrElse("compress", "none"),
               saslUser = opts.get("sasl-user"),
               saslPass = opts.get("sasl-password"),

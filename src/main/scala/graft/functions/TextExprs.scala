@@ -206,7 +206,7 @@ object TextExprs {
   def scrubTokensRef(norm: Column, cut: Column): Column = {
     import org.apache.spark.sql.functions._
     array_join(filter(split(norm, " "),
-      (t, i) => !coalesce(array_contains(cut, i + 1),
+      (_, i) => !coalesce(array_contains(cut, i + 1),
         org.apache.spark.sql.functions.lit(false))), " ")
   }
 
@@ -274,7 +274,7 @@ object TextExprs {
     */
   def joinExceptRef(arr: Column, cut: Column, sep: String): Column = {
     import org.apache.spark.sql.functions._
-    array_join(filter(arr, (p, i) => !coalesce(array_contains(cut, i),
+    array_join(filter(arr, (_, i) => !coalesce(array_contains(cut, i),
       org.apache.spark.sql.functions.lit(false))), sep)
   }
 

@@ -10,11 +10,9 @@ import java.util.concurrent.atomic.AtomicInteger
   * `kafka-lite` source's driver (metadata + offsets) and executors
   * (fetch), and by [[StreamingIngest.kafkaLiteSink]] (produce).
   *
-  * `dialect` picks the wire generation ([[KafkaWire.Dialect]]): `modern`
-  * (default) = magic-2 batches over the post-KIP-896 version floor,
-  * speaking to every broker 0.11 → 4.x; `legacy` = magic-0 sets over the
-  * v0 APIs for pre-0.11 brokers. The API surface of this class is
-  * dialect-independent.
+  * Every request rides the one wire [[KafkaWire]] defines: magic-2
+  * record batches over Metadata v4, ListOffsets v1, Fetch v4 and
+  * Produce v3, which every broker from 0.11 through 4.x serves.
   *
   * The lockstep design is deliberate: the streaming source fetches
   * sequential offset ranges per partition, so pipelining buys nothing,
@@ -23,7 +21,7 @@ import java.util.concurrent.atomic.AtomicInteger
   * Connections are cheap to re-establish.
   *
   * `saslUser`/`saslPass` enable SASL (KIP-43 handshake v1 + KIP-152
-  * SaslAuthenticate) immediately after every (re)connect, before any
+  * SaslAuthenticate) immediately after connecting, before any
   * other API flows; a rejected mechanism or bad credential surfaces as a
   * named IOException carrying the broker's message. `saslMechanism`
   * picks `PLAIN` (RFC 4616, the TLS-wrapped deployment shape) or
@@ -35,13 +33,12 @@ import java.util.concurrent.atomic.AtomicInteger
 private[graft] class KafkaLiteClient(host: String, port: Int,
     clientId: String = "graft-kafka-lite", connectTimeoutMs: Int = 10000,
     readTimeoutMs: Int = 30000,
-    dialect: KafkaWire.Dialect = KafkaWire.Modern,
     saslUser: Option[String] = None,
     saslPass: Option[String] = None,
     saslMechanism: String = "PLAIN") extends AutoCloseable {
 
   // declared BEFORE connect() below: the constructor authenticates over
-  // the socket, so anything roundTripVersioned touches must already be
+  // the socket, so anything roundTrip touches must already be
   // initialized (a val after the connect() call reads as 0 during SASL)
   /** Max response size accepted — same OOM fence as
     * [[FileBufWire.MaxInboundMessageBytes]], sized for fetch batches.
@@ -61,12 +58,12 @@ private[graft] class KafkaLiteClient(host: String, port: Int,
     out = new DataOutputStream(new java.io.BufferedOutputStream(socket.getOutputStream, 64 * 1024))
     in = new DataInputStream(new java.io.BufferedInputStream(socket.getInputStream, 64 * 1024))
     saslUser.foreach { u =>
-      KafkaWire.decodeSaslHandshakeResponse(roundTripVersioned(
+      KafkaWire.decodeSaslHandshakeResponse(roundTrip(
         KafkaWire.ApiSaslHandshake, 1,
         KafkaWire.encodeSaslHandshakeRequest(saslMechanism)))
       saslMechanism match {
         case "PLAIN" =>
-          KafkaWire.decodeSaslAuthenticateResponse(roundTripVersioned(
+          KafkaWire.decodeSaslAuthenticateResponse(roundTrip(
             KafkaWire.ApiSaslAuthenticate, 0,
             KafkaWire.encodeSaslAuthenticateRequest(
               KafkaWire.saslPlainToken(u, saslPass.getOrElse("")))))
@@ -77,7 +74,7 @@ private[graft] class KafkaLiteClient(host: String, port: Int,
             .encodeToString(nonceBytes)
           val (first, bare) = KafkaWire.Scram.clientFirst(u, cnonce)
           val serverFirstMsg = new String(
-            KafkaWire.decodeSaslAuthenticateResponseBytes(roundTripVersioned(
+            KafkaWire.decodeSaslAuthenticateResponseBytes(roundTrip(
               KafkaWire.ApiSaslAuthenticate, 0,
               KafkaWire.encodeSaslAuthenticateRequest(
                 first.getBytes(java.nio.charset.StandardCharsets.UTF_8)))),
@@ -86,7 +83,7 @@ private[graft] class KafkaLiteClient(host: String, port: Int,
           val (finalMsg, expectedSig) = KafkaWire.Scram.clientFinal(
             saslPass.getOrElse(""), bare, serverFirstMsg, sf)
           val serverFinal = new String(
-            KafkaWire.decodeSaslAuthenticateResponseBytes(roundTripVersioned(
+            KafkaWire.decodeSaslAuthenticateResponseBytes(roundTrip(
               KafkaWire.ApiSaslAuthenticate, 0,
               KafkaWire.encodeSaslAuthenticateRequest(
                 finalMsg.getBytes(java.nio.charset.StandardCharsets.UTF_8)))),
@@ -99,38 +96,7 @@ private[graft] class KafkaLiteClient(host: String, port: Int,
   }
   connect()
 
-  /** The wire generation this connection actually speaks. `auto` resolves
-    * via ApiVersions (KIP-35) on first use: Modern when the broker serves
-    * the post-KIP-896 floor, else Legacy. A broker predating ApiVersions
-    * (< 0.10) drops the connection on the unknown api key — treated as
-    * Legacy after a reconnect (the socket is desynced either way).
-    */
-  lazy val resolvedDialect: KafkaWire.Dialect = dialect match {
-    case KafkaWire.Auto =>
-      try {
-        val ranges = KafkaWire.decodeApiVersionsResponse(roundTripVersioned(
-          KafkaWire.ApiApiVersions, 0, KafkaWire.encodeApiVersionsRequest()))
-        if (KafkaWire.supportsModern(ranges)) KafkaWire.Modern else KafkaWire.Legacy
-      } catch {
-        case _: java.io.IOException =>
-          try socket.close() catch { case _: Throwable => () }
-          connect()
-          KafkaWire.Legacy
-      }
-    case d => d
-  }
-
-  private def modern = resolvedDialect eq KafkaWire.Modern
-
-  private def versionOf(apiKey: Short): Short = apiKey match {
-    case KafkaWire.ApiProduce => resolvedDialect.produceV
-    case KafkaWire.ApiFetch => resolvedDialect.fetchV
-    case KafkaWire.ApiListOffsets => resolvedDialect.listOffsetsV
-    case KafkaWire.ApiMetadata => resolvedDialect.metadataV
-    case other => throw new IllegalArgumentException(s"unsupported api $other")
-  }
-
-  private def roundTripVersioned(apiKey: Short, apiVersion: Short,
+  private def roundTrip(apiKey: Short, apiVersion: Short,
       body: Array[Byte]): Array[Byte] = synchronized {
     val id = corr.incrementAndGet()
     out.write(KafkaWire.request(apiKey, apiVersion, id, clientId, body))
@@ -146,24 +112,14 @@ private[graft] class KafkaLiteClient(host: String, port: Int,
     java.util.Arrays.copyOfRange(payload, 4, size)
   }
 
-  private def roundTrip(apiKey: Short, body: Array[Byte]): Array[Byte] =
-    roundTripVersioned(apiKey, versionOf(apiKey), body)
+  def partitionsOf(topic: String): Seq[KafkaWire.PartitionMeta] =
+    KafkaWire.decodeMetadataResponse(roundTrip(KafkaWire.ApiMetadata,
+      KafkaWire.MetadataV4, KafkaWire.encodeMetadataRequest(Seq(topic))), topic)
 
-  def partitionsOf(topic: String): Seq[KafkaWire.PartitionMeta] = {
-    val resp = roundTrip(KafkaWire.ApiMetadata,
-      if (modern) KafkaWire.encodeMetadataRequestV4(Seq(topic))
-      else KafkaWire.encodeMetadataRequest(Seq(topic)))
-    if (modern) KafkaWire.decodeMetadataResponseV4(resp, topic)
-    else KafkaWire.decodeMetadataResponse(resp, topic)
-  }
-
-  private def listOffsets(topic: String, partition: Int, timestamp: Long): Long = {
-    val resp = roundTrip(KafkaWire.ApiListOffsets,
-      if (modern) KafkaWire.encodeListOffsetsRequestV1(topic, partition, timestamp)
-      else KafkaWire.encodeListOffsetsRequest(topic, partition, timestamp))
-    if (modern) KafkaWire.decodeListOffsetsResponseV1(resp)
-    else KafkaWire.decodeListOffsetsResponse(resp)
-  }
+  private def listOffsets(topic: String, partition: Int, timestamp: Long): Long =
+    KafkaWire.decodeListOffsetsResponse(roundTrip(KafkaWire.ApiListOffsets,
+      KafkaWire.ListOffsetsV1,
+      KafkaWire.encodeListOffsetsRequest(topic, partition, timestamp)))
 
   def earliestOffset(topic: String, partition: Int): Long =
     listOffsets(topic, partition, KafkaWire.EarliestTimestamp)
@@ -178,46 +134,35 @@ private[graft] class KafkaLiteClient(host: String, port: Int,
     */
   def fetch(topic: String, partition: Int, offset: Long,
       maxWaitMs: Int = 500, minBytes: Int = 1,
-      maxBytes: Int = 4 * 1024 * 1024): (Seq[KafkaWire.Record], Long) = {
-    val resp = roundTrip(KafkaWire.ApiFetch,
-      if (modern) KafkaWire.encodeFetchRequestV4(topic, partition, offset, maxWaitMs, minBytes, maxBytes)
-      else KafkaWire.encodeFetchRequest(topic, partition, offset, maxWaitMs, minBytes, maxBytes))
-    if (modern) KafkaWire.decodeFetchResponseV4(resp)
-    else KafkaWire.decodeFetchResponse(resp)
-  }
+      maxBytes: Int = 4 * 1024 * 1024): (Seq[KafkaWire.Record], Long) =
+    KafkaWire.decodeFetchResponse(roundTrip(KafkaWire.ApiFetch, KafkaWire.FetchV4,
+      KafkaWire.encodeFetchRequest(topic, partition, offset, maxWaitMs, minBytes, maxBytes)))
 
   /** Produce with acks=1 (leader ack — the reference producer's setting);
     * returns the base offset the broker assigned. Fails FAST on a record
     * bigger than the fetch-side contract ([[KafkaWire.MaxRecordBytes]]):
     * accepting it would wedge every future consumer of that offset, and
     * the producer is the only place the error is still cheap.
-    */
-  /** `codec` ([[KafkaWire.codecId]]: none/gzip/snappy/lz4/zstd) compresses
-    * the produced batch (modern dialect only — the legacy wrapper-message
-    * encode is deliberately out of scope; its brokers predate every
-    * cluster this would deploy to; note zstd additionally needs a broker
-    * accepting it on the negotiated produce version, KIP-110). The size
-    * fence checks the UNCOMPRESSED record: a fetched batch must fit the
-    * contract even if the log hands it back uncompressed or recompressed.
+    *
+    * `codec` ([[KafkaWire.codecId]]: none/gzip/snappy/lz4/zstd) compresses
+    * the produced batch (zstd additionally needs a broker of 2.1 or newer,
+    * KIP-110). The size fence checks the UNCOMPRESSED record: a fetched
+    * batch must fit the contract even if the log hands it back
+    * uncompressed or recompressed.
     */
   def produce(topic: String, partition: Int,
       records: Seq[(Array[Byte], Array[Byte])], timeoutMs: Int = 10000,
       codec: Int = KafkaWire.CodecNone): Long = {
-    require(codec == KafkaWire.CodecNone || modern,
-      "kafka-lite: compressed produce requires the modern dialect")
     records.foreach { case (k, v) =>
       val sz = (if (k == null) 0 else k.length) + (if (v == null) 0 else v.length) +
-        resolvedDialect.recordOverheadBytes
+        KafkaWire.RecordOverheadBytes
       require(sz <= KafkaWire.MaxRecordBytes,
         s"kafka-lite: record of $sz encoded bytes exceeds the " +
           s"${KafkaWire.MaxRecordBytes}-byte contract (unfetchable once written)")
     }
-    val resp = roundTrip(KafkaWire.ApiProduce,
-      if (modern) KafkaWire.encodeProduceRequestV3(topic, partition, records,
-        acks = 1, timeoutMs, codec = codec)
-      else KafkaWire.encodeProduceRequest(topic, partition, records, acks = 1, timeoutMs))
-    if (modern) KafkaWire.decodeProduceResponseV3(resp)
-    else KafkaWire.decodeProduceResponse(resp)
+    KafkaWire.decodeProduceResponse(roundTrip(KafkaWire.ApiProduce, KafkaWire.ProduceV3,
+      KafkaWire.encodeProduceRequest(topic, partition, records, acks = 1, timeoutMs,
+        codec = codec)))
   }
 
   override def close(): Unit = {

@@ -38,10 +38,6 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Options: `brokers` (host:port bootstrap), `topic`, `startingoffsets`
   * (`earliest`, default, or `latest`), `maxoffsetspertrigger` (long),
-  * `dialect` (`modern`, default — magic-2 batches over the post-KIP-896
-  * version floor, brokers 0.11 → 4.x; `legacy` — magic-0 over the v0
-  * APIs for pre-0.11 brokers; or `auto` — negotiate per broker via the
-  * ApiVersions API, resolved once on the driver and shipped to tasks),
   * `sasl.username`/`sasl.password` (SASL on every connection — driver
   * metadata clients and executor fetch clients alike) and
   * `sasl.mechanism` (`PLAIN`, default, or `SCRAM-SHA-256`; see
@@ -58,10 +54,9 @@ class KafkaLiteSourceProvider extends TableProvider with DataSourceRegister {
 
 private[graft] object KafkaLiteSource {
   /** The stock Kafka connector's column shape, minus the timestamp
-    * columns: the legacy dialect's magic-0 sets carry no timestamps at
-    * all, and the modern producer writes the -1 "no timestamp" sentinel
-    * (the engine's event time lives in the parsed payload, not the
-    * transport), so the column would be uniformly null either way.
+    * columns: the kafka-lite producer writes the -1 "no timestamp"
+    * sentinel (the engine's event time lives in the parsed payload, not
+    * the transport), so the column would be uniformly null.
     */
   val Schema: StructType = StructType(Seq(
     StructField("key", BinaryType, nullable = true),
@@ -99,11 +94,9 @@ private[sources] class KafkaLiteTable extends Table with SupportsRead {
         v
       }
       private val maxOffsets = Option(options.get("maxoffsetspertrigger")).map(_.toLong)
-      private val dialect = // validate on the driver, fail fast like startingOffsets
-        KafkaWire.Dialect(Option(options.get("dialect")).getOrElse("modern")).name
       private val saslUser = Option(options.get("sasl.username"))
       private val saslPass = Option(options.get("sasl.password"))
-      private val saslMech = { // validate on the driver, fail fast like dialect
+      private val saslMech = { // validate on the driver, fail fast like startingOffsets
         val m = Option(options.get("sasl.mechanism")).getOrElse("PLAIN")
         require(m == "PLAIN" || m == "SCRAM-SHA-256",
           s"kafka-lite sasl.mechanism must be 'PLAIN' or 'SCRAM-SHA-256', got '$m'")
@@ -112,7 +105,7 @@ private[sources] class KafkaLiteTable extends Table with SupportsRead {
       override def build(): Scan = this
       override def readSchema(): StructType = KafkaLiteSource.Schema
       override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-        new KafkaLiteMicroBatchStream(brokers, topic, startingOffsets, maxOffsets, dialect,
+        new KafkaLiteMicroBatchStream(brokers, topic, startingOffsets, maxOffsets,
           saslUser, saslPass, saslMech)
     }
 }
@@ -137,7 +130,6 @@ private[sources] object KafkaLiteOffset {
 
 private[sources] class KafkaLiteMicroBatchStream(
     brokers: String, topic: String, startingOffsets: String, maxOffsets: Option[Long],
-    dialect: String = "modern",
     saslUser: Option[String] = None, saslPass: Option[String] = None,
     saslMechanism: String = "PLAIN")
     extends MicroBatchStream with SupportsAdmissionControl {
@@ -147,7 +139,7 @@ private[sources] class KafkaLiteMicroBatchStream(
   @transient private var clientVar: KafkaLiteClient = _
   private def client: KafkaLiteClient = synchronized {
     if (clientVar == null)
-      clientVar = new KafkaLiteClient(bootHost, bootPort, dialect = KafkaWire.Dialect(dialect),
+      clientVar = new KafkaLiteClient(bootHost, bootPort,
         saslUser = saslUser, saslPass = saslPass, saslMechanism = saslMechanism)
     clientVar
   }
@@ -223,11 +215,8 @@ private[sources] class KafkaLiteMicroBatchStream(
       val from = startOf(s, m.partition) // new partition → earliest, same as latestOffset
       val until = e.getOrElse(m.partition, from)
       if (until > from)
-        // executors get the RESOLVED dialect: under `auto` the driver
-        // client negotiates once via ApiVersions and tasks skip the probe
         Some(KafkaLitePartition(topic, m.partition, m.leaderHost, m.leaderPort,
-          from, until, client.resolvedDialect.name, saslUser, saslPass,
-          saslMechanism))
+          from, until, saslUser, saslPass, saslMechanism))
       else None
     }.toArray
   }
@@ -243,7 +232,7 @@ private[sources] class KafkaLiteMicroBatchStream(
 
 private[sources] case class KafkaLitePartition(
     topic: String, partition: Int, host: String, port: Int,
-    startOffset: Long, endOffset: Long, dialect: String = "modern",
+    startOffset: Long, endOffset: Long,
     saslUser: Option[String] = None, saslPass: Option[String] = None,
     saslMechanism: String = "PLAIN") extends InputPartition {
   // the generated case-class toString would print the credential into any
@@ -251,7 +240,7 @@ private[sources] case class KafkaLitePartition(
   // redact it the way the stock connector redacts jaas configs
   override def toString: String =
     s"KafkaLitePartition($topic,$partition,$host,$port,$startOffset," +
-      s"$endOffset,$dialect,$saslUser,${saslPass.map(_ => "***")},$saslMechanism)"
+      s"$endOffset,$saslUser,${saslPass.map(_ => "***")},$saslMechanism)"
 }
 
 private[sources] class KafkaLiteReaderFactory extends PartitionReaderFactory {
@@ -263,9 +252,10 @@ private[sources] class KafkaLiteReaderFactory extends PartitionReaderFactory {
   * range was planned against an observed high watermark, so the data
   * exists; an empty fetch inside the range (broker mid-restart) retries
   * until `fetchDeadlineMs` then fails the task — Spark's task retry
-  * replays the same range, preserving exactly-once. A fetch whose FIRST
-  * message alone exceeds the current `maxBytes` comes back truncated-empty
-  * (v0 cuts on whole-message boundaries); the reader doubles `maxBytes`
+  * replays the same range, preserving exactly-once. A fetch whose first
+  * batch is cut at the current `maxBytes` decodes to nothing (the decoder
+  * drops a cut final batch; KIP-74 brokers return the first batch whole,
+  * but the reader does not rely on it); the reader doubles `maxBytes`
   * up to `MaxFetchBytes` and refetches, so one oversized record costs a
   * few extra round trips instead of wedging the stream at that offset
   * forever (the task-retry loop would otherwise replay the identical
@@ -277,9 +267,9 @@ private[sources] class KafkaLitePartitionReader(p: KafkaLitePartition,
   /** Hard ceiling for the adaptive fetch size — the shared
     * [[KafkaWire.MaxRecordBytes]] contract, a full MiB BELOW the client's
     * 64 MiB response-size fence, because the fence bounds the whole
-    * RESPONSE (message set + topic/partition headers + correlation id),
-    * not just the set. With the two equal, a grown `maxBytes` against a
-    * deep backlog filled the entire response budget with messages and
+    * RESPONSE (record batches + topic/partition headers + correlation id),
+    * not just the batches. With the two equal, a grown `maxBytes` against a
+    * deep backlog filled the entire response budget with records and
     * the framing overhead tipped the response over the fence —
     * `response size out of bounds` on every task retry, a permanent
     * wedge. A record bigger than this ceiling is rejected at PRODUCE
@@ -289,8 +279,7 @@ private[sources] class KafkaLitePartitionReader(p: KafkaLitePartition,
   private val MaxFetchBytes = KafkaWire.MaxRecordBytes
 
   private val DefaultFetchBytes = 4 * 1024 * 1024
-  private val dialect = KafkaWire.Dialect(p.dialect)
-  private val client = new KafkaLiteClient(p.host, p.port, dialect = dialect,
+  private val client = new KafkaLiteClient(p.host, p.port,
     saslUser = p.saslUser, saslPass = p.saslPass, saslMechanism = p.saslMechanism)
   private var cur = p.startOffset
   private var maxBytes = DefaultFetchBytes
@@ -331,7 +320,7 @@ private[sources] class KafkaLitePartitionReader(p: KafkaLitePartition,
         // 4 MiB default (a partition of uniformly-large records then pays
         // a truncated-empty probe + regrow round trip for EVERY fetch,
         // doubling RPCs). Tracking delivered size converges to one RPC
-        // per message set in both regimes.
+        // per fetch in both regimes.
         // budget from the KEPT records only: sizing on the raw set would
         // count records at/past endOffset the filter discards, inflating
         // the next request for data this reader will never consume
@@ -339,7 +328,7 @@ private[sources] class KafkaLitePartitionReader(p: KafkaLitePartition,
           val setBytes = got.iterator.map { r =>
             (if (r.key == null) 0 else r.key.length) +
               (if (r.value == null) 0 else r.value.length) +
-              dialect.recordOverheadBytes
+              KafkaWire.RecordOverheadBytes
           }.sum
           maxBytes = math.max(DefaultFetchBytes,
             math.min(MaxFetchBytes, 2 * setBytes))

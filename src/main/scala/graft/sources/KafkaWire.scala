@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
-import java.util.zip.{CRC32, CRC32C}
+import java.util.zip.CRC32C
 
 /** Byte-level codec for the four Kafka APIs the engine's native transport
   * needs — Metadata, ListOffsets, Fetch, Produce — hand-rolled from the
@@ -12,23 +12,19 @@ import java.util.zip.{CRC32, CRC32C}
   * in this container; a few hundred lines of codec keep the transport
   * dependency-free while staying wire-compatible with real brokers.
   *
-  * TWO DIALECTS, one reader/producer contract:
-  *  - `modern` (default): record batches **magic 2** (varint-framed
-  *    records, batch-level CRC32C — the format introduced in Kafka 0.11)
-  *    carried over the oldest API versions Kafka 4.x still accepts after
-  *    KIP-896's floor raise: Metadata v4, ListOffsets v1, Fetch v4,
-  *    Produce v3. These versions are all pre-flexible (fixed schemas, no
-  *    tagged fields), so the framing below still applies verbatim. This
-  *    dialect speaks to every broker from 0.11 through 4.x natively — no
-  *    stock connector required.
-  *  - `legacy`: message set **magic 0** over the v0 APIs, for
-  *    pre-0.11-generation brokers (v0 wire removed broker-side by
-  *    KIP-724 in 4.x).
+  * ONE WIRE: record batches **magic 2** (varint-framed records,
+  * batch-level CRC32C — the format introduced in Kafka 0.11) carried over
+  * the oldest API versions Kafka 4.x still accepts after KIP-896's floor
+  * raise: Metadata v4, ListOffsets v1, Fetch v4, Produce v3. These
+  * versions are all pre-flexible (fixed schemas, no tagged fields), so the
+  * framing below applies verbatim, and every broker from 0.11 through 4.x
+  * serves them natively — no stock connector required. Brokers older than
+  * 0.11 are not supported.
   *
   * What the native path buys beyond deployment reach: a live end-to-end
   * exercise of the engine's Kafka SEMANTICS — broker offsets,
   * startingOffsets, per-trigger admission control, replayable partition
-  * ranges, produce acks — against a wire-faithful broker, in BOTH formats.
+  * ranges, produce acks — against a wire-faithful broker.
   *
   * Reference behavior being reproduced: one message value = one log line,
   * consumed from a topic and fed to the parse pipeline
@@ -41,14 +37,6 @@ import java.util.zip.{CRC32, CRC32C}
   *  - response = int32 size ++ correlation_id int32 ++ body
   *  - string = int16 len ++ UTF-8 (len -1 = null); bytes = int32 len ++ raw
   *    (len -1 = null); array = int32 count ++ elements
-  *  - message set v0 = repeat [offset int64, msg_size int32, crc uint32,
-  *    magic int8 = 0, attributes int8, key bytes, value bytes], crc
-  *    over magic..value. Attribute bits 0-2 = compression codec; a
-  *    compressed message is a WRAPPER whose value holds a nested inner
-  *    set — all four codecs (gzip/snappy/lz4/zstd) decode transparently,
-  *    behind a decompressed-size bomb fence. Fetch responses may truncate
-  *    the final message — decoders must stop at the first incomplete
-  *    entry.
   *  - record batch v2 = [base_offset int64, batch_length int32,
   *    partition_leader_epoch int32, magic int8 = 2, crc uint32 (CRC32C
   *    over attributes..end), attributes int16, last_offset_delta int32,
@@ -69,11 +57,10 @@ private[graft] object KafkaWire {
   val ApiFetch: Short = 1
   val ApiListOffsets: Short = 2
   val ApiMetadata: Short = 3
-  val ApiApiVersions: Short = 18
   val ApiSaslHandshake: Short = 17
   val ApiSaslAuthenticate: Short = 36
 
-  /** Modern-dialect API versions: the POST-KIP-896 floor — the oldest
+  /** The API versions spoken: the POST-KIP-896 floor — the oldest
     * versions a Kafka 4.x broker still serves — which are also accepted
     * by every broker back to 0.11 (1.x for Fetch v4's isolation level).
     * All four are pre-flexible schemas: fixed-width framing, request
@@ -89,62 +76,27 @@ private[graft] object KafkaWire {
 
   /** Contract-level maximum ENCODED record size, end to end: one MiB of
     * headroom under the client's 64 MiB whole-response fence (the fence
-    * bounds message set + topic/partition headers + correlation id, not
-    * just the set). The reader's adaptive fetch growth caps here, and
-    * [[KafkaLiteClient.produce]] enforces it at WRITE time — otherwise a
-    * producer could land a record in (63 MiB, ~64 MiB) that every
+    * bounds record batches + topic/partition headers + correlation id,
+    * not just the batches). The reader's adaptive fetch growth caps here,
+    * and [[KafkaLiteClient.produce]] enforces it at WRITE time — otherwise
+    * a producer could land a record in (63 MiB, ~64 MiB) that every
     * subsequent fetch is forbidden to request, permanently wedging the
     * partition on data the log already holds.
     */
   val MaxRecordBytes: Int = 63 * 1024 * 1024
 
-  /** v0 per-record framing overhead: offset(8) + size(4) + crc(4) +
-    * magic(1) + attrs(1) + key-len(4) + value-len(4).
-    */
-  val RecordOverheadBytes: Int = 26
-
-  /** v2 WORST-CASE per-record overhead for the produce-time fence: the
+  /** WORST-CASE per-record overhead for the produce-time fence: the
     * 61-byte batch header plus max-width zigzag varints for length(5) +
     * attributes(1) + timestamp_delta(10) + offset_delta(5) + key_len(5) +
     * value_len(5) + header_count(5). Real encodings are far smaller (the
     * varints are 1-2 bytes each and the batch header amortizes across the
-    * set), but the fence must never under-count: a record admitted at
+    * batch), but the fence must never under-count: a record admitted at
     * produce time that a max-size fetch can't carry wedges its partition.
     */
-  val RecordOverheadBytesV2: Int = 61 + 36
+  val RecordOverheadBytes: Int = 61 + 36
 
   final case class PartitionMeta(partition: Int, leaderHost: String, leaderPort: Int)
   final case class Record(offset: Long, key: Array[Byte], value: Array[Byte])
-
-  /** One reader/producer contract, two wire dialects (see class doc). The
-    * dialect fixes each API's version and the produce-fence overhead; the
-    * client and stub broker branch on nothing else.
-    */
-  sealed abstract class Dialect(val name: String,
-      val produceV: Short, val fetchV: Short, val listOffsetsV: Short,
-      val metadataV: Short, val recordOverheadBytes: Int)
-  case object Modern extends Dialect("modern",
-    ProduceV3, FetchV4, ListOffsetsV1, MetadataV4, RecordOverheadBytesV2)
-  case object Legacy extends Dialect("legacy", 0, 0, 0, 0, RecordOverheadBytes)
-  /** Placeholder resolved per connection by [[KafkaLiteClient]] via the
-    * ApiVersions API (KIP-35: supported by every broker since 0.10):
-    * Modern when the broker serves the post-KIP-896 floor, Legacy when it
-    * only advertises the v0 schemas or predates ApiVersions entirely
-    * (such brokers drop the connection on the unknown request — the
-    * client reconnects and speaks v0). The version fields here are
-    * sentinels; using Auto without resolution is a bug, hence -1 (an
-    * unconditionally invalid api_version on the wire).
-    */
-  case object Auto extends Dialect("auto", -1, -1, -1, -1, RecordOverheadBytesV2)
-  object Dialect {
-    def apply(s: String): Dialect = s.toLowerCase match {
-      case "modern" => Modern
-      case "legacy" => Legacy
-      case "auto" => Auto
-      case other => throw new IllegalArgumentException(
-        s"kafka-lite dialect must be 'modern', 'legacy', or 'auto', got '$other'")
-    }
-  }
 
   // ---- primitive writers -------------------------------------------------
 
@@ -168,7 +120,7 @@ private[graft] object KafkaWire {
     /** Kafka `bytes`: int32 length, -1 for null. */
     def bytes(v: Array[Byte]): Writer =
       if (v == null) int32(-1) else { int32(v.length); raw(v) }
-    /** Kafka nullable string (int16 length, -1 = null) — modern metadata
+    /** Kafka nullable string (int16 length, -1 = null) — Metadata v4
       * carries nullable rack / cluster-id / transactional-id fields.
       */
     def nullableString(s: String): Writer =
@@ -239,10 +191,9 @@ private[graft] object KafkaWire {
 
   // ---- request framing ---------------------------------------------------
 
-  /** Size-prefixed request. The header layout (api_key, api_version,
-    * correlation_id, client_id) is identical for header v0 and v1 — and
-    * every version the two dialects use is pre-flexible (no tagged
-    * fields), so one framing serves both.
+  /** Size-prefixed request: request header v1 (api_key, api_version,
+    * correlation_id, client_id) — every version spoken is pre-flexible, so
+    * no tagged fields follow.
     */
   def request(apiKey: Short, apiVersion: Short, correlationId: Int,
       clientId: String, body: Array[Byte]): Array[Byte] = {
@@ -254,86 +205,9 @@ private[graft] object KafkaWire {
     framed.toBytes
   }
 
-  // ---- message set v0 ----------------------------------------------------
+  // ---- compression -------------------------------------------------------
 
-  /** One v0 message set from (key, value) pairs; offsets are written as the
-    * entry index (producers' offsets are placeholders — the broker assigns).
-    */
-  def encodeMessageSet(records: Seq[(Array[Byte], Array[Byte])]): Array[Byte] = {
-    val w = new Writer(records.size * 64)
-    records.zipWithIndex.foreach { case ((key, value), i) =>
-      val body = new Writer(16)
-      body.int8(0: Byte)  // magic 0
-      body.int8(0: Byte)  // attributes: no compression
-      body.bytes(key)
-      body.bytes(value)
-      val bodyBytes = body.toBytes
-      val crc = new CRC32
-      crc.update(bodyBytes)
-      w.int64(i.toLong)                      // placeholder offset
-      w.int32(4 + bodyBytes.length)          // message size (crc + body)
-      w.int32(crc.getValue.toInt)            // crc as uint32 bits
-      w.raw(bodyBytes)
-    }
-    w.toBytes
-  }
-
-  /** Decode a v0 message set, stopping cleanly at a truncated final entry
-    * (fetch responses cut at max_bytes mid-message by design). Verifies
-    * each CRC — a mismatch means wire corruption and throws.
-    */
-  def decodeMessageSet(data: Array[Byte]): Seq[Record] = {
-    val out = Vector.newBuilder[Record]
-    var pos = 0
-    while (data.length - pos >= 12) {
-      val buf = ByteBuffer.wrap(data, pos, data.length - pos)
-      val offset = buf.getLong
-      val size = buf.getInt // message bytes that follow: crc(4) + body(size-4)
-      if (size < 4 || data.length - pos - 12 < size) {
-        pos = data.length // truncated tail — done
-      } else {
-        val crcStored = buf.getInt.toLong & 0xffffffffL
-        val body = new Array[Byte](size - 4)
-        buf.get(body)
-        val crc = new CRC32
-        crc.update(body)
-        if (crc.getValue != crcStored)
-          throw new java.io.IOException(
-            s"kafka message at offset $offset failed CRC (${crc.getValue} != $crcStored)")
-        val r = new Reader(body)
-        val magic = r.int8()
-        if (magic != 0)
-          throw new java.io.IOException(s"unsupported message magic $magic (kafka-lite speaks v0)")
-        val attributes = r.int8()
-        val key = r.bytes()
-        val value = r.bytes()
-        attributes & 0x07 match {
-          case 0 => out += Record(offset, key, value)
-          case codec =>
-            // compressed WRAPPER message: the value is a whole inner
-            // message set (any of the four codecs — Lz4Frame accepts the
-            // legacy broken-HC frames magic-0 producers wrote). A magic-0
-            // broker stamps the wrapper with the offset of the LAST inner
-            // message while the inner set keeps its produce-time indices
-            // 0..n-1 — remap so consumers see absolute offsets.
-            val inner = decodeMessageSet(
-              decompress(codec, value, s"wrapper message at offset $offset"))
-            val n = inner.size
-            inner.zipWithIndex.foreach { case (rec, i) =>
-              val abs = if (offset >= n - 1) offset - (n - 1) + i else rec.offset
-              out += Record(abs, rec.key, rec.value)
-            }
-        }
-        pos += 12 + size // offset(8) + size-field(4) + message(size)
-      }
-    }
-    out.result()
-  }
-
-  // ---- compression (both dialects) ---------------------------------------
-
-  /** Codec ids from the attributes field (same 3-bit table in magic 0 and
-    * magic 2). All four Kafka codecs decode natively: gzip via the JDK,
+  /** Codec ids from the batch attributes field (bits 0-2). All four Kafka codecs decode natively: gzip via the JDK,
     * snappy (xerial stream framing — what Kafka's CompressionType wraps)
     * and zstd via the public libraries Spark itself ships at
     * /opt/spark/jars, lz4 via the hand-rolled Kafka frame walk in
@@ -480,7 +354,7 @@ private[graft] object KafkaWire {
   /** Decode a sequence of v2 batches, stopping cleanly at a truncated
     * final batch (fetch responses cut at max_bytes on the wire, not on a
     * batch boundary). Verifies each batch CRC32C; a magic other than 2
-    * means dialect drift and throws.
+    * (a pre-0.11 message set) throws.
     */
   def decodeRecordBatches(data: Array[Byte]): Seq[Record] = {
     val out = Vector.newBuilder[Record]
@@ -507,7 +381,7 @@ private[graft] object KafkaWire {
         val magic = data(pos + 16)
         if (magic != 2)
           throw new java.io.IOException(
-            s"unsupported batch magic $magic (modern dialect speaks v2)")
+            s"unsupported batch magic $magic (kafka-lite speaks magic 2)")
         val crcStored = ByteBuffer.wrap(data, pos + 17, 4).getInt.toLong & 0xffffffffL
         val regionLen = 12 + batchLength - V2CrcStart
         val crc = new CRC32C
@@ -551,171 +425,16 @@ private[graft] object KafkaWire {
     out.result()
   }
 
-  // ---- Metadata v0 -------------------------------------------------------
+  // ---- Metadata v4 -------------------------------------------------------
 
   def encodeMetadataRequest(topics: Seq[String]): Array[Byte] = {
-    val w = new Writer()
-    w.array(topics)(t => w.string(t))
-    w.toBytes
-  }
-
-  /** (error, partitions) for `topic` with leader endpoints resolved through
-    * the broker list.
-    */
-  def decodeMetadataResponse(body: Array[Byte], topic: String): Seq[PartitionMeta] = {
-    val r = new Reader(body)
-    val brokers = r.array {
-      val id = r.int32(); val host = r.string(); val port = r.int32()
-      id -> (host, port)
-    }.toMap
-    val metas = r.array {
-      val err = r.int16()
-      val name = r.string()
-      val parts = r.array {
-        val perr = r.int16()
-        val pid = r.int32()
-        val leader = r.int32()
-        r.array(r.int32()) // replicas
-        r.array(r.int32()) // isr
-        (perr, pid, leader)
-      }
-      (err, name, parts)
-    }
-    metas.find(_._2 == topic) match {
-      case None => throw new java.io.IOException(s"topic $topic missing from metadata")
-      case Some((err, _, parts)) =>
-        if (err != 0) throw new java.io.IOException(s"metadata error $err for topic $topic")
-        parts.map { case (perr, pid, leader) =>
-          if (perr != 0) throw new java.io.IOException(s"metadata error $perr for $topic/$pid")
-          val (host, port) = brokers.getOrElse(leader,
-            throw new java.io.IOException(s"leader $leader of $topic/$pid not in broker list"))
-          PartitionMeta(pid, host, port)
-        }.sortBy(_.partition)
-    }
-  }
-
-  // ---- ListOffsets v0 ----------------------------------------------------
-
-  def encodeListOffsetsRequest(topic: String, partition: Int, timestamp: Long): Array[Byte] = {
-    val w = new Writer()
-    w.int32(-1) // replica_id: ordinary client
-    w.array(Seq(topic)) { t =>
-      w.string(t)
-      w.array(Seq(partition)) { p => w.int32(p).int64(timestamp).int32(1) }
-    }
-    w.toBytes
-  }
-
-  def decodeListOffsetsResponse(body: Array[Byte]): Long = {
-    val r = new Reader(body)
-    val offsets = r.array {
-      r.string()
-      r.array {
-        r.int32()
-        val err = r.int16()
-        val offs = r.array(r.int64())
-        if (err != 0) throw new java.io.IOException(s"list-offsets error $err")
-        offs
-      }
-    }
-    offsets.flatten.flatten.headOption.getOrElse(
-      throw new java.io.IOException("empty list-offsets response"))
-  }
-
-  // ---- Fetch v0 ----------------------------------------------------------
-
-  def encodeFetchRequest(topic: String, partition: Int, offset: Long,
-      maxWaitMs: Int, minBytes: Int, maxBytes: Int): Array[Byte] = {
-    val w = new Writer()
-    w.int32(-1).int32(maxWaitMs).int32(minBytes)
-    w.array(Seq(topic)) { t =>
-      w.string(t)
-      w.array(Seq(partition)) { p => w.int32(p).int64(offset).int32(maxBytes) }
-    }
-    w.toBytes
-  }
-
-  /** (records, highWatermark). */
-  def decodeFetchResponse(body: Array[Byte]): (Seq[Record], Long) = {
-    val r = new Reader(body)
-    val parts = r.array {
-      r.string()
-      r.array {
-        r.int32()
-        val err = r.int16()
-        val hw = r.int64()
-        val setSize = r.int32()
-        val set = r.raw(setSize)
-        if (err != 0) throw new java.io.IOException(s"fetch error $err")
-        (decodeMessageSet(set), hw)
-      }
-    }
-    parts.flatten.headOption.getOrElse(
-      throw new java.io.IOException("empty fetch response"))
-  }
-
-  // ---- Produce v0 --------------------------------------------------------
-
-  def encodeProduceRequest(topic: String, partition: Int,
-      records: Seq[(Array[Byte], Array[Byte])], acks: Short, timeoutMs: Int): Array[Byte] = {
-    val set = encodeMessageSet(records)
-    val w = new Writer(64 + set.length)
-    w.int16(acks).int32(timeoutMs)
-    w.array(Seq(topic)) { t =>
-      w.string(t)
-      w.array(Seq(partition)) { p => w.int32(p).int32(set.length).raw(set) }
-    }
-    w.toBytes
-  }
-
-  /** Base offset assigned to the produced set; throws on a broker error. */
-  def decodeProduceResponse(body: Array[Byte]): Long = {
-    val r = new Reader(body)
-    val offs = r.array {
-      r.string()
-      r.array {
-        r.int32()
-        val err = r.int16()
-        val base = r.int64()
-        if (err != 0) throw new java.io.IOException(s"produce error $err")
-        base
-      }
-    }
-    offs.flatten.headOption.getOrElse(
-      throw new java.io.IOException("empty produce response"))
-  }
-
-  // ---- ApiVersions v0 (dialect negotiation, KIP-35) ----------------------
-
-  /** v0 request body is empty. */
-  def encodeApiVersionsRequest(): Array[Byte] = Array.emptyByteArray
-
-  /** api_key → (min_version, max_version); throws on a broker error. */
-  def decodeApiVersionsResponse(body: Array[Byte]): Map[Short, (Short, Short)] = {
-    val r = new Reader(body)
-    val err = r.int16()
-    if (err != 0) throw new java.io.IOException(s"api-versions error $err")
-    r.array { (r.int16(), (r.int16(), r.int16())) }.toMap
-  }
-
-  /** True iff `ranges` serves every API version the modern dialect needs. */
-  def supportsModern(ranges: Map[Short, (Short, Short)]): Boolean =
-    Seq(ApiProduce -> ProduceV3, ApiFetch -> FetchV4,
-      ApiListOffsets -> ListOffsetsV1, ApiMetadata -> MetadataV4)
-      .forall { case (key, v) =>
-        ranges.get(key).exists { case (lo, hi) => lo <= v && v <= hi }
-      }
-
-  // ---- modern dialect: Metadata v4 ---------------------------------------
-
-  def encodeMetadataRequestV4(topics: Seq[String]): Array[Byte] = {
     val w = new Writer()
     w.array(topics)(t => w.string(t))
     w.int8(1: Byte) // allow_auto_topic_creation (v4's addition)
     w.toBytes
   }
 
-  def decodeMetadataResponseV4(body: Array[Byte], topic: String): Seq[PartitionMeta] = {
+  def decodeMetadataResponse(body: Array[Byte], topic: String): Seq[PartitionMeta] = {
     val r = new Reader(body)
     r.int32() // throttle_time_ms (v3+)
     val brokers = r.array {
@@ -752,10 +471,10 @@ private[graft] object KafkaWire {
     }
   }
 
-  // ---- modern dialect: ListOffsets v1 ------------------------------------
+  // ---- ListOffsets v1 ----------------------------------------------------
 
-  /** v1 drops v0's max_num_offsets: one (timestamp → offset) per partition. */
-  def encodeListOffsetsRequestV1(topic: String, partition: Int, timestamp: Long): Array[Byte] = {
+  /** One (timestamp → offset) per partition; v1 has no max_num_offsets. */
+  def encodeListOffsetsRequest(topic: String, partition: Int, timestamp: Long): Array[Byte] = {
     val w = new Writer()
     w.int32(-1) // replica_id
     w.array(Seq(topic)) { t =>
@@ -765,7 +484,7 @@ private[graft] object KafkaWire {
     w.toBytes
   }
 
-  def decodeListOffsetsResponseV1(body: Array[Byte]): Long = {
+  def decodeListOffsetsResponse(body: Array[Byte]): Long = {
     val r = new Reader(body)
     val offsets = r.array {
       r.string()
@@ -782,9 +501,9 @@ private[graft] object KafkaWire {
       throw new java.io.IOException("empty list-offsets response"))
   }
 
-  // ---- modern dialect: Fetch v4 ------------------------------------------
+  // ---- Fetch v4 ----------------------------------------------------------
 
-  def encodeFetchRequestV4(topic: String, partition: Int, offset: Long,
+  def encodeFetchRequest(topic: String, partition: Int, offset: Long,
       maxWaitMs: Int, minBytes: Int, maxBytes: Int): Array[Byte] = {
     val w = new Writer()
     w.int32(-1)          // replica_id
@@ -800,7 +519,7 @@ private[graft] object KafkaWire {
   }
 
   /** (records, highWatermark) — the record set decodes as v2 batches. */
-  def decodeFetchResponseV4(body: Array[Byte]): (Seq[Record], Long) = {
+  def decodeFetchResponse(body: Array[Byte]): (Seq[Record], Long) = {
     val r = new Reader(body)
     r.int32() // throttle_time_ms (v1+)
     val parts = r.array {
@@ -823,9 +542,9 @@ private[graft] object KafkaWire {
       throw new java.io.IOException("empty fetch response"))
   }
 
-  // ---- modern dialect: Produce v3 ----------------------------------------
+  // ---- Produce v3 --------------------------------------------------------
 
-  def encodeProduceRequestV3(topic: String, partition: Int,
+  def encodeProduceRequest(topic: String, partition: Int,
       records: Seq[(Array[Byte], Array[Byte])], acks: Short, timeoutMs: Int,
       codec: Int = CodecNone): Array[Byte] = {
     val batch = encodeRecordBatch(records, codec = codec)
@@ -840,7 +559,7 @@ private[graft] object KafkaWire {
   }
 
   /** Base offset assigned to the produced batch; throws on broker error. */
-  def decodeProduceResponseV3(body: Array[Byte]): Long = {
+  def decodeProduceResponse(body: Array[Byte]): Long = {
     val r = new Reader(body)
     val offs = r.array {
       r.string()
@@ -863,7 +582,7 @@ private[graft] object KafkaWire {
   // Handshake v1 selects the mechanism; the PLAIN token then flows inside
   // a Kafka-framed SaslAuthenticate request (v1+ brokers; the v0-handshake
   // raw-token-after framing is deliberately out of scope — every broker
-  // that serves the modern dialect's API floor also serves handshake v1).
+  // that serves the API floor above also serves handshake v1).
   // PLAIN token per RFC 4616: [authzid] NUL authcid NUL passwd. TLS stays
   // documented-out (README "Transport caveats"); PLAIN over plaintext is
   // the stub-broker-testable half and the same layering a real deployment

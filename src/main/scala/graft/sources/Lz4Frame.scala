@@ -1,29 +1,21 @@
 package graft.sources
 
 /** LZ4 Frame codec for the kafka-lite transport — the wire format Kafka
-  * uses for lz4-compressed record batches and wrapper messages
+  * uses for the records section of lz4-compressed record batches
   * (CompressionType LZ4 in the public Apache Kafka protocol; frame layout
   * per the public LZ4 Frame Format spec, lz4.github.io/lz4).
   *
   * The FRAME walk (magic, descriptor, header checksum, block framing,
   * end mark) is hand-rolled here because it is protocol surface the
-  * engine must own — including Kafka's legacy quirk below. The raw BLOCK
-  * codec and xxHash32 delegate to lz4-java, the same public library
-  * Spark itself ships for shuffle compression (`/opt/spark/jars`), for
-  * the identical reason the JDK supplies gzip: a battle-tested public
-  * primitive, not protocol logic.
+  * engine must own. The raw BLOCK codec and xxHash32 delegate to
+  * lz4-java, the same public library Spark itself ships for shuffle
+  * compression (`/opt/spark/jars`), for the identical reason the JDK
+  * supplies gzip: a battle-tested public primitive, not protocol logic.
   *
-  * Kafka quirk handled on decode: producers speaking message-format v0/v1
-  * computed the frame-descriptor header checksum over the bytes INCLUDING
-  * the 4-byte magic (the "broken HC" bug, fixed for v2 but still on the
-  * wire from old producers, and preserved by brokers that down-convert).
-  * [[decompress]] accepts the spec-correct checksum first and the legacy
-  * variant second; anything else is corruption and throws named.
-  *
-  * Encode always writes the SPEC-CORRECT frame (version 01,
-  * block-independent, 64 KiB blocks, no content checksum — the shape
-  * modern Kafka producers emit): every broker ≥ 0.11 validates v2 batches
-  * with the correct checksum.
+  * Both directions use the SPEC-CORRECT header checksum (xxHash32 of
+  * FLG..dictID), the only one magic-2 batches carry: [[decompress]]
+  * throws named on any other. Encode writes version 01, block-independent,
+  * 64 KiB blocks, no content checksum — the shape Kafka producers emit.
   */
 object Lz4Frame {
   private val MagicLE = 0x184d2204
@@ -83,9 +75,7 @@ object Lz4Frame {
     val descLen = 2 + (if (contentSizePresent) 8 else 0) + (if (dictIdPresent) 4 else 0)
     if (data.length < 4 + descLen + 1) fail("truncated descriptor")
     val stored = data(4 + descLen)
-    // spec-correct HC is over FLG..dictID; legacy Kafka (message-format
-    // v0/v1 producers) hashed from the magic instead
-    if (stored != hc(data, 4, descLen) && stored != hc(data, 0, 4 + descLen))
+    if (stored != hc(data, 4, descLen))
       fail(f"header checksum mismatch (0x$stored%02x)")
     var pos = 4 + descLen + 1
     val out = new java.io.ByteArrayOutputStream(math.min(cap, data.length * 3))

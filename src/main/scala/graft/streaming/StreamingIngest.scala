@@ -67,17 +67,15 @@ object StreamingIngest {
     * ([[graft.sources.KafkaLiteSourceProvider]]) — broker-held offsets,
     * replayable per-partition ranges, executor-side fetch, admission
     * control via maxOffsetsPerTrigger. Speaks the hand-rolled wire
-    * protocol ([[graft.sources.KafkaWire]]) in either dialect — `modern`
-    * (default, magic-2 batches, brokers 0.11 → 4.x), `legacy` (magic-0,
-    * pre-0.11), or `auto` (ApiVersions-negotiated per broker) — so the Kafka SEMANTICS are e2e-tested in this container
-    * with no Kafka jars, and the same source deploys against a modern
+    * protocol ([[graft.sources.KafkaWire]]: magic-2 batches, brokers
+    * 0.11 → 4.x), so the Kafka SEMANTICS are e2e-tested in this container
+    * with no Kafka jars, and the same source deploys against a current
     * cluster natively. [[kafkaSource]] (stock connector) remains wired for
     * shops standardized on it (TLS, compacted-topic tooling).
     */
   def kafkaLiteSource(spark: SparkSession, brokers: String, topic: String,
       startingOffsets: String = "earliest",
       maxOffsetsPerTrigger: Option[Long] = None,
-      dialect: String = "modern",
       saslUser: Option[String] = None,
       saslPass: Option[String] = None,
       saslMechanism: String = "PLAIN"): DataFrame = {
@@ -85,7 +83,6 @@ object StreamingIngest {
       .option("brokers", brokers)
       .option("topic", topic)
       .option("startingOffsets", startingOffsets)
-      .option("dialect", dialect)
       // always forwarded, even with no credentials, so the DSv2 driver
       // validation catches a typo'd mechanism instead of silently
       // ignoring a mechanism-only misconfiguration
@@ -121,7 +118,6 @@ object StreamingIngest {
     */
   def kafkaLiteSink(lines: DataFrame, brokers: String, topic: String,
       checkpoint: String, produceBatch: Int = 500,
-      dialect: String = "modern",
       produceCodec: String = "none",
       saslUser: Option[String] = None,
       saslPass: Option[String] = None,
@@ -143,10 +139,9 @@ object StreamingIngest {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val (host, port) = graft.sources.KafkaLiteSource.parseBroker(brokers)
-        val wireDialect = graft.sources.KafkaWire.Dialect(dialect)
         batch.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
           if (rows.hasNext) {
-            val boot = new graft.sources.KafkaLiteClient(host, port, dialect = wireDialect,
+            val boot = new graft.sources.KafkaLiteClient(host, port,
               saslUser = saslUser, saslPass = saslPass, saslMechanism = saslMechanism)
             val extra = scala.collection.mutable.Map.empty[(String, Int),
               graft.sources.KafkaLiteClient]
@@ -154,8 +149,7 @@ object StreamingIngest {
               if (m.leaderHost == host && m.leaderPort == port) boot
               else extra.getOrElseUpdate((m.leaderHost, m.leaderPort),
                 new graft.sources.KafkaLiteClient(m.leaderHost, m.leaderPort,
-                  dialect = wireDialect, saslUser = saslUser, saslPass = saslPass,
-                  saslMechanism = saslMechanism))
+                  saslUser = saslUser, saslPass = saslPass, saslMechanism = saslMechanism))
             def bytesOf(r: org.apache.spark.sql.Row): (Array[Byte], Array[Byte]) = {
               val key = if (r.isNullAt(0)) null
                 else r.getString(0).getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -313,17 +307,6 @@ object StreamingIngest {
           }
         }
       }
-
-  /** K2: Kafka producer sink (client half of KafkaLog,
-    * `internal/services/kafkalog/client.go:62-98`).
-    */
-  def kafkaSink(lines: DataFrame, brokers: String, topic: String,
-      checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    lines.selectExpr("CAST(value AS STRING) AS value")
-      .writeStream.format("kafka")
-      .option("kafka.bootstrap.servers", brokers)
-      .option("topic", topic)
-      .option("checkpointLocation", checkpoint)
 
   /** Graceful-stop parity (`pkg/signal/notify.go:29-55`): stop the query on
     * SIGTERM/SIGINT, letting the in-flight micro-batch finish.

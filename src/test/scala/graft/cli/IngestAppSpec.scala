@@ -66,14 +66,48 @@ class IngestAppSpec extends AnyFunSuite {
       val s = new java.net.DatagramSocket(0)
       try s.getLocalPort finally s.close()
     }
-    val before = spark.streams.active.map(_.id).toSet
-    val e = intercept[IllegalArgumentException](IngestApp.main(Array(
-      "--config", s"$tmp/cfg.yaml", "--mode", "stream",
-      "--source", "syslog", "--listeners", "udp", "--bind", "127.0.0.1",
-      "--udp-port", udpPort.toString, "--dead-letter", s"$tmp/dead",
-      "--sink", "parquet", "--output", s"$tmp/out", "--checkpoint", s"$tmp/cp")))
-    assert(e.getMessage.contains("--dead-letter"))
-    assert(spark.streams.active.map(_.id).toSet == before)
+    Files.createDirectories(Paths.get(s"$tmp/in"))
+    val sources = Seq(
+      Seq("--source", "syslog", "--listeners", "udp", "--bind", "127.0.0.1",
+        "--udp-port", udpPort.toString),
+      // the dead-letter query's cleanSource would archive or delete files
+      // the main query has yet to read
+      Seq("--source", "file", "--input", s"$tmp/in"))
+    sources.foreach { source =>
+      val before = spark.streams.active.map(_.id).toSet
+      val e = intercept[IllegalArgumentException](IngestApp.main((Seq(
+        "--config", s"$tmp/cfg.yaml", "--mode", "stream") ++ source ++ Seq(
+        "--dead-letter", s"$tmp/dead",
+        "--sink", "parquet", "--output", s"$tmp/out", "--checkpoint", s"$tmp/cp")).toArray))
+      assert(e.getMessage.contains("--dead-letter"), source)
+      assert(spark.streams.active.map(_.id).toSet == before, source)
+    }
+  }
+
+  test("unknown flags and flags without a value fail, naming the flag") {
+    val tmp = Files.createTempDirectory("graft_cli_flags").toString
+    Files.writeString(Paths.get(s"$tmp/cfg.yaml"),
+      """nginx:
+        |  log_format: '$remote_addr - $remote_user [$time_local] "$request" $status $bytes_sent'
+        |  log_time_format: 02/Jan/2006:15:04:05 -0700
+        |scheme:
+        |  logs_table: access_log
+        |  columns:
+        |    remote_addr: remote_addr
+        |    status: status
+        |""".stripMargin)
+    Files.createDirectories(Paths.get(s"$tmp/in"))
+    Files.writeString(Paths.get(s"$tmp/in/access.log"),
+      "10.0.0.1 - - [21/Jul/2022:00:30:43 +0000] \"GET /x HTTP/1.1\" 200 512\n")
+    val valid = Seq("--config", s"$tmp/cfg.yaml", "--mode", "batch",
+      "--input", s"$tmp/in", "--sink", "console", "--master", "local[2]")
+    // a removed flag must not run with its setting silently dropped
+    val unknown = intercept[IllegalArgumentException](
+      IngestApp.main((valid ++ Seq("--dialect", "legacy")).toArray))
+    assert(unknown.getMessage.contains("--dialect"), unknown.getMessage)
+    val trailing = intercept[IllegalArgumentException](
+      IngestApp.main((valid :+ "--dead-letter").toArray))
+    assert(trailing.getMessage.contains("--dead-letter"), trailing.getMessage)
   }
 
   test("stream mode: kafka-lite source → parquet, end-to-end through the CLI") {

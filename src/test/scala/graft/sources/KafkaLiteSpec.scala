@@ -7,7 +7,7 @@ import graft.TestSpark
 import graft.pipeline.Ingest
 import graft.streaming.StreamingIngest
 
-/** Kafka transport (S5 source / K2 sink) over the hand-rolled v0 wire:
+/** Kafka transport (S5 source / K2 sink) over the hand-rolled wire:
   * codec units, client ↔ stub-broker round trips, and the full DSv2
   * streaming path (offsets, admission control, checkpoint replay) — the
   * `FileBufSpec` treatment for the Kafka leg.
@@ -18,43 +18,11 @@ class KafkaLiteSpec extends AnyFunSuite {
   private def utf8(s: String) = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
   private def str(b: Array[Byte]) = new String(b, java.nio.charset.StandardCharsets.UTF_8)
 
-  test("message set v0 roundtrip: null key, empty value, unicode, crc") {
-    val recs = Seq[(Array[Byte], Array[Byte])](
-      (null, utf8("plain")),
-      (utf8("k1"), utf8("")),
-      (null, utf8("uni é中😀")),
-      (utf8("key-2"), utf8("x" * 9000)))
-    val decoded = KafkaWire.decodeMessageSet(KafkaWire.encodeMessageSet(recs))
-    assert(decoded.size == 4)
-    assert(decoded(0).key == null && str(decoded(0).value) == "plain")
-    assert(str(decoded(1).key) == "k1" && decoded(1).value.length == 0)
-    assert(str(decoded(2).value) == "uni é中😀")
-    assert(decoded(3).value.length == 9000)
-    assert(decoded.map(_.offset) == Seq(0L, 1L, 2L, 3L))
-  }
-
-  test("message set decoder stops cleanly at a truncated tail (fetch max_bytes cut)") {
-    val whole = KafkaWire.encodeMessageSet(
-      Seq((null, utf8("aaaa")), (null, utf8("bbbb")), (null, utf8("cccc"))))
-    // any prefix must decode only the complete entries, never throw
-    for (cut <- 1 until whole.length) {
-      val part = java.util.Arrays.copyOfRange(whole, 0, cut)
-      val got = KafkaWire.decodeMessageSet(part)
-      assert(got.size <= 2)
-      got.foreach(r => assert(Seq("aaaa", "bbbb").contains(str(r.value))))
-    }
-    // corrupting a payload byte must fail the CRC
-    val bad = whole.clone()
-    bad(whole.length - 1) = (bad(whole.length - 1) ^ 0x1).toByte
-    intercept[java.io.IOException](KafkaWire.decodeMessageSet(bad))
-  }
-
-  for (dialect <- Seq(KafkaWire.Modern, KafkaWire.Legacy))
-  test(s"client ↔ stub broker (${dialect.name}): metadata, produce, list offsets, fetch") {
+  test("client ↔ stub broker (modern): metadata, produce, list offsets, fetch") {
     val broker = new KafkaStubBroker(numPartitions = 2)
     val port = broker.start()
     try {
-      val c = new KafkaLiteClient("127.0.0.1", port, dialect = dialect)
+      val c = new KafkaLiteClient("127.0.0.1", port)
       try {
         val metas = c.partitionsOf("logs")
         assert(metas.map(_.partition) == Seq(0, 1))
@@ -81,15 +49,15 @@ class KafkaLiteSpec extends AnyFunSuite {
           c.produce("logs", 0, Seq((null, new Array[Byte](KafkaWire.MaxRecordBytes)))))
         assert(c.latestOffset("logs", 0) == before)
 
-        // the conversation really happened on this dialect's versions
+        // the conversation really happened on the fixed versions
         assert(broker.versionCounts.getOrElse(
-          (KafkaWire.ApiProduce, dialect.produceV), 0) >= 2)
+          (KafkaWire.ApiProduce, KafkaWire.ProduceV3), 0) >= 2)
         assert(broker.versionCounts.getOrElse(
-          (KafkaWire.ApiFetch, dialect.fetchV), 0) >= 1)
+          (KafkaWire.ApiFetch, KafkaWire.FetchV4), 0) >= 1)
         assert(broker.versionCounts.getOrElse(
-          (KafkaWire.ApiMetadata, dialect.metadataV), 0) >= 1)
+          (KafkaWire.ApiMetadata, KafkaWire.MetadataV4), 0) >= 1)
         assert(broker.versionCounts.getOrElse(
-          (KafkaWire.ApiListOffsets, dialect.listOffsetsV), 0) >= 2)
+          (KafkaWire.ApiListOffsets, KafkaWire.ListOffsetsV1), 0) >= 2)
       } finally c.close()
     } finally broker.stop()
   }
@@ -236,127 +204,6 @@ class KafkaLiteSpec extends AnyFunSuite {
     } finally broker.stop()
   }
 
-  test("legacy dialect serves lz4 wrapper messages through the DSv2 source") {
-    val broker = new KafkaStubBroker(numPartitions = 1,
-      fetchCodec = KafkaWire.CodecLz4, modernApis = false,
-      apiVersionsSupported = false)
-    val port = broker.start()
-    try {
-      broker.append("lw", 0, (1 to 40).map(i => s"legacy-lz4-$i"))
-      val q = StreamingIngest.kafkaLiteSource(spark, s"127.0.0.1:$port", "lw",
-        dialect = "legacy")
-        .writeStream.format("memory").queryName("kafka_lite_legacy_lz4")
-        .outputMode("append").start()
-      try {
-        q.processAllAvailable()
-        val vals = spark.table("kafka_lite_legacy_lz4").collect().map(_.getString(0))
-        assert(vals.toSet == (1 to 40).map(i => s"legacy-lz4-$i").toSet)
-      } finally q.stop()
-    } finally broker.stop()
-  }
-
-  test("legacy dialect runs the same source+sink path over the v0 wire end-to-end") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val broker = new KafkaStubBroker(numPartitions = 2)
-    val port = broker.start()
-    val cp = java.nio.file.Files.createTempDirectory("graft_kafka_legacy_cp").toString
-    try {
-      // sink half: produce over magic-0 v0 APIs
-      val stream = MemoryStream[String]
-      val sinkQ = StreamingIngest.kafkaLiteSink(
-        stream.toDF().toDF("value"), s"127.0.0.1:$port", "lgc", cp,
-        dialect = "legacy").start()
-      val lines = (1 to 40).map(i => s"legacy line $i")
-      try {
-        stream.addData(lines: _*)
-        sinkQ.processAllAvailable()
-      } finally sinkQ.stop()
-      assert((broker.stringValues("lgc", 0) ++ broker.stringValues("lgc", 1)).sorted
-        == lines.sorted)
-
-      // source half: read it back over the same dialect
-      val srcQ = StreamingIngest.kafkaLiteSource(
-        spark, s"127.0.0.1:$port", "lgc", dialect = "legacy")
-        .writeStream.format("memory").queryName("kafka_lite_legacy")
-        .outputMode("append").start()
-      try {
-        srcQ.processAllAvailable()
-        assert(spark.table("kafka_lite_legacy").count() == 40)
-      } finally srcQ.stop()
-
-      // every request this scenario drove used the v0 versions — executors
-      // included (fetch happens in the partition reader, not the driver)
-      assert(broker.versionCounts.keys.forall(_._2 == 0),
-        broker.versionCounts.toString)
-    } finally broker.stop()
-  }
-
-  test("auto dialect negotiates modern on a current broker, legacy on old ones") {
-    // current broker: ApiVersions advertises the post-KIP-896 floor
-    val modernBroker = new KafkaStubBroker(numPartitions = 1)
-    val p1 = modernBroker.start()
-    try {
-      val c = new KafkaLiteClient("127.0.0.1", p1, dialect = KafkaWire.Auto)
-      try {
-        c.produce("neg", 0, Seq((null, utf8("x"))))
-        assert(c.resolvedDialect == KafkaWire.Modern)
-        assert(modernBroker.versionCounts.getOrElse(
-          (KafkaWire.ApiProduce, KafkaWire.ProduceV3), 0) >= 1)
-      } finally c.close()
-    } finally modernBroker.stop()
-
-    // pre-0.11 broker: ApiVersions answers, but only v0 schemas exist
-    val v0Broker = new KafkaStubBroker(numPartitions = 1, modernApis = false)
-    val p2 = v0Broker.start()
-    try {
-      val c = new KafkaLiteClient("127.0.0.1", p2, dialect = KafkaWire.Auto)
-      try {
-        c.produce("neg", 0, Seq((null, utf8("y"))))
-        assert(c.resolvedDialect == KafkaWire.Legacy)
-        assert(v0Broker.versionCounts.getOrElse((KafkaWire.ApiProduce, 0: Short), 0) >= 1)
-      } finally c.close()
-    } finally v0Broker.stop()
-
-    // pre-0.10 broker: the unknown ApiVersions request kills the
-    // connection; the client reconnects and speaks v0
-    val ancient = new KafkaStubBroker(numPartitions = 1,
-      modernApis = false, apiVersionsSupported = false)
-    val p3 = ancient.start()
-    try {
-      val c = new KafkaLiteClient("127.0.0.1", p3, dialect = KafkaWire.Auto)
-      try {
-        c.produce("neg", 0, Seq((null, utf8("z"))))
-        assert(c.resolvedDialect == KafkaWire.Legacy)
-        assert(ancient.stringValues("neg", 0) == Seq("z"))
-      } finally c.close()
-    } finally ancient.stop()
-  }
-
-  test("auto dialect through the DSv2 source: driver negotiates once, tasks inherit") {
-    val broker = new KafkaStubBroker(numPartitions = 2)
-    val port = broker.start()
-    try {
-      broker.append("autot", 0, Seq("auto-1", "auto-2"))
-      broker.append("autot", 1, Seq("auto-3"))
-      val q = StreamingIngest.kafkaLiteSource(
-        spark, s"127.0.0.1:$port", "autot", dialect = "auto")
-        .writeStream.format("memory").queryName("kafka_lite_auto")
-        .outputMode("append").start()
-      try {
-        q.processAllAvailable()
-        assert(spark.table("kafka_lite_auto").count() == 3)
-        // every data request rode the negotiated modern versions, and the
-        // probe ran once (driver), not per task
-        assert(broker.versionCounts.getOrElse(
-          (KafkaWire.ApiFetch, KafkaWire.FetchV4), 0) >= 2)
-        assert(broker.versionCounts.getOrElse((KafkaWire.ApiFetch, 0: Short), 0) == 0)
-        assert(broker.versionCounts.getOrElse(
-          (KafkaWire.ApiApiVersions, 0: Short), 0) == 1)
-      } finally q.stop()
-    } finally broker.stop()
-  }
-
   for ((codecName, codecId) <- Seq("gzip" -> KafkaWire.CodecGzip,
     "snappy" -> KafkaWire.CodecSnappy, "lz4" -> KafkaWire.CodecLz4,
     "zstd" -> KafkaWire.CodecZstd))
@@ -378,25 +225,6 @@ class KafkaLiteSpec extends AnyFunSuite {
         } finally q.stop()
       } finally broker.stop()
     }
-
-  test("dialect option rejects anything but modern/legacy/auto") {
-    val broker = new KafkaStubBroker(numPartitions = 1)
-    val port = broker.start()
-    try {
-      val ex = intercept[Exception] {
-        val q = spark.readStream.format("kafka-lite")
-          .option("brokers", s"127.0.0.1:$port").option("topic", "t3")
-          .option("dialect", "v2").load()
-          .writeStream.format("memory").queryName("kafka_lite_baddialect")
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      def causes(t: Throwable): Seq[Throwable] =
-        if (t == null) Nil else t +: causes(t.getCause)
-      assert(causes(ex).flatMap(c => Option(c.getMessage)).exists(_.contains("dialect")),
-        s"expected a dialect validation error, got $ex")
-    } finally broker.stop()
-  }
 
   for ((codecName, codecId) <- Seq("gzip" -> KafkaWire.CodecGzip,
     "snappy" -> KafkaWire.CodecSnappy, "lz4" -> KafkaWire.CodecLz4,
@@ -512,6 +340,18 @@ class KafkaLiteSpec extends AnyFunSuite {
       // every connection in the conversation authenticated (driver
       // metadata/offset clients + executor fetch clients + sink producers)
       assert(broker.apiCounts.getOrElse(KafkaWire.ApiSaslAuthenticate, 0) >= 3)
+      // and every request, executor fetches included, used one of the
+      // four fixed data-API versions or a SASL exchange
+      val pinned = Set(
+        (KafkaWire.ApiMetadata, KafkaWire.MetadataV4),
+        (KafkaWire.ApiListOffsets, KafkaWire.ListOffsetsV1),
+        (KafkaWire.ApiFetch, KafkaWire.FetchV4),
+        (KafkaWire.ApiProduce, KafkaWire.ProduceV3),
+        (KafkaWire.ApiSaslHandshake, 1: Short),
+        (KafkaWire.ApiSaslAuthenticate, 0: Short))
+      assert(broker.versionCounts.keySet.subsetOf(pinned), broker.versionCounts.toString)
+      assert(broker.versionCounts.getOrElse(
+        (KafkaWire.ApiFetch, KafkaWire.FetchV4), 0) >= 1)
     } finally {
       qSrc.stop()
       broker.stop()

@@ -13,34 +13,26 @@ import graft.sources.KafkaWire.{Reader, Writer}
   * Kafka jars would otherwise provide, so the `kafka-lite` source/sink can
   * be exercised end-to-end over real sockets (the [[FileBufServer]]
   * treatment for the Kafka transport). Test infrastructure only. Serves
-  * BOTH dialects, keyed per-request off the header's api_version exactly
-  * like a real broker: Metadata v0/v4, ListOffsets v0/v1, Fetch v0/v4,
-  * Produce v0/v3 — magic-0 message sets on the v0 APIs, magic-2 record
-  * batches on the modern ones. Topics auto-create with `numPartitions`
+  * exactly the (api, version) pairs the client speaks — Metadata v4,
+  * ListOffsets v1, Fetch v4, Produce v3 with magic-2 record batches, plus
+  * SaslHandshake v1 / SaslAuthenticate v0 — and fails the connection
+  * loudly on any other pair. Topics auto-create with `numPartitions`
   * partitions on first use.
   *
   * Fidelity kept (because the client contract depends on it): leader-acked
   * produce with assigned base offsets, OFFSET_OUT_OF_RANGE (error 1) on a
   * fetch past the log end, fetch long-polling up to max_wait_ms, max_bytes
-  * cutting the returned data on a whole-message boundary (v0) / with the
-  * first-batch progress guarantee of KIP-74 (modern: at least one record
-  * comes back even if it alone exceeds max_bytes, like a v3+ broker),
-  * acks=0 produce getting NO response, per-connection request/response
-  * lockstep.
+  * cutting the returned data with the first-batch progress guarantee of
+  * KIP-74 (at least one record comes back even if it alone exceeds
+  * max_bytes, like a v3+ broker), acks=0 produce getting NO response,
+  * per-connection request/response lockstep.
   */
-/** @param fetchCodec serve modern fetch responses with compressed record
+/** @param fetchCodec serve fetch responses with compressed record
   *   batches (KafkaWire codec id: 1 gzip, 2 snappy, 3 lz4, 4 zstd), the
   *   way a real broker returns a compressed-produced topic — exercises
   *   the client's transparent decompression e2e.
-  * @param modernApis advertise (and serve) the modern API versions; when
-  *   false the broker emulates a pre-0.11 cluster: ApiVersions reports
-  *   only the v0 schemas and modern-version requests are rejected.
-  * @param apiVersionsSupported when false the broker emulates a pre-0.10
-  *   cluster: an ApiVersions request kills the connection (what real old
-  *   brokers did with unknown api keys), forcing the client's
-  *   reconnect-and-speak-v0 fallback.
   * @param saslUsers when non-empty the broker REQUIRES SASL: only
-  *   SaslHandshake/SaslAuthenticate/ApiVersions flow pre-auth (any other
+  *   SaslHandshake/SaslAuthenticate flow pre-auth (any other
   *   request kills the connection, like a real sasl-only listener); a
   *   wrong credential gets error 58 (SASL_AUTHENTICATION_FAILED) with a
   *   named message, then the connection closes.
@@ -54,8 +46,7 @@ import graft.sources.KafkaWire.{Reader, Writer}
   *   correct client MUST abort, named.
   */
 class KafkaStubBroker(numPartitions: Int = 2, host: String = "127.0.0.1",
-    fetchCodec: Int = KafkaWire.CodecNone, modernApis: Boolean = true,
-    apiVersionsSupported: Boolean = true,
+    fetchCodec: Int = KafkaWire.CodecNone,
     saslUsers: Map[String, String] = Map.empty,
     saslMechanism: String = "PLAIN",
     tamperServerSignature: Boolean = false) {
@@ -80,7 +71,7 @@ class KafkaStubBroker(numPartitions: Int = 2, host: String = "127.0.0.1",
   val apiCounts: TrieMap[Short, Int] = TrieMap.empty
 
   /** Requests served, by (api key, api version) — lets specs prove which
-    * DIALECT a scenario spoke on the wire.
+    * versions a scenario spoke on the wire.
     */
   val versionCounts: TrieMap[(Short, Short), Int] = TrieMap.empty
 
@@ -174,8 +165,7 @@ class KafkaStubBroker(numPartitions: Int = 2, host: String = "127.0.0.1",
         versionCounts.updateWith((apiKey, apiVersion)) { c => Some(c.getOrElse(0) + 1) }
         if (!authenticated &&
             apiKey != KafkaWire.ApiSaslHandshake &&
-            apiKey != KafkaWire.ApiSaslAuthenticate &&
-            apiKey != KafkaWire.ApiApiVersions)
+            apiKey != KafkaWire.ApiSaslAuthenticate)
           throw new IllegalArgumentException(
             s"stub broker: api $apiKey before sasl authentication")
         val (body, respond) = (apiKey, apiVersion) match {
@@ -261,19 +251,10 @@ class KafkaStubBroker(numPartitions: Int = 2, host: String = "127.0.0.1",
                 }
             }
             (w.toBytes, true)
-          case (KafkaWire.ApiApiVersions, 0) =>
-            // a pre-0.10 broker doesn't know api key 18: connection dies
-            if (!apiVersionsSupported)
-              throw new IllegalArgumentException("pre-ApiVersions broker")
-            (apiVersionsV0(), true)
-          case (KafkaWire.ApiMetadata, 0) => (metadataV0(r), true)
-          case (KafkaWire.ApiMetadata, 4) if modernApis => (metadataV4(r), true)
-          case (KafkaWire.ApiListOffsets, 0) => (listOffsetsV0(r), true)
-          case (KafkaWire.ApiListOffsets, 1) if modernApis => (listOffsetsV1(r), true)
-          case (KafkaWire.ApiFetch, 0) => (fetchV0(r), true)
-          case (KafkaWire.ApiFetch, 4) if modernApis => (fetchV4(r), true)
-          case (KafkaWire.ApiProduce, 0) => produceV0(r)
-          case (KafkaWire.ApiProduce, 3) if modernApis => produceV3(r)
+          case (KafkaWire.ApiMetadata, 4) => (metadataV4(r), true)
+          case (KafkaWire.ApiListOffsets, 1) => (listOffsetsV1(r), true)
+          case (KafkaWire.ApiFetch, 4) => (fetchV4(r), true)
+          case (KafkaWire.ApiProduce, 3) => produceV3(r)
           case (key, v) => throw new IllegalArgumentException(
             s"stub broker: unsupported api $key version $v")
         }
@@ -292,52 +273,11 @@ class KafkaStubBroker(numPartitions: Int = 2, host: String = "127.0.0.1",
     }
   }
 
-  // ---- ApiVersions -------------------------------------------------------
-
-  private def apiVersionsV0(): Array[Byte] = {
-    val w = new Writer()
-    w.int16(0: Short) // error_code
-    val ranges: Seq[(Short, Short, Short)] =
-      if (modernApis) Seq(
-        (KafkaWire.ApiProduce, 0: Short, KafkaWire.ProduceV3),
-        (KafkaWire.ApiFetch, 0: Short, KafkaWire.FetchV4),
-        (KafkaWire.ApiListOffsets, 0: Short, KafkaWire.ListOffsetsV1),
-        (KafkaWire.ApiMetadata, 0: Short, KafkaWire.MetadataV4),
-        (KafkaWire.ApiApiVersions, 0: Short, 0: Short))
-      else Seq( // pre-0.11 generation: v0 schemas only
-        (KafkaWire.ApiProduce, 0: Short, 0: Short),
-        (KafkaWire.ApiFetch, 0: Short, 0: Short),
-        (KafkaWire.ApiListOffsets, 0: Short, 0: Short),
-        (KafkaWire.ApiMetadata, 0: Short, 0: Short),
-        (KafkaWire.ApiApiVersions, 0: Short, 0: Short))
-    w.array(ranges) { case (k, lo, hi) => w.int16(k).int16(lo).int16(hi) }
-    w.toBytes
-  }
-
   // ---- Metadata ----------------------------------------------------------
 
   private def askedTopics(r: Reader): Seq[String] = {
     val asked = r.array(r.string())
     if (asked.nonEmpty) asked else logs.keys.map(_._1).toSeq.distinct.sorted
-  }
-
-  private def topicPartitions(w: Writer, topics: Seq[String]): Unit =
-    w.array(topics) { t =>
-      (0 until numPartitions).foreach(p => log(t, p)) // auto-create
-      w.int16(0: Short).string(t)
-      w.array(0 until numPartitions) { p =>
-        w.int16(0: Short).int32(p).int32(0) // error, partition, leader node 0
-        w.array(Seq(0))(n => w.int32(n))    // replicas
-        w.array(Seq(0))(n => w.int32(n))    // isr
-      }
-    }
-
-  private def metadataV0(r: Reader): Array[Byte] = {
-    val topics = askedTopics(r)
-    val w = new Writer()
-    w.array(Seq(0)) { _ => w.int32(0).string(host).int32(port) } // one broker, node 0
-    topicPartitions(w, topics)
-    w.toBytes
   }
 
   private def metadataV4(r: Reader): Array[Byte] = {
@@ -368,24 +308,6 @@ class KafkaStubBroker(numPartitions: Int = 2, host: String = "127.0.0.1",
     val l = log(t, p)
     val end = l.synchronized(l.size.toLong)
     if (ts == KafkaWire.EarliestTimestamp) 0L else end
-  }
-
-  private def listOffsetsV0(r: Reader): Array[Byte] = {
-    r.int32() // replica_id
-    val asks = r.array {
-      val t = r.string()
-      val parts = r.array { (r.int32(), r.int64(), r.int32()) }
-      (t, parts)
-    }
-    val w = new Writer()
-    w.array(asks) { case (t, parts) =>
-      w.string(t)
-      w.array(parts) { case (p, ts, _) =>
-        w.int32(p).int16(0: Short)
-        w.array(Seq(resolveOffset(t, p, ts)))(o => w.int64(o))
-      }
-    }
-    w.toBytes
   }
 
   private def listOffsetsV1(r: Reader): Array[Byte] = {
@@ -419,48 +341,6 @@ class KafkaStubBroker(numPartitions: Int = 2, host: String = "127.0.0.1",
     end
   }
 
-  private def fetchV0(r: Reader): Array[Byte] = {
-    r.int32() // replica_id
-    val maxWait = r.int32()
-    r.int32() // min_bytes
-    val asks = r.array {
-      val t = r.string()
-      val parts = r.array { (r.int32(), r.int64(), r.int32()) }
-      (t, parts)
-    }
-    val w = new Writer()
-    w.array(asks) { case (t, parts) =>
-      w.string(t)
-      w.array(parts) { case (p, offset, maxBytes) =>
-        val l = log(t, p)
-        val end = pollSlice(t, p, offset, maxWait)
-        if (offset > end) {
-          w.int32(p).int16(1: Short).int64(end).int32(0) // OFFSET_OUT_OF_RANGE
-        } else {
-          val slice = l.synchronized(l.slice(offset.toInt, l.size).toVector)
-          // whole messages only, cut at max_bytes
-          var budget = maxBytes
-          val keep = Vector.newBuilder[(Long, (Array[Byte], Array[Byte]))]
-          var i = 0
-          var full = false
-          while (i < slice.size && !full) {
-            val (k, v) = slice(i)
-            val msgBytes = 12 + 6 + (if (k == null) 4 else 4 + k.length) + 4 + v.length
-            if (msgBytes <= budget) {
-              keep += ((offset + i, (k, v))); budget -= msgBytes; i += 1
-            } else full = true
-          }
-          val set =
-            if (fetchCodec == KafkaWire.CodecNone || keep.result().isEmpty)
-              encodeWithOffsets(keep.result())
-            else encodeCompressedWrapper(keep.result())
-          w.int32(p).int16(0: Short).int64(end).int32(set.length).raw(set)
-        }
-      }
-    }
-    w.toBytes
-  }
-
   private def fetchV4(r: Reader): Array[Byte] = {
     r.int32() // replica_id
     val maxWait = r.int32()
@@ -486,7 +366,7 @@ class KafkaStubBroker(numPartitions: Int = 2, host: String = "127.0.0.1",
           val slice = l.synchronized(l.slice(offset.toInt, l.size).toVector)
           // cut at max_bytes on encoded-record estimate, but ALWAYS ship
           // at least the first record — KIP-74's progress guarantee, the
-          // reason modern readers can't wedge on an oversized record
+          // reason the reader can't wedge on an oversized record
           var budget = maxBytes - KafkaWire.V2HeaderBytes
           val keep = Vector.newBuilder[(Array[Byte], Array[Byte])]
           var i = 0
@@ -512,37 +392,6 @@ class KafkaStubBroker(numPartitions: Int = 2, host: String = "127.0.0.1",
     w.toBytes
   }
 
-  /** One compressed WRAPPER message holding the whole slice, the way a
-    * magic-0 broker serves a compressed-produced topic: wrapper offset =
-    * LAST inner absolute offset, inner set keeps produce-time indices.
-    */
-  private def encodeCompressedWrapper(
-      records: Seq[(Long, (Array[Byte], Array[Byte]))]): Array[Byte] = {
-    val innerSet = KafkaWire.encodeMessageSet(records.map(_._2))
-    val compressed = KafkaWire.compress(fetchCodec, innerSet)
-    val body = new Writer()
-    body.int8(0: Byte).int8(fetchCodec.toByte).bytes(null).bytes(compressed)
-    val bodyBytes = body.toBytes
-    val crc = new java.util.zip.CRC32
-    crc.update(bodyBytes)
-    val w = new Writer()
-    w.int64(records.last._1) // wrapper carries the LAST inner offset
-    w.int32(4 + bodyBytes.length).int32(crc.getValue.toInt).raw(bodyBytes)
-    w.toBytes
-  }
-
-  private def encodeWithOffsets(records: Seq[(Long, (Array[Byte], Array[Byte]))]): Array[Byte] = {
-    val w = new Writer()
-    records.foreach { case (off, (k, v)) =>
-      val one = KafkaWire.encodeMessageSet(Seq((k, v)))
-      // overwrite the 8-byte placeholder offset at the head of the entry
-      val bb = java.nio.ByteBuffer.wrap(one)
-      bb.putLong(0, off)
-      w.raw(one)
-    }
-    w.toBytes
-  }
-
   // ---- Produce -----------------------------------------------------------
 
   private def appendRecords(t: String, p: Int, records: Seq[KafkaWire.Record]): Long = {
@@ -552,29 +401,6 @@ class KafkaStubBroker(numPartitions: Int = 2, host: String = "127.0.0.1",
       records.foreach(rec => l += ((rec.key, rec.value)))
       b
     }
-  }
-
-  private def produceV0(r: Reader): (Array[Byte], Boolean) = {
-    val acks = r.int16()
-    r.int32() // timeout
-    val asks = r.array {
-      val t = r.string()
-      val parts = r.array {
-        val p = r.int32()
-        val setSize = r.int32()
-        (p, r.raw(setSize))
-      }
-      (t, parts)
-    }
-    val w = new Writer()
-    w.array(asks) { case (t, parts) =>
-      w.string(t)
-      w.array(parts) { case (p, set) =>
-        val base = appendRecords(t, p, KafkaWire.decodeMessageSet(set))
-        w.int32(p).int16(0: Short).int64(base)
-      }
-    }
-    (w.toBytes, acks != 0) // acks=0: fire-and-forget, no response frame
   }
 
   private def produceV3(r: Reader): (Array[Byte], Boolean) = {

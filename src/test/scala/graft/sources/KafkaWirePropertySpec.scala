@@ -3,11 +3,11 @@ package graft.sources
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Randomized codec pins for the hand-rolled Kafka v0 wire: arbitrary
-  * binary keys/values (nulls, empties, high bytes) must survive a
-  * message-set roundtrip byte-for-byte, and EVERY truncation point of an
-  * encoded set must decode to exactly the whole-message prefix — the
-  * invariant fetch responses rely on when max_bytes cuts mid-message.
+/** Randomized codec pins for the hand-rolled Kafka wire: arbitrary
+  * binary keys/values (nulls, empties, high bytes) must survive a v2
+  * record-batch roundtrip byte-for-byte, and every truncation point inside
+  * a batch must decode to exactly the whole batches before it — the
+  * invariant fetch responses rely on when max_bytes cuts mid-batch.
   */
 class KafkaWirePropertySpec extends AnyFunSuite {
 
@@ -27,34 +27,6 @@ class KafkaWirePropertySpec extends AnyFunSuite {
 
   private def eq(a: Array[Byte], b: Array[Byte]): Boolean =
     (a == null && b == null) || (a != null && b != null && java.util.Arrays.equals(a, b))
-
-  test("message-set roundtrip is byte-exact for arbitrary binary keys/values") {
-    sample(60).foreach { recs =>
-      val decoded = KafkaWire.decodeMessageSet(KafkaWire.encodeMessageSet(recs))
-      assert(decoded.size == recs.size)
-      decoded.zip(recs).zipWithIndex.foreach { case ((got, (k, v)), i) =>
-        assert(got.offset == i.toLong)
-        assert(eq(got.key, k), s"key mismatch at $i")
-        assert(eq(got.value, v), s"value mismatch at $i")
-      }
-    }
-  }
-
-  test("every truncation point decodes exactly the whole-message prefix") {
-    sample(15).filter(_.nonEmpty).foreach { recs =>
-      val whole = KafkaWire.encodeMessageSet(recs)
-      // entry boundaries: cumulative encoded sizes
-      val bounds = recs.scanLeft(0) { case (acc, (k, v)) =>
-        acc + KafkaWire.encodeMessageSet(Seq((k, v))).length
-      }
-      for (cut <- 0 to whole.length) {
-        val got = KafkaWire.decodeMessageSet(java.util.Arrays.copyOfRange(whole, 0, cut))
-        val expect = bounds.count(_ <= cut) - 1 // complete entries within the cut
-        assert(got.size == expect,
-          s"cut=$cut decoded ${got.size}, expected $expect (bounds=$bounds)")
-      }
-    }
-  }
 
   test("v2 record-batch roundtrip is byte-exact for arbitrary binary keys/values") {
     sample(60).filter(_.nonEmpty).foreach { recs =>
@@ -114,31 +86,6 @@ class KafkaWirePropertySpec extends AnyFunSuite {
     }
   }
 
-  test("v0 gzip wrapper decodes the inner set with broker-remapped absolute offsets") {
-    val inner = Seq[(Array[Byte], Array[Byte])](
-      (null, "a".getBytes), ("k".getBytes, "b".getBytes), (null, "c".getBytes))
-    val innerSet = KafkaWire.encodeMessageSet(inner)
-    val gz = {
-      val bos = new java.io.ByteArrayOutputStream()
-      val out = new java.util.zip.GZIPOutputStream(bos)
-      out.write(innerSet); out.close(); bos.toByteArray
-    }
-    // wrapper exactly as a magic-0 broker ships it: offset = LAST inner
-    // message's absolute offset (here 12, so the set spans 10..12),
-    // attributes codec bits = 1 (gzip), value = gzip(inner set)
-    val w = new KafkaWire.Writer()
-    val body = new KafkaWire.Writer()
-    body.int8(0: Byte).int8(1: Byte).bytes(null).bytes(gz)
-    val bodyBytes = body.toBytes
-    val crc = new java.util.zip.CRC32
-    crc.update(bodyBytes)
-    w.int64(12L).int32(4 + bodyBytes.length).int32(crc.getValue.toInt).raw(bodyBytes)
-    val got = KafkaWire.decodeMessageSet(w.toBytes)
-    assert(got.map(_.offset) == Seq(10L, 11L, 12L))
-    assert(got.map(r => new String(r.value, "UTF-8")) == Seq("a", "b", "c"))
-    assert(new String(got(1).key, "UTF-8") == "k")
-  }
-
   test("reserved codec ids fail with a named error instead of mis-parsing") {
     // v2: flip the attribute bits to reserved id 5 and re-CRC so only the
     // codec is wrong
@@ -149,39 +96,19 @@ class KafkaWirePropertySpec extends AnyFunSuite {
     java.nio.ByteBuffer.wrap(batch, 17, 4).putInt(crc.getValue.toInt)
     val e2 = intercept[java.io.IOException](KafkaWire.decodeRecordBatches(batch))
     assert(e2.getMessage.contains("unsupported compression"))
-
-    // v0: message with reserved codec bits = 5
-    val body = new KafkaWire.Writer()
-    body.int8(0: Byte).int8(5: Byte).bytes(null).bytes("y".getBytes)
-    val bodyBytes = body.toBytes
-    val mcrc = new java.util.zip.CRC32
-    mcrc.update(bodyBytes)
-    val w = new KafkaWire.Writer()
-    w.int64(0L).int32(4 + bodyBytes.length).int32(mcrc.getValue.toInt).raw(bodyBytes)
-    val e0 = intercept[java.io.IOException](KafkaWire.decodeMessageSet(w.toBytes))
-    assert(e0.getMessage.contains("unsupported compression"))
   }
 
-  test("v0 lz4 wrapper (legacy broken-HC frame) decodes the inner set") {
-    val inner = Seq[(Array[Byte], Array[Byte])](
-      (null, "a".getBytes), (null, "b".getBytes))
-    val innerSet = KafkaWire.encodeMessageSet(inner)
-    // frame with the LEGACY header checksum old v0/v1 producers wrote:
-    // hash over magic+FLG+BD instead of FLG+BD
-    val correct = Lz4Frame.compress(innerSet)
-    val legacy = correct.clone()
-    val xx = net.jpountz.xxhash.XXHashFactory.fastestInstance().hash32()
-    legacy(6) = ((xx.hash(legacy, 0, 6, 0) >> 8) & 0xff).toByte
+  test("a pre-0.11 magic-0 message set fails named instead of decoding") {
+    // one v0 message: offset, size, crc, magic 0, attributes, key, value
     val body = new KafkaWire.Writer()
-    body.int8(0: Byte).int8(3: Byte).bytes(null).bytes(legacy)
+    body.int8(0: Byte).int8(0: Byte).bytes(null).bytes(("v0 line " * 8).getBytes)
     val bodyBytes = body.toBytes
-    val mcrc = new java.util.zip.CRC32
-    mcrc.update(bodyBytes)
+    val crc = new java.util.zip.CRC32
+    crc.update(bodyBytes)
     val w = new KafkaWire.Writer()
-    w.int64(1L).int32(4 + bodyBytes.length).int32(mcrc.getValue.toInt).raw(bodyBytes)
-    val got = KafkaWire.decodeMessageSet(w.toBytes)
-    assert(got.map(_.offset) == Seq(0L, 1L))
-    assert(got.map(r => new String(r.value, "UTF-8")) == Seq("a", "b"))
+    w.int64(0L).int32(4 + bodyBytes.length).int32(crc.getValue.toInt).raw(bodyBytes)
+    val e = intercept[java.io.IOException](KafkaWire.decodeRecordBatches(w.toBytes))
+    assert(e.getMessage.contains("magic 0"), e.getMessage)
   }
 
   test("corrupt positive batch_length below the v2 minimum throws (no busy-loop)") {

@@ -46,12 +46,13 @@ class Lz4FrameSpec extends AnyFunSuite {
     }
   }
 
-  test("legacy broken-HC frame (Kafka v0/v1 producers) is accepted") {
+  test("legacy broken-HC frame (Kafka v0/v1 producers) fails the header checksum") {
     val p = ("legacy payload " * 100).getBytes("UTF-8")
     val framed = Lz4Frame.compress(p)
     val xx = net.jpountz.xxhash.XXHashFactory.fastestInstance().hash32()
     framed(6) = ((xx.hash(framed, 0, 6, 0) >> 8) & 0xff).toByte // magic-included hash
-    assert(java.util.Arrays.equals(Lz4Frame.decompress(framed, 1 << 24), p))
+    val e = intercept[java.io.IOException](Lz4Frame.decompress(framed, 1 << 24))
+    assert(e.getMessage.contains("header checksum mismatch"), e.getMessage)
   }
 
   test("corrupt header checksum (neither variant) throws named") {
