@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.streaming.LocalCheckpointFileManager
+
 /** The one definition of an engine session. Every main and the test
   * suite build their session here, so a query means the same thing in
   * each of them.
@@ -35,6 +37,9 @@ object GraftSession {
       // truncation; normalization then yields identical strings in any
       // session.
       .config("spark.sql.maxMetadataStringLength", "100000")
+      // streaming checkpoint logs on local disk are written without
+      // starting a process per file; an explicit manager class wins
+      .config(LocalCheckpointFileManager.ConfKey, LocalCheckpointFileManager.forNewSession)
 
   /** A `local[cpus]` session with one shuffle partition per worker, no
     * UI and WARN logging.

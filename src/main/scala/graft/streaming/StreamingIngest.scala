@@ -15,6 +15,10 @@ import graft.pipeline.Ingest
   * Kafka→JDBC at-least-once; both strictly stronger than the reference's
   * volatile in-memory buffer (crash between offset commit and flush loses
   * rows there).
+  *
+  * Every sink installs [[LocalCheckpointFileManager]] on its session
+  * unless a checkpoint manager is already set, so sessions built outside
+  * [[graft.GraftSession]] also write their logs without a process per file.
   */
 object StreamingIngest {
 
@@ -127,6 +131,7 @@ object StreamingIngest {
     val codecId = graft.sources.KafkaWire.codecId(produceCodec) // validate up front
     require(saslMechanism == "PLAIN" || saslMechanism == "SCRAM-SHA-256",
       s"kafka-lite saslMechanism must be 'PLAIN' or 'SCRAM-SHA-256', got '$saslMechanism'")
+    LocalCheckpointFileManager.installIfUnset(lines.sparkSession)
     val projected = keyExpr match {
       case Some(k) => lines.selectExpr(s"CAST(($k) AS STRING) AS key",
         "CAST(value AS STRING) AS value")
@@ -230,7 +235,8 @@ object StreamingIngest {
     * reference's retried inserts.
     */
   def filebufSink(lines: DataFrame, host: String, port: Int, checkpoint: String,
-      streamsPerPartition: Int = 1): DataStreamWriter[org.apache.spark.sql.Row] =
+      streamsPerPartition: Int = 1): DataStreamWriter[org.apache.spark.sql.Row] = {
+    LocalCheckpointFileManager.installIfUnset(lines.sparkSession)
     lines.selectExpr("CAST(value AS STRING) AS value")
       // a null value (e.g. a Kafka tombstone) has no line representation;
       // dropping it here beats a poison-pill NPE that fails the batch on
@@ -247,6 +253,7 @@ object StreamingIngest {
           }
         }
       }
+  }
 
   /** RFC3164 envelope strip → content, the syslog handler's extraction
     * (`internal/services/syslog/impl.go:89-98`): `<PRI>Mmm dd hh:mm:ss
@@ -264,7 +271,8 @@ object StreamingIngest {
   def parquetSink(
       parsed: DataFrame, path: String, checkpoint: String,
       timeCol: String = "time_local",
-      flushIntervalMs: Long = 2000L): DataStreamWriter[org.apache.spark.sql.Row] =
+      flushIntervalMs: Long = 2000L): DataStreamWriter[org.apache.spark.sql.Row] = {
+    LocalCheckpointFileManager.installIfUnset(parsed.sparkSession)
     Ingest.withTableLayout(parsed, timeCol)
       .writeStream
       .format("parquet")
@@ -272,6 +280,7 @@ object StreamingIngest {
       .option("checkpointLocation", checkpoint)
       .partitionBy(Ingest.PartitionColumn)
       .trigger(Trigger.ProcessingTime(flushIntervalMs))
+  }
 
   /** K1: buffered JDBC (ClickHouse) sink via foreachBatch — batchsize =
     * reference buffer size (default 5000, `cmd/filelog/main.go:75-81`),
@@ -281,7 +290,8 @@ object StreamingIngest {
   def jdbcSink(
       parsed: DataFrame, url: String, table: String, checkpoint: String,
       batchSize: Int = 5000, flushIntervalMs: Long = 2000L,
-      maxRetries: Int = 3, queryTimeoutSec: Int = 60): DataStreamWriter[org.apache.spark.sql.Row] =
+      maxRetries: Int = 3, queryTimeoutSec: Int = 60): DataStreamWriter[org.apache.spark.sql.Row] = {
+    LocalCheckpointFileManager.installIfUnset(parsed.sparkSession)
     parsed.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime(flushIntervalMs))
@@ -307,6 +317,7 @@ object StreamingIngest {
           }
         }
       }
+  }
 
   /** Graceful-stop parity (`pkg/signal/notify.go:29-55`): stop the query on
     * SIGTERM/SIGINT, letting the in-flight micro-batch finish.

@@ -19,6 +19,8 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(conf.get("spark.sql.icu.caseMappings.enabled") == "false")
     assert(conf.get("spark.sql.maxMetadataStringLength") == "100000")
     assert(conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(conf.get(graft.streaming.LocalCheckpointFileManager.ConfKey) ==
+      graft.streaming.LocalCheckpointFileManager.ClassName)
   }
 
   test("GraftSession.scala is the only source that calls the session builder") {

@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -156,10 +158,11 @@ class KafkaLiteSpec extends AnyFunSuite {
   }
 
   test("a record larger than the fetch size is read via adaptive maxBytes growth") {
-    val broker = new KafkaStubBroker(numPartitions = 1)
+    // the broker cuts an oversized first batch at max_bytes, so the 4 MiB
+    // fetch at the 6 MiB record decodes to nothing and the reader must
+    // double its way up instead of wedging at the offset
+    val broker = new KafkaStubBroker(numPartitions = 1, cutOversizedFirstBatch = true)
     val port = broker.start()
-    // 6 MiB value: the first 4 MiB fetch comes back truncated-empty and
-    // the reader must double its way up instead of wedging at the offset
     val big = "x" * (6 * 1024 * 1024)
     broker.append("big", 0, Seq("small-1", big, "small-2"))
     val q = StreamingIngest.kafkaLiteSource(spark, s"127.0.0.1:$port", "big")
@@ -170,6 +173,8 @@ class KafkaLiteSpec extends AnyFunSuite {
       assert(vals.length == 3)
       assert(vals.count(_.length == big.length) == 1)
       assert(vals.toSet.contains("small-1") && vals.toSet.contains("small-2"))
+      val atBig = broker.fetches.asScala.collect { case (1L, maxBytes) => maxBytes }.toSeq
+      assert(atBig == Seq(4 * 1024 * 1024, 8 * 1024 * 1024), atBig)
     } finally { q.stop(); broker.stop() }
   }
 

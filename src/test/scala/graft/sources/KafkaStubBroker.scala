@@ -24,7 +24,8 @@ import graft.sources.KafkaWire.{Reader, Writer}
   * fetch past the log end, fetch long-polling up to max_wait_ms, max_bytes
   * cutting the returned data with the first-batch progress guarantee of
   * KIP-74 (at least one record comes back even if it alone exceeds
-  * max_bytes, like a v3+ broker), acks=0 produce getting NO response,
+  * max_bytes, like a v3+ broker, unless `cutOversizedFirstBatch`), acks=0
+  * produce getting NO response,
   * per-connection request/response lockstep.
   */
 /** @param fetchCodec serve fetch responses with compressed record
@@ -44,12 +45,17 @@ import graft.sources.KafkaWire.{Reader, Writer}
   *   server-final `v=` signature — emulates a man-in-the-middle that
   *   accepted the proof but cannot prove credential knowledge back; a
   *   correct client MUST abort, named.
+  * @param cutOversizedFirstBatch cut every fetched record batch at the
+  *   fetch's max_bytes, even one whose first record alone exceeds it, as a
+  *   broker without KIP-74's progress guarantee does; the client then
+  *   decodes nothing at that record and must grow its fetch size.
   */
 class KafkaStubBroker(numPartitions: Int = 2, host: String = "127.0.0.1",
     fetchCodec: Int = KafkaWire.CodecNone,
     saslUsers: Map[String, String] = Map.empty,
     saslMechanism: String = "PLAIN",
-    tamperServerSignature: Boolean = false) {
+    tamperServerSignature: Boolean = false,
+    cutOversizedFirstBatch: Boolean = false) {
 
   private val logs = TrieMap.empty[(String, Int), ArrayBuffer[(Array[Byte], Array[Byte])]]
 
@@ -79,6 +85,9 @@ class KafkaStubBroker(numPartitions: Int = 2, host: String = "127.0.0.1",
     * (0 = none, 1 = gzip) — lets specs prove a producer really compressed.
     */
   val producedCodecs: TrieMap[Int, Int] = TrieMap.empty
+
+  /** (offset, max_bytes) of every partition fetch, in arrival order. */
+  val fetches = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Int)]()
 
   private def log(topic: String, p: Int): ArrayBuffer[(Array[Byte], Array[Byte])] =
     logs.getOrElseUpdate((topic, p), ArrayBuffer.empty)
@@ -357,6 +366,7 @@ class KafkaStubBroker(numPartitions: Int = 2, host: String = "127.0.0.1",
     w.array(asks) { case (t, parts) =>
       w.string(t)
       w.array(parts) { case (p, offset, maxBytes) =>
+        fetches.add((offset, maxBytes))
         val l = log(t, p)
         val end = pollSlice(t, p, offset, maxWait)
         if (offset > end) {
@@ -379,9 +389,10 @@ class KafkaStubBroker(numPartitions: Int = 2, host: String = "127.0.0.1",
             } else full = true
           }
           val kept = keep.result()
-          val set = if (slice.isEmpty) Array.empty[Byte]
-                    else KafkaWire.encodeRecordBatch(kept, baseOffset = offset,
-                      codec = fetchCodec)
+          val whole = if (slice.isEmpty) Array.empty[Byte]
+                      else KafkaWire.encodeRecordBatch(kept, baseOffset = offset,
+                        codec = fetchCodec)
+          val set = if (cutOversizedFirstBatch) whole.take(maxBytes) else whole
           // partition, error, high_watermark, last_stable_offset,
           // aborted_transactions (empty), record set
           w.int32(p).int16(0: Short).int64(end).int64(end).int32(0)

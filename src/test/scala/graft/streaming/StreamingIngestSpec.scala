@@ -3,6 +3,7 @@ package graft.streaming
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -211,6 +212,64 @@ class StreamingIngestSpec extends AnyFunSuite {
       assert(spark.read.format("jdbc")
         .option("url", plainUrl).option("dbtable", "access_log").load().count() == 3)
     } finally q2.stop()
+  }
+
+  /** Drains two files through `fileSource` → `parquetSink` in `first`, one
+    * batch each, then deletes the last `commits/N`: a crash after the sink
+    * wrote its batch but before the query committed it. Restarts from the
+    * checkpoint in the test session with two more files, and checks the
+    * sink holds each good input line exactly once. Returns the checkpoint.
+    */
+  private def restartAfterCrashBeforeCommit(first: SparkSession): java.nio.file.Path = {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_restart")
+    val inDir = tmp.resolve("in"); val out = tmp.resolve("out").toString
+    val cp = tmp.resolve("cp")
+    java.nio.file.Files.createDirectories(inDir)
+    // the batch parse of the new files, read before the stream: cleanSource
+    // deletes the inputs once consumed
+    def addFiles(ids: Range): Seq[String] = {
+      val files = ids.map { i =>
+        java.nio.file.Files.writeString(inDir.resolve(f"access-$i%02d.log"), (0 until 3)
+          .map(j => s"10.0.$i.$j - - [21/Jul/2022:00:30:43 +0000] \"GET /r$i/$j HTTP/1.1\" 200 $j 0.05\n")
+          .mkString + s"$badLine\n").toString
+      }
+      Ingest.parse(spark.read.text(files: _*), cfg).collect().map(_.toString).toSeq
+    }
+    def drain(session: SparkSession): Unit = {
+      val lines = StreamingIngest.fileSource(session, inDir.toString, maxFilesPerTrigger = 1)
+      val q = StreamingIngest.parquetSink(Ingest.parse(lines, cfg), out, cp.toString,
+        flushIntervalMs = 100).start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    val first2 = addFiles(0 until 2)
+    drain(first)
+    java.nio.file.Files.delete(cp.resolve("commits/1"))
+    java.nio.file.Files.deleteIfExists(cp.resolve("commits/.1.crc"))
+    val next2 = addFiles(2 until 4)
+    drain(spark)
+    val want = (first2 ++ next2).sorted
+    val cols = Ingest.parse(spark.read.text(inDir.toString), cfg).columns.map(col).toSeq
+    val got = spark.read.parquet(out).select(cols: _*)
+      .collect().map(_.toString).toSeq.sorted
+    assert(want.size == 12 && want.distinct.size == 12)
+    assert(got == want)
+    assert((0 to 3).forall(b => java.nio.file.Files.exists(cp.resolve(s"commits/$b"))))
+    cp
+  }
+
+  test("parquet sink restart after a crash between sink write and commit: every line once") {
+    restartAfterCrashBeforeCommit(spark)
+  }
+
+  test("a checkpoint written by Spark's FileContext manager resumes under the local manager") {
+    val first = spark.newSession()
+    first.conf.set(LocalCheckpointFileManager.ConfKey,
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager")
+    val cp = restartAfterCrashBeforeCommit(first)
+    // phase 1 wrote checksums beside its logs, phase 2 none
+    assert(java.nio.file.Files.exists(cp.resolve("offsets/.1.crc")))
+    assert(java.nio.file.Files.exists(cp.resolve("offsets/2")))
+    assert(!java.nio.file.Files.exists(cp.resolve("offsets/.2.crc")))
   }
 
   test("native syslog-tcp DSv2 source end-to-end (S4 transport parity)") {
