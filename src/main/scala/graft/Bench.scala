@@ -211,7 +211,7 @@ object Bench {
       graft.queries.DataOps.logLinesFor(spark, sfDir)
         .write.mode("overwrite").text(inDir)
       val lines = graft.streaming.StreamingIngest
-        .fileSource(spark, inDir, maxFilesPerTrigger = 64)
+        .fileSource(spark, inDir, maxFilesPerTrigger = Some(64))
       val parsed = graft.pipeline.Ingest.parse(lines, cfg)
       val t0 = System.nanoTime()
       val q = parsed.writeStream.format("parquet")

@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
-import graft.streaming.LocalCheckpointFileManager
+import graft.streaming.StreamingIngest
 
 /** The one definition of an engine session. Every main and the test
   * suite build their session here, so a query means the same thing in
@@ -37,9 +38,18 @@ object GraftSession {
       // truncation; normalization then yields identical strings in any
       // session.
       .config("spark.sql.maxMetadataStringLength", "100000")
-      // streaming checkpoint logs on local disk are written without
-      // starting a process per file; an explicit manager class wins
-      .config(LocalCheckpointFileManager.ConfKey, LocalCheckpointFileManager.forNewSession)
+      // streams: checkpoint logs written without a process per file, and
+      // generated classes shared by every query; an explicit value wins
+      .config(StreamingIngest.SessionSettings.map { case (k, v) => k -> explicitOr(k, v) }.toMap)
+
+  /** `value`, unless the running session or the Spark conf (`--conf`, a
+    * system property) sets `key`.
+    */
+  private def explicitOr(key: String, value: String): String =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .flatMap(_.conf.getAll.get(key))
+      .orElse(new SparkConf().getOption(key))
+      .getOrElse(value)
 
   /** A `local[cpus]` session with one shuffle partition per worker, no
     * UI and WARN logging.

@@ -8,8 +8,6 @@ import java.util.UUID
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileStatus, FileSystem,
   FSDataInputStream, LocalFileSystem, Path, PathFilter}
-import org.apache.spark.SparkConf
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
 
@@ -105,19 +103,6 @@ object LocalCheckpointFileManager {
   val ConfKey = "spark.sql.streaming.checkpointFileManagerClass"
 
   val ClassName: String = classOf[LocalCheckpointFileManager].getName
-
-  /** The manager a new session gets: an explicit value on the running
-    * session or in the Spark conf (`--conf`, a system property) wins.
-    */
-  def forNewSession: String =
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .flatMap(_.conf.getOption(ConfKey))
-      .orElse(new SparkConf().getOption(ConfKey))
-      .getOrElse(ClassName)
-
-  /** Installs this manager on `spark` unless a manager is already set. */
-  def installIfUnset(spark: SparkSession): Unit =
-    if (spark.conf.getOption(ConfKey).isEmpty) spark.conf.set(ConfKey, ClassName)
 
   private def openTemp(tmp: JPath): OutputStream = {
     val out =

@@ -16,11 +16,36 @@ import graft.pipeline.Ingest
   * volatile in-memory buffer (crash between offset commit and flush loses
   * rows there).
   *
-  * Every sink installs [[LocalCheckpointFileManager]] on its session
-  * unless a checkpoint manager is already set, so sessions built outside
-  * [[graft.GraftSession]] also write their logs without a process per file.
+  * Every sink installs [[SessionSettings]] on its session, each unless the
+  * session already has a value for it, so sessions built outside
+  * [[graft.GraftSession]] run their streams the same way.
   */
 object StreamingIngest {
+
+  /** Spark's per-session artifact isolation. On (Spark's default), every
+    * streaming query runs in a session clone with its own executor class
+    * loader, and the codegen cache is keyed by class loader, so each query
+    * compiles and JITs its generated classes again. The engine adds no
+    * session artifacts, so isolation buys nothing here.
+    */
+  val ArtifactIsolationKey = "spark.sql.artifact.isolation.enabled"
+
+  /** The settings every stream of the engine runs with: checkpoint logs on
+    * local disk written without a process per file, and generated classes
+    * reused by every query of the session.
+    */
+  val SessionSettings: Seq[(String, String)] = Seq(
+    LocalCheckpointFileManager.ConfKey -> LocalCheckpointFileManager.ClassName,
+    ArtifactIsolationKey -> "false")
+
+  /** Sets each of [[SessionSettings]] on `spark` unless the session has a
+    * value for it. `getAll` holds only the values that were set, where
+    * `getOption` would also return Spark's default.
+    */
+  private def installSessionSettings(spark: SparkSession): Unit = {
+    val set = spark.conf.getAll
+    SessionSettings.foreach { case (k, v) => if (!set.contains(k)) spark.conf.set(k, v) }
+  }
 
   /** S1: rotating-file-scan parity. Spark's file source does
     * discover-per-trigger with exactly-once bookkeeping; `cleanSource`
@@ -28,25 +53,30 @@ object StreamingIngest {
     * (`pkg/fileio/rotate.go:28-71`, `io.go:16-73`). The `nginx -s reopen`
     * side effect has no engine analog (external hook).
     *
+    * A trigger admits every file present, as the reference streams the
+    * whole rotated file at each tick; `maxFilesPerTrigger` caps it.
+    * Backpressure is the micro-batch loop: the next trigger starts only
+    * after the current batch commits, and each task reads one split.
+    *
     * Raises the session's `spark.sql.sources.parallelPartitionDiscovery.threshold`
-    * to `maxFilesPerTrigger` when it is lower, and never lowers it. Each
-    * batch lists its exact file paths again in `getBatch`; above the
-    * threshold (Spark's default is 32) that listing runs as a Spark job of
-    * one task per file, a second job in every trigger besides the sink
-    * write. At or under the threshold the driver stats the paths itself,
-    * which on a local or NFS filesystem is faster. The setting applies to
-    * the whole session: a batch read in it over more paths than the old
-    * threshold, up to `maxFilesPerTrigger`, also lists on the driver.
+    * to `maxFilesPerTrigger` (no cap: `Int.MaxValue`) when it is lower, and
+    * never lowers it. Each batch lists its exact file paths again in
+    * `getBatch`; above the threshold (Spark's default is 32) that listing
+    * runs as a Spark job of one task per file, a second job in every
+    * trigger besides the sink write. At or under the threshold the driver
+    * stats the paths itself, which on a local or NFS filesystem is faster.
+    * The setting applies to the whole session: a batch read in it over
+    * more paths than the old threshold also lists on the driver.
     */
   def fileSource(
       spark: SparkSession, dir: String,
       archiveDir: Option[String] = None,
-      maxFilesPerTrigger: Int = 100): DataFrame = {
+      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val listingThreshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    if (spark.conf.get(listingThreshold).toInt < maxFilesPerTrigger)
-      spark.conf.set(listingThreshold, maxFilesPerTrigger.toLong)
-    val base = spark.readStream
-      .option("maxFilesPerTrigger", maxFilesPerTrigger) // backpressure (impl.go:121 blocking send)
+    val threshold = maxFilesPerTrigger.getOrElse(Int.MaxValue)
+    if (spark.conf.get(listingThreshold).toInt < threshold)
+      spark.conf.set(listingThreshold, threshold.toLong)
+    val base = maxFilesPerTrigger.foldLeft(spark.readStream)(_.option("maxFilesPerTrigger", _))
     val withClean = archiveDir match {
       case Some(a) => base.option("cleanSource", "archive").option("sourceArchiveDir", a)
       case None    => base.option("cleanSource", "delete")
@@ -131,7 +161,7 @@ object StreamingIngest {
     val codecId = graft.sources.KafkaWire.codecId(produceCodec) // validate up front
     require(saslMechanism == "PLAIN" || saslMechanism == "SCRAM-SHA-256",
       s"kafka-lite saslMechanism must be 'PLAIN' or 'SCRAM-SHA-256', got '$saslMechanism'")
-    LocalCheckpointFileManager.installIfUnset(lines.sparkSession)
+    installSessionSettings(lines.sparkSession)
     val projected = keyExpr match {
       case Some(k) => lines.selectExpr(s"CAST(($k) AS STRING) AS key",
         "CAST(value AS STRING) AS value")
@@ -236,7 +266,7 @@ object StreamingIngest {
     */
   def filebufSink(lines: DataFrame, host: String, port: Int, checkpoint: String,
       streamsPerPartition: Int = 1): DataStreamWriter[org.apache.spark.sql.Row] = {
-    LocalCheckpointFileManager.installIfUnset(lines.sparkSession)
+    installSessionSettings(lines.sparkSession)
     lines.selectExpr("CAST(value AS STRING) AS value")
       // a null value (e.g. a Kafka tombstone) has no line representation;
       // dropping it here beats a poison-pill NPE that fails the batch on
@@ -272,7 +302,7 @@ object StreamingIngest {
       parsed: DataFrame, path: String, checkpoint: String,
       timeCol: String = "time_local",
       flushIntervalMs: Long = 2000L): DataStreamWriter[org.apache.spark.sql.Row] = {
-    LocalCheckpointFileManager.installIfUnset(parsed.sparkSession)
+    installSessionSettings(parsed.sparkSession)
     Ingest.withTableLayout(parsed, timeCol)
       .writeStream
       .format("parquet")
@@ -291,7 +321,7 @@ object StreamingIngest {
       parsed: DataFrame, url: String, table: String, checkpoint: String,
       batchSize: Int = 5000, flushIntervalMs: Long = 2000L,
       maxRetries: Int = 3, queryTimeoutSec: Int = 60): DataStreamWriter[org.apache.spark.sql.Row] = {
-    LocalCheckpointFileManager.installIfUnset(parsed.sparkSession)
+    installSessionSettings(parsed.sparkSession)
     parsed.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime(flushIntervalMs))

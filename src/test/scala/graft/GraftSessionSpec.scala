@@ -21,6 +21,7 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(conf.get("spark.sql.shuffle.partitions") == "4")
     assert(conf.get(graft.streaming.LocalCheckpointFileManager.ConfKey) ==
       graft.streaming.LocalCheckpointFileManager.ClassName)
+    assert(conf.get("spark.sql.artifact.isolation.enabled") == "false")
   }
 
   test("GraftSession.scala is the only source that calls the session builder") {

@@ -99,7 +99,6 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
 
   test("the engine installs the manager on sessions without one and keeps an explicit one") {
     val spark = TestSpark.spark
-    assert(spark.conf.get(ConfKey) == ClassName)
     def lines(session: org.apache.spark.sql.SparkSession) =
       session.readStream.format("rate").load()
         .selectExpr("CAST(value AS STRING) AS value", "timestamp AS time_local")
@@ -108,18 +107,23 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
       "jdbcSink" -> (df => StreamingIngest.jdbcSink(df, "jdbc:unused", "t", "/unused")),
       "kafkaLiteSink" -> (df => StreamingIngest.kafkaLiteSink(df, "127.0.0.1:1", "t", "/unused")),
       "filebufSink" -> (df => StreamingIngest.filebufSink(df, "127.0.0.1", 1, "/unused")))
-    val explicit =
-      "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
-    sinks.foreach { case (name, sink) =>
+    // the other settings installed with the manager follow the same rule
+    val explicit = Map(
+      ConfKey ->
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager",
+      StreamingIngest.ArtifactIsolationKey -> "true")
+    assert(StreamingIngest.SessionSettings.map(_._1).toSet == explicit.keySet)
+    StreamingIngest.SessionSettings.foreach { case (key, value) => assert(spark.conf.get(key) == value) }
+    for ((name, sink) <- sinks; (key, value) <- StreamingIngest.SessionSettings) {
       val bare = spark.newSession()
-      bare.conf.unset(ConfKey)
-      assert(bare.conf.getOption(ConfKey).isEmpty)
+      bare.conf.unset(key)
+      assert(!bare.conf.getAll.contains(key))
       sink(lines(bare))
-      assert(bare.conf.getOption(ConfKey).contains(ClassName), name)
+      assert(bare.conf.getAll.get(key).contains(value), s"$name $key")
       val chosen = spark.newSession()
-      chosen.conf.set(ConfKey, explicit)
+      chosen.conf.set(key, explicit(key))
       sink(lines(chosen))
-      assert(chosen.conf.get(ConfKey) == explicit, name)
+      assert(chosen.conf.get(key) == explicit(key), s"$name $key")
     }
   }
 
@@ -140,7 +144,7 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     rec.enable("jdk.ProcessStart")
     rec.start()
     val q = StreamingIngest.parquetSink(
-      Ingest.parse(StreamingIngest.fileSource(spark, in.toString, maxFilesPerTrigger = 1), cfg),
+      Ingest.parse(StreamingIngest.fileSource(spark, in.toString, maxFilesPerTrigger = Some(1)), cfg),
       tmp.resolve("out").toString, tmp.resolve("cp").toString, flushIntervalMs = 100).start()
     try q.processAllAvailable() finally q.stop()
     // a process started here shows the recording sees process starts at all

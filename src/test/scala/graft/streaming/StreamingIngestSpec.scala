@@ -6,6 +6,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -99,20 +100,58 @@ class StreamingIngestSpec extends AnyFunSuite {
     assert(written.select("insert_month").distinct().as[String].collect().head == "202207")
   }
 
+  /** `n` files of one good and two malformed lines each in `in/` of a new
+    * directory. Returns the directory and the batch parse of the files,
+    * read before a stream's `cleanSource` deletes them.
+    */
+  private def backlog(n: Int): (java.nio.file.Path, Seq[String]) = {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_backlog")
+    val in = java.nio.file.Files.createDirectories(tmp.resolve("in"))
+    (0 until n).foreach { i =>
+      java.nio.file.Files.writeString(in.resolve(f"access-$i%03d.log"),
+        s"10.0.${i / 256}.${i % 256} - - [21/Jul/2022:00:30:43 +0000] \"GET /f$i HTTP/1.1\" 200 ${i * 10} 0.05\n" +
+          s"$badLine\n$badCast\n")
+    }
+    (tmp, rows(Ingest.parse(spark.read.text(in.toString), cfg)))
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  /** Runs `fileSource` → `parquetSink` over `in/` of `tmp` until the input
+    * is drained, then stops.
+    */
+  private def drain(session: SparkSession, tmp: java.nio.file.Path,
+      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
+    val lines = StreamingIngest.fileSource(session, tmp.resolve("in").toString,
+      maxFilesPerTrigger = maxFilesPerTrigger)
+    val q = StreamingIngest.parquetSink(Ingest.parse(lines, cfg), tmp.resolve("out").toString,
+      tmp.resolve("cp").toString, flushIntervalMs = 100).start()
+    try q.processAllAvailable() finally q.stop()
+    q
+  }
+
+  private def sinkRows(tmp: java.nio.file.Path): Seq[String] = {
+    val cols = Ingest.parse(spark.read.text(tmp.resolve("in").toString), cfg).columns.map(col).toSeq
+    rows(spark.read.parquet(tmp.resolve("out").toString).select(cols: _*))
+  }
+
+  private def inputs(tmp: java.nio.file.Path): Seq[String] =
+    java.nio.file.Files.list(tmp.resolve("in")).iterator.asScala
+      .map(_.getFileName.toString).toSeq.sorted
+
+  test("file source drains a backlog of more than the old 100-file cap in one trigger") {
+    val (tmp, want) = backlog(150)
+    val q = drain(spark, tmp)
+    assert(q.recentProgress.count(_.numInputRows > 0) == 1)
+    assert(want.size == 150)
+    assert(sinkRows(tmp) == want)
+  }
+
   test("file source lists a batch of more than 32 files on the driver: no per-file listing job") {
     val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
     val saved = spark.conf.get(key)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_listing").toString
-    val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val cp = s"$tmp/cp"
-    new java.io.File(inDir).mkdirs()
-    (0 until 40).foreach { i =>
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(f"$inDir/access-$i%02d.log"),
-        s"10.0.0.$i - - [21/Jul/2022:00:30:43 +0000] \"GET /f$i HTTP/1.1\" 200 ${i * 10} 0.05\n" +
-          s"$badLine\n$badCast\n")
-    }
-    // read before the stream: cleanSource deletes the inputs once consumed
-    val expected = Ingest.parse(spark.read.text(inDir), cfg)
-    val want = expected.collect().map(_.toString).sorted.toSeq
+    val (tmp, want) = backlog(150)
     val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -122,9 +161,7 @@ class StreamingIngestSpec extends AnyFunSuite {
     spark.conf.set(key, "32") // Spark's default
     spark.sparkContext.addSparkListener(listener)
     try {
-      val lines = StreamingIngest.fileSource(spark, inDir, maxFilesPerTrigger = 100)
-      val q = StreamingIngest.parquetSink(Ingest.parse(lines, cfg), outDir, cp).start()
-      try q.processAllAvailable() finally q.stop()
+      drain(spark, tmp)
       // listener events arrive in order: once this job's start is seen,
       // every job of the stream has been seen too
       spark.sparkContext.setJobDescription("listing-spec-marker")
@@ -136,20 +173,53 @@ class StreamingIngestSpec extends AnyFunSuite {
       assert(descriptions.contains("listing-spec-marker"))
       val listing = descriptions.asScala.filter(_.startsWith("Listing leaf files"))
       assert(listing.isEmpty, listing.mkString("; "))
+      assert(sinkRows(tmp) == want)
 
-      val got = spark.read.parquet(outDir).select(expected.columns.map(col).toSeq: _*)
-      assert(want.size == 40)
-      assert(got.collect().map(_.toString).sorted.toSeq == want)
-
-      // raised to maxFilesPerTrigger, and never lowered
+      // raised to the cap, or to Int.MaxValue without one, and never lowered
+      assert(spark.conf.get(key) == Int.MaxValue.toString)
+      spark.conf.set(key, "32")
+      StreamingIngest.fileSource(spark, tmp.resolve("in").toString, maxFilesPerTrigger = Some(100))
       assert(spark.conf.get(key) == "100")
       spark.conf.set(key, "1000")
-      StreamingIngest.fileSource(spark, inDir, maxFilesPerTrigger = 100)
+      StreamingIngest.fileSource(spark, tmp.resolve("in").toString, maxFilesPerTrigger = Some(100))
       assert(spark.conf.get(key) == "1000")
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       spark.conf.set(key, saved)
     }
+  }
+
+  test("cleanSource deletes a stopped drain's last batch only when a restart plans its next one") {
+    val (tmp, first) = backlog(150)
+    drain(spark, tmp)
+    // batch 0 is cleaned while batch 1 is planned, and there is no batch 1
+    assert(inputs(tmp).size == 150)
+    assert(sinkRows(tmp) == first)
+    // a restart with no new file plans no batch and deletes nothing
+    val idle = drain(spark, tmp)
+    assert(idle.recentProgress.forall(_.numInputRows == 0))
+    assert(inputs(tmp).size == 150)
+    // a restart's first batch deletes the earlier batch's files, not its own
+    val late = "access-late.log"
+    java.nio.file.Files.writeString(tmp.resolve("in").resolve(late), goodLine + "\n")
+    val next = rows(Ingest.parse(spark.read.text(tmp.resolve("in").resolve(late).toString), cfg))
+    val q = drain(spark, tmp)
+    assert(q.recentProgress.count(_.numInputRows > 0) == 1)
+    assert(inputs(tmp) == Seq(late))
+    assert(sinkRows(tmp) == (first ++ next).sorted)
+  }
+
+  test("a second file stream in a session compiles no generated class again") {
+    val bare = spark.newSession()
+    bare.conf.unset(StreamingIngest.ArtifactIsolationKey)
+    def compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val (first, _) = backlog(3)
+    drain(bare, first)
+    val (second, want) = backlog(3)
+    val before = compiles
+    drain(bare, second)
+    assert(compiles - before == 0)
+    assert(sinkRows(second) == want)
   }
 
   test("jdbc sink end-to-end against embedded Derby (K1 parity: batch insert + retry loop)") {
@@ -222,8 +292,7 @@ class StreamingIngestSpec extends AnyFunSuite {
     */
   private def restartAfterCrashBeforeCommit(first: SparkSession): java.nio.file.Path = {
     val tmp = java.nio.file.Files.createTempDirectory("graft_restart")
-    val inDir = tmp.resolve("in"); val out = tmp.resolve("out").toString
-    val cp = tmp.resolve("cp")
+    val inDir = tmp.resolve("in"); val cp = tmp.resolve("cp")
     java.nio.file.Files.createDirectories(inDir)
     // the batch parse of the new files, read before the stream: cleanSource
     // deletes the inputs once consumed
@@ -233,26 +302,17 @@ class StreamingIngestSpec extends AnyFunSuite {
           .map(j => s"10.0.$i.$j - - [21/Jul/2022:00:30:43 +0000] \"GET /r$i/$j HTTP/1.1\" 200 $j 0.05\n")
           .mkString + s"$badLine\n").toString
       }
-      Ingest.parse(spark.read.text(files: _*), cfg).collect().map(_.toString).toSeq
-    }
-    def drain(session: SparkSession): Unit = {
-      val lines = StreamingIngest.fileSource(session, inDir.toString, maxFilesPerTrigger = 1)
-      val q = StreamingIngest.parquetSink(Ingest.parse(lines, cfg), out, cp.toString,
-        flushIntervalMs = 100).start()
-      try q.processAllAvailable() finally q.stop()
+      rows(Ingest.parse(spark.read.text(files: _*), cfg))
     }
     val first2 = addFiles(0 until 2)
-    drain(first)
+    drain(first, tmp, maxFilesPerTrigger = Some(1))
     java.nio.file.Files.delete(cp.resolve("commits/1"))
     java.nio.file.Files.deleteIfExists(cp.resolve("commits/.1.crc"))
     val next2 = addFiles(2 until 4)
-    drain(spark)
+    drain(spark, tmp, maxFilesPerTrigger = Some(1))
     val want = (first2 ++ next2).sorted
-    val cols = Ingest.parse(spark.read.text(inDir.toString), cfg).columns.map(col).toSeq
-    val got = spark.read.parquet(out).select(cols: _*)
-      .collect().map(_.toString).toSeq.sorted
     assert(want.size == 12 && want.distinct.size == 12)
-    assert(got == want)
+    assert(sinkRows(tmp) == want)
     assert((0 to 3).forall(b => java.nio.file.Files.exists(cp.resolve(s"commits/$b"))))
     cp
   }
