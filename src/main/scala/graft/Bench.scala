@@ -204,6 +204,10 @@ object Bench {
     // encode/write only), which is the number that moves when parse speed
     // does; production deployments tune trigger intervals so the fixed
     // cost amortizes toward this bound.
+    //
+    // Keep this after the timed catalog and the plan fingerprints:
+    // `fileSource` sets the session's split policy, which
+    // `Tables.loadParallel` reads.
     val (streamLps, streamLpsProc): (Double, Double) = try {
       val tmp = java.nio.file.Files.createTempDirectory("graft_bench_stream")
       val inDir = s"$tmp/in"; val cp = s"$tmp/cp"; val outDir = s"$tmp/out"

@@ -99,6 +99,7 @@ object IngestApp {
 
     opts.getOrElse("mode", "stream") match {
       case "batch" =>
+        StreamingIngest.installLocalSplitPolicy(spark)
         val lines = spark.read.text(need("input")).toDF("value")
         val (good, bad) = Ingest.parseWithDeadLetter(lines, cfg)
         opts.get("dead-letter").foreach(p => bad.write.mode("append").text(p))

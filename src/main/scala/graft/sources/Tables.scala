@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.LongType
 
 /** Loaders for the driver-provided analytical tables
@@ -77,7 +78,7 @@ object Tables {
     // session's own split policy, not a constant: it scales with
     // whatever open-cost the deployment configured.
     if (bytes >= 0 && bytes < conf.filesOpenCostInBytes / 8) df
-    else if (naturalSplits(bytes, files.size, conf, par) >= par) df
+    else if (naturalSplits(spark, bytes, files.size) >= par) df
     else df.repartition(par)
   }
 
@@ -92,27 +93,44 @@ object Tables {
     filesOf(new java.io.File(path.stripPrefix("file:").stripPrefix("//")))
   }
 
-  /** Natural scan split count of a parquet path under the session's
-    * split policy — `FilePartition.maxSplitBytes` re-derived:
-    * splitBytes = min(maxPartitionBytes, max(openCostInBytes,
-    * (totalBytes + nFiles·openCost) / defaultParallelism)), then the
-    * PACKED partition estimate ceil((totalBytes + nFiles·openCost) /
-    * splitBytes) — mirroring `FilePartition.getFilePartitions`' bin
-    * packing, which charges each file openCost and packs multiple small
-    * files into one partition (r20, ADVICE item: the per-file
-    * ceil(len/split) sum over-counted multi-file inputs, skipping the
-    * floor exactly when many small files pinned the scan). Unreadable
-    * paths report "plenty" (no repartition — the safe default).
+  /** Natural scan split count of `nFiles` files of `bytes` in all, under
+    * the session's split policy: Spark's `FilePartition.maxSplitBytes` and
+    * `getFilePartitions` re-derived.
+    *  - Every file is charged `openCostInBytes`:
+    *    padded = bytes + nFiles·openCost.
+    *  - splitBytes = min(maxPartitionBytes, max(openCost,
+    *    padded / minPartitionNum)), where minPartitionNum is
+    *    `spark.sql.files.minPartitionNum`, else
+    *    `spark.sql.leafNodeDefaultParallelism`, else the context's default
+    *    parallelism.
+    *  - When splitBytes is the per-core share, the count is
+    *    minPartitionNum; otherwise it is estimated as
+    *    ceil(padded / splitBytes).
+    *  - Above `spark.sql.files.maxPartitionNum`, Spark packs again at
+    *    ceil(padded / maxPartitionNum) bytes a split.
+    *
+    * For many small files of about equal size this is Spark's count. A file
+    * larger than a split can make Spark's count one lower. Unreadable paths
+    * (`bytes < 0`) report "plenty", so no repartition is added.
     */
-  private def naturalSplits(bytes: Long, nFiles: Long,
-      conf: org.apache.spark.sql.internal.SQLConf, par: Int): Long = {
+  private[sources] def naturalSplits(spark: SparkSession, bytes: Long, nFiles: Long): Long = {
     if (bytes < 0) return Long.MaxValue
-    val maxSplit = conf.filesMaxPartitionBytes
+    val conf = spark.sessionState.conf
     val openCost = conf.filesOpenCostInBytes
+    val minPartitionNum = conf.filesMinPartitionNum
+      .orElse(conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM))
+      .getOrElse(spark.sparkContext.defaultParallelism)
+    val maxSplit = conf.filesMaxPartitionBytes
     val padded = bytes + nFiles * openCost
-    val bytesPerCore = padded / math.max(1, par)
-    val split = math.max(1L, math.min(maxSplit, math.max(openCost, bytesPerCore)))
-    (padded + split - 1) / split
+    def packed(split: Long): Long = (padded + split - 1) / math.max(1L, split)
+    val share = padded / math.max(1, minPartitionNum)
+    val count =
+      if (share > openCost && share < maxSplit) minPartitionNum.toLong
+      else packed(math.min(maxSplit, math.max(openCost, share)))
+    conf.filesMaxPartitionNum match {
+      case Some(max) if count > max => packed((padded + max - 1) / max)
+      case _ => count
+    }
   }
 
   /** Register every table as a temp view (for the SQL surface), at the

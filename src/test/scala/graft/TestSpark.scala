@@ -1,10 +1,73 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test run; 4 workers keep the
   * tests' partitioning independent of the machine.
   */
 object TestSpark {
-  lazy val spark: SparkSession = GraftSession.local("graft-test", cpus = 4)
+  val cpus = 4
+
+  lazy val spark: SparkSession = GraftSession.local("graft-test", cpus = cpus)
+
+  /** Runs `body`, then puts each of `keys` back as it was on the shared
+    * session: its old value, or unset. Suites share the session, so a
+    * setting a test changes must not leak into a later suite.
+    */
+  def restoringConf[T](keys: String*)(body: => T): T = {
+    val set = spark.conf.getAll
+    val saved = keys.map(k => k -> set.get(k))
+    try body
+    finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** Runs `body` with `listener` on the shared context, and returns once the
+    * listener has seen every event of `body`: events arrive in order, so
+    * once a marker job started after `body` is seen, so is all before it.
+    */
+  def listening[T](listener: SparkListener)(body: => T): T = {
+    val sc = spark.sparkContext
+    val marker = s"listening-marker-${java.util.UUID.randomUUID}"
+    val seen = new CountDownLatch(1)
+    val flush = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          seen.countDown()
+    }
+    sc.addSparkListener(listener)
+    sc.addSparkListener(flush)
+    try {
+      val out = body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      if (!seen.await(30, TimeUnit.SECONDS)) throw new AssertionError("listener events did not arrive")
+      out
+    } finally {
+      sc.removeSparkListener(flush)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** Runs `body` and returns its result with, for each stage that read
+    * input meanwhile, the records each of its tasks read.
+    */
+  def inputTaskRecords[T](body: => T): (T, Seq[Seq[Long]]) = {
+    val tasks = new ConcurrentLinkedQueue[(Int, Long)]()
+    val out = listening(new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => tasks.add(e.stageId -> m.inputMetrics.recordsRead))
+    })(body)
+    (out, tasks.asScala.toSeq.groupBy(_._1).values.map(_.map(_._2)).filter(_.sum > 0).toSeq)
+  }
+
+  /** One wave on the shared session's cores: at most one task per core, or
+    * one more task that reads no more than `tail` records.
+    */
+  def oneWave(taskRecords: Seq[Long], tail: Long): Boolean =
+    taskRecords.size <= cpus || (taskRecords.size == cpus + 1 && taskRecords.min <= tail)
 }

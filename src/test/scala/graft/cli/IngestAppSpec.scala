@@ -4,13 +4,21 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.functions.sum
+import org.apache.spark.sql.functions.{col, sum}
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.config.GraftConfig
+import graft.pipeline.Ingest
+import graft.streaming.StreamingIngest
 
 class IngestAppSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark // shared session; IngestApp getOrCreate reuses it
+
+  // file reads set the shared session's split policy
+  override def withFixture(test: NoArgTest): Outcome =
+    TestSpark.restoringConf(StreamingIngest.OpenCostKey)(super.withFixture(test))
 
   test("batch mode: yaml config → parse → parquet + dead letter") {
     val tmp = Files.createTempDirectory("graft_cli").toString
@@ -46,6 +54,44 @@ class IngestAppSpec extends AnyFunSuite {
     assert(Files.isDirectory(Paths.get(s"$tmp/out/insert_month=202207")))
     val dead = spark.read.text(s"$tmp/dead").collect().map(_.getString(0))
     assert(dead.toSeq == Seq("garbage line"))
+  }
+
+  test("batch mode reads a backlog of small rotated files in one wave, rows unchanged") {
+    val tmp = Files.createTempDirectory("graft_cli_wave").toString
+    Files.writeString(Paths.get(s"$tmp/cfg.yaml"),
+      """nginx:
+        |  log_format: '$remote_addr - $remote_user [$time_local] "$request" $status $bytes_sent'
+        |  log_time_format: 02/Jan/2006:15:04:05 -0700
+        |scheme:
+        |  logs_table: access_log
+        |  columns:
+        |    remote_addr: remote_addr
+        |    time_local: time_local
+        |    status: status
+        |    bytes_sent: bytes_sent
+        |""".stripMargin)
+    Files.createDirectories(Paths.get(s"$tmp/in"))
+    (0 until 150).foreach { i =>
+      Files.writeString(Paths.get(f"$tmp/in/access.log.$i%03d"),
+        s"10.0.${i / 256}.${i % 256} - - [21/Jul/2022:00:30:43 +0000] \"GET /f$i HTTP/1.1\" 200 $i\n" +
+          "garbage line\n")
+    }
+    val cfg = GraftConfig.fromYamlFile(s"$tmp/cfg.yaml").fold(sys.error, identity)
+    // the parse under Spark's own policy: a 4 MB open cost, 32 files a split
+    spark.conf.unset(StreamingIngest.OpenCostKey)
+    val parsed = Ingest.parse(spark.read.text(s"$tmp/in"), cfg)
+    assert(spark.read.text(s"$tmp/in").rdd.getNumPartitions == 5)
+    val want = parsed.collect().map(_.toString).toSeq.sorted
+
+    val (_, stages) = TestSpark.inputTaskRecords(IngestApp.main(Array(
+      "--config", s"$tmp/cfg.yaml", "--mode", "batch",
+      "--input", s"$tmp/in", "--sink", "parquet", "--output", s"$tmp/out")))
+    assert(stages.nonEmpty)
+    stages.foreach(t => assert(TestSpark.oneWave(t, tail = 4 * 2), t))
+    val got = spark.read.parquet(s"$tmp/out").select(parsed.columns.map(col).toSeq: _*)
+      .collect().map(_.toString).toSeq.sorted
+    assert(got.size == 150)
+    assert(got == want)
   }
 
   test("stream mode: --dead-letter with a listener source fails fast, no query started") {

@@ -10,6 +10,7 @@ import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
 import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -22,6 +23,10 @@ import graft.pipeline.Ingest
   */
 class LocalCheckpointFileManagerSpec extends AnyFunSuite {
   import LocalCheckpointFileManager.{ClassName, ConfKey}
+
+  // a file stream sets the shared session's split policy
+  override def withFixture(test: NoArgTest): Outcome =
+    TestSpark.restoringConf(StreamingIngest.OpenCostKey)(super.withFixture(test))
 
   private def dir(): JPath = Files.createTempDirectory("graft_ckpt")
   private def manager(d: JPath) =

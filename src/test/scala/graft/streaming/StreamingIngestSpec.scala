@@ -7,6 +7,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -19,6 +20,10 @@ import graft.pipeline.Ingest
 class StreamingIngestSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  // every file stream sets the shared session's split policy
+  override def withFixture(test: NoArgTest): Outcome =
+    TestSpark.restoringConf(StreamingIngest.OpenCostKey)(super.withFixture(test))
 
   val cfg = GraftConfig(
     logFormat = "$remote_addr - $remote_user [$time_local] \"$request\" $status $bytes_sent $request_time",
@@ -142,10 +147,27 @@ class StreamingIngestSpec extends AnyFunSuite {
 
   test("file source drains a backlog of more than the old 100-file cap in one trigger") {
     val (tmp, want) = backlog(150)
-    val q = drain(spark, tmp)
+    spark.conf.unset(StreamingIngest.OpenCostKey)
+    val (q, stages) = TestSpark.inputTaskRecords(drain(spark, tmp))
     assert(q.recentProgress.count(_.numInputRows > 0) == 1)
     assert(want.size == 150)
     assert(sinkRows(tmp) == want)
+    assert(spark.conf.get(StreamingIngest.OpenCostKey) == StreamingIngest.LocalOpenCostBytes.toString)
+    // one wave: a task per core, or one more that reads a few files of 3
+    // lines; Spark's 4 MB open cost packs the 150 files into 5 splits
+    assert(stages.size == 1, stages)
+    assert(stages.head.sum == 150 * 3)
+    assert(TestSpark.oneWave(stages.head, tail = 4 * 3), stages.head)
+  }
+
+  test("file source keeps a split policy the session set itself") {
+    val (tmp, want) = backlog(150)
+    // Spark's default, set explicitly: the drain packs 32 files a split
+    spark.conf.set(StreamingIngest.OpenCostKey, (4L << 20).toString)
+    val (_, stages) = TestSpark.inputTaskRecords(drain(spark, tmp))
+    assert(spark.conf.get(StreamingIngest.OpenCostKey) == (4L << 20).toString)
+    assert(sinkRows(tmp) == want)
+    assert(stages.map(_.sorted) == Seq(Seq(22, 32, 32, 32, 32).map(_ * 3L)), stages)
   }
 
   test("file source lists a batch of more than 32 files on the driver: no per-file listing job") {
@@ -159,18 +181,8 @@ class StreamingIngestSpec extends AnyFunSuite {
           .foreach(descriptions.add)
     }
     spark.conf.set(key, "32") // Spark's default
-    spark.sparkContext.addSparkListener(listener)
     try {
-      drain(spark, tmp)
-      // listener events arrive in order: once this job's start is seen,
-      // every job of the stream has been seen too
-      spark.sparkContext.setJobDescription("listing-spec-marker")
-      try spark.sparkContext.parallelize(Seq(1)).count()
-      finally spark.sparkContext.setJobDescription(null)
-      val deadline = System.currentTimeMillis() + 30000
-      while (!descriptions.contains("listing-spec-marker") &&
-        System.currentTimeMillis() < deadline) Thread.sleep(50)
-      assert(descriptions.contains("listing-spec-marker"))
+      TestSpark.listening(listener)(drain(spark, tmp))
       val listing = descriptions.asScala.filter(_.startsWith("Listing leaf files"))
       assert(listing.isEmpty, listing.mkString("; "))
       assert(sinkRows(tmp) == want)
@@ -183,10 +195,7 @@ class StreamingIngestSpec extends AnyFunSuite {
       spark.conf.set(key, "1000")
       StreamingIngest.fileSource(spark, tmp.resolve("in").toString, maxFilesPerTrigger = Some(100))
       assert(spark.conf.get(key) == "1000")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.conf.set(key, saved)
-    }
+    } finally spark.conf.set(key, saved)
   }
 
   test("cleanSource deletes a stopped drain's last batch only when a restart plans its next one") {
