@@ -105,6 +105,7 @@ object IngestApp {
         opts.get("dead-letter").foreach(p => bad.write.mode("append").text(p))
         opts.getOrElse("sink", "parquet") match {
           case "parquet" =>
+            StreamingIngest.installInt64Timestamps(spark)
             Ingest.withTableLayout(good).write.mode("append")
               .partitionBy(Ingest.PartitionColumn).parquet(need("output"))
           case "jdbc" =>

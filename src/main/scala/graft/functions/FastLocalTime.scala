@@ -5,16 +5,19 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{DataType, StringType, TimestampType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Specialized parser for the nginx `time_local` layout
   * `dd/MMM/yyyy:HH:mm:ss Z` (e.g. `21/Jul/2022:00:30:43 +0000`) — the hot
   * cast on every ingested access-log line. Byte-positional field extraction
-  * plus a strict calendar check (`LocalDate.of` — same proleptic rules as
-  * the STRICT resolver) replaces the generic `DateTimeFormatter` walk;
-  * `try_to_timestamp` semantics are preserved: NULL on any mismatch, never
-  * an exception. Pinned against `try_to_timestamp` by the randomized
-  * property spec (`ParseScannerSpec`).
+  * plus a strict calendar check (the proleptic Gregorian rules of
+  * `LocalDate.of` and the STRICT resolver) replaces the generic
+  * `DateTimeFormatter` walk; `try_to_timestamp` semantics are preserved:
+  * NULL on any mismatch, never an exception. Pinned against
+  * `try_to_timestamp` by the randomized property spec (`ParseScannerSpec`).
+  * The ingest kernel ([[TypedParse]]) calls the same [[FastLocalTime.parseMicros]]
+  * on the line's bytes in place.
   *
   * Deliberate strictness deltas from the generic formatter, both outside
   * any real log line: a >4-digit year (java.time would demand a '+' prefix
@@ -78,10 +81,14 @@ object FastLocalTime {
     * timestamp can never be Long.MinValue micros — Spark's own range stops
     * at year 294xxx).
     */
-  def parseMicros(s: UTF8String): Long = {
-    val b = s.getBytes
+  def parseMicros(s: UTF8String): Long =
+    parseMicros(s.getBaseObject, s.getBaseOffset, s.numBytes)
+
+  /** [[parseMicros]] over the `len` bytes at `base` + `off`, read in place. */
+  def parseMicros(base: AnyRef, off: Long, len: Int): Long = {
+    def b(i: Int): Byte = Platform.getByte(base, off + i)
     // dd/MMM/yyyy:HH:mm:ss +HHMM → fixed length 26
-    if (b.length != 26) return Long.MinValue
+    if (len != 26) return Long.MinValue
     if (b(2) != '/' || b(6) != '/' || b(11) != ':' || b(14) != ':' ||
       b(17) != ':' || b(20) != ' ') return Long.MinValue
 
@@ -122,9 +129,25 @@ object FastLocalTime {
       return Long.MinValue
     val offsetSec = sign * (oh * 3600 + om * 60)
 
-    val epochDay =
-      try java.time.LocalDate.of(year, month, day).toEpochDay
-      catch { case _: java.time.DateTimeException => return Long.MinValue }
-    ((epochDay * 86400L + hh * 3600L + mm * 60L + ss) - offsetSec) * 1000000L
+    val leap = (year & 3) == 0 && (year % 100 != 0 || year % 400 == 0)
+    val monthDays = month match {
+      case 2              => if (leap) 29 else 28
+      case 4 | 6 | 9 | 11 => 30
+      case _              => 31
+    }
+    if (day < 1 || day > monthDays) return Long.MinValue
+    ((epochDay(year, month, day, leap) * 86400L + hh * 3600L + mm * 60L + ss) -
+      offsetSec) * 1000000L
+  }
+
+  /** `LocalDate.of(year, month, day).toEpochDay` for a valid date of a
+    * positive year, without the allocation.
+    */
+  private def epochDay(year: Int, month: Int, day: Int, leap: Boolean): Long = {
+    val y = year.toLong
+    var total = 365 * y + (y + 3) / 4 - (y + 99) / 100 + (y + 399) / 400 +
+      (367 * month - 362) / 12 + day - 1
+    if (month > 2) total -= (if (leap) 1 else 2)
+    total - 719528 // days from 0000-01-01 to 1970-01-01
   }
 }

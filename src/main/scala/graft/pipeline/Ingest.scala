@@ -1,11 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.config.GraftConfig
 import graft.format.LogTemplate
-import graft.functions.{Casts, OptimizerFence, ParseLogLine, ParseLogTemplate}
+import graft.functions.{Casts, LineSplit, OptimizerFence, TypedField, TypedParse}
 
 /** Batch/streaming-agnostic ingest transform: one `value: String` column in
   * (as produced by `spark.read.text`, the Kafka source, or the syslog
@@ -15,34 +15,28 @@ import graft.functions.{Casts, OptimizerFence, ParseLogLine, ParseLogTemplate}
   * per-partition loop — strictly tighter than the reference's channel-hop
   * pipeline, see SURVEY §4.1):
   *
-  *   Project(groups = fence(parse_log_line(value))) -- T2: ONE regex pass/line
-  *   Project(cast chain × groups[i],                -- T3/T4/T5 typed columns
-  *           valid = fence(AND(valid_i)))           -- T6 validity, same pass
-  *   Filter(valid)                                  -- T6 malformed-row drop
-  *   Project(drop valid)
+  *   Project(__typed = fence(typed_parse(value)))   -- T2-T5: ONE pass/line
+  *   Project(__typed.col_i [then a Catalyst step],  -- typed columns
+  *           __valid = fence(__typed.__valid AND step validity))
+  *   Filter(__valid)                                -- T6 malformed-row drop
+  *   Project(drop __valid)
   *
   * Two custom expressions do the heavy lifting:
-  *   - [[graft.functions.ParseLogLine]] (codegen'd): one regex execution
-  *     per line; the built-in alternative (RLIKE + N×regexp_extract) runs
-  *     the full regex N+1 times per line;
-  *   - [[graft.functions.OptimizerFence]] around the parse result and the
+  *   - [[graft.functions.TypedParse]] (codegen'd): one scan of the line's
+  *     bytes, in place, straight into every target column already cast
+  *     (`Casts`' byte-level [[graft.functions.FieldCast]]s) plus the row's
+  *     validity. The only Catalyst steps left are the casts with no
+  *     byte-level form: Java-pattern timestamp and date layouts and
+  *     `EmptyTimePolicy.Now`;
+  *   - [[graft.functions.OptimizerFence]] around the kernel and the
   *     validity flag: without it, predicate pushdown substitutes the
-  *     aliases back into the filters and re-evaluates the regex once per
+  *     aliases back into the filters and re-evaluates the parse once per
   *     validity conjunct (measured 10× ingest slowdown at sf0.1).
   *
   * Reference trace: `pkg/handler/handler.go:20-39` (parse → project →
   * cast per row), drop-on-error at `internal/services/filelog/impl.go:179-184`.
   */
 object Ingest {
-
-  /** The one-pass parse column: the byte-scanner fast path when every
-    * delimiter is ASCII (always true for real nginx formats), else the
-    * compiled-regex expression — bit-identical results either way
-    * (`ParseScannerSpec` pins it).
-    */
-  private def parseCol(tpl: LogTemplate): Column =
-    if (tpl.scannable) ParseLogTemplate(col("value"), tpl.format)
-    else ParseLogLine(col("value"), tpl.regex)
 
   /** Full pipeline: returns only the valid, typed rows in the target
     * column order. Missing scheme field → plan-time error (the reference
@@ -57,37 +51,44 @@ object Ingest {
   /** Pipeline with dead-letter split: (valid typed rows, raw rejected
     * lines). Delivers the reference's TODO "saving corrupted files for
     * manual processing" (`/root/reference/README.md:30`).
+    *
+    * The line splits with the byte scanner when every delimiter of the
+    * format is ASCII (always true for real nginx formats), else with the
+    * compiled regex; both feed the same casts, with the same results
+    * (`ParseScannerSpec` pins it).
     */
   def parseWithDeadLetter(df: DataFrame, cfg: GraftConfig): (DataFrame, DataFrame) = {
     val tpl = LogTemplate.compile(cfg.logFormat)
-    val targets = cfg.orderedColumns
-    targets.foreach { case (colName, field) =>
+    val targets = cfg.orderedColumns.map { case (colName, field) =>
       require(tpl.groupIndex(field) > 0,
         s"field '$field' (column '$colName') does not exist in log format")
+      (colName, tpl.groupIndex(field) - 1, Casts.planFor(field, cfg))
     }
+    val split =
+      if (tpl.scannable) LineSplit.Scan(tpl.format) else LineSplit.Regex(tpl.regex)
+    val kernel = TypedParse(col("value"), split,
+      targets.map { case (name, group, plan) => TypedField(name, group, plan.cast) },
+      cfg.removeHyphen)
 
-    // one parse execution per line; both fences keep the Project
+    // one kernel execution per line; both fences keep the Project
     // boundaries intact so neither the parse nor the validity conjuncts
     // get substituted into downstream filters (see class doc)
-    val withGroups = df.withColumn("__groups", OptimizerFence(parseCol(tpl)))
-    val fieldsOf: Map[String, Column] = tpl.fields.zipWithIndex.map {
-      case (f, i) => f -> col("__groups").getItem(i)
-    }.toMap
-
-    val typed = targets.map { case (colName, field) =>
-      colName -> Casts.castFor(field, fieldsOf(field), cfg)
+    val withTyped = df.withColumn("__typed", OptimizerFence(kernel))
+    val typed = targets.map { case (name, _, plan) =>
+      name -> plan.finish(col("__typed").getField(name))
     }
-    val allValid = col("__groups").isNotNull &&
-      typed.map(_._2.valid).reduce(_ && _)
+    val allValid = typed.foldLeft(col("__typed").getField(TypedParse.ValidField)) {
+      case (v, (_, tc)) => v && tc.valid
+    }
 
-    val good = withGroups
+    val good = withTyped
       .select(typed.map { case (name, tc) => tc.col.as(name) } :+
         OptimizerFence(allValid).as("__valid"): _*)
       .filter(col("__valid"))
       .drop("__valid")
 
-    val bad = withGroups
-      .filter(OptimizerFence(col("__groups").isNull || !typed.map(_._2.valid).reduce(_ && _)))
+    val bad = withTyped
+      .filter(OptimizerFence(!allValid))
       .select(col("value"))
     (good, bad)
   }

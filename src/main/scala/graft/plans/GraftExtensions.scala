@@ -149,13 +149,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       info("parse_log_template", "parse_log_template(line, log_format) - byte-scanner log parse: all fields as array<string>, NULL on mismatch (≡ parse_log_line on the compiled regex)"),
       (args: Seq[Expression]) =>
         graft.functions.ParseLogTemplate(args(0), strLit(args(1), "parse_log_template"))),
-    (FunctionIdentifier("digit_check"),
-      info("digit_check", "digit_check(s, allow_sign) - strconv digit strictness as a byte loop: RLIKE '^[+-]?[0-9]+$' / '^[0-9]+$' semantics incl. one trailing \\n/\\r\\n/\\r, EXCEPT the Unicode terminators (NEL/LS/PS) Java-regex $ also honors, which fail here (the paired numeric cast rejects them anyway)"),
-      (args: Seq[Expression]) => graft.functions.DigitCheck(args(0), args(1) match {
-        case Literal(b: Boolean, org.apache.spark.sql.types.BooleanType) => b
-        case other => throw new IllegalArgumentException(
-          s"digit_check expects a boolean literal, got $other")
-      })),
     (FunctionIdentifier("fast_local_time"),
       info("fast_local_time", "fast_local_time(s) - nginx time_local 'dd/MMM/yyyy:HH:mm:ss Z' parsed byte-positionally (≡ try_to_timestamp with that pattern)"),
       (args: Seq[Expression]) => graft.functions.FastLocalTime(args(0))),

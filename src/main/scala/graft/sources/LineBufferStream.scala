@@ -1,8 +1,9 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.AtomicBoolean
 
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -43,7 +44,8 @@ private[sources] class LineBufferMicroBatchStream(
 
   private val lock = new Object
   private var baseIndex = 0L
-  private val buffer = ArrayBuffer.empty[String]
+  // committed lines leave from the front without shifting the backlog
+  private val buffer = mutable.ArrayDeque.empty[String]
   private val started = new AtomicBoolean(false)
   @volatile private var running = List.empty[AutoCloseable]
 
@@ -83,7 +85,7 @@ private[sources] class LineBufferMicroBatchStream(
     val e = end.asInstanceOf[LineOffset].index
     lock.synchronized {
       val drop = math.min(buffer.size.toLong, math.max(0L, e - baseIndex)).toInt
-      buffer.remove(0, drop)
+      buffer.dropInPlace(drop)
       baseIndex += drop
     }
   }
@@ -120,17 +122,31 @@ private[sources] abstract class LineBufferSourceProvider(
     }
 }
 
-private[sources] case class LineSlicePartition(lines: Array[String])
+/** A batch's lines as they ship to the task: one UTF-8 blob, line `i`
+  * being bytes `offsets(i) until offsets(i + 1)`. One array serializes in
+  * one copy, where an array of strings serializes string by string.
+  */
+private[sources] final class LineSlicePartition(val blob: Array[Byte], val offsets: Array[Int])
     extends InputPartition
+
+private[sources] object LineSlicePartition {
+  def apply(lines: Array[String]): LineSlicePartition = {
+    val bytes = lines.map(_.getBytes(UTF_8))
+    val offsets = bytes.scanLeft(0)((at, b) => Math.addExact(at, b.length))
+    val blob = new Array[Byte](offsets.last)
+    bytes.indices.foreach(i => System.arraycopy(bytes(i), 0, blob, offsets(i), bytes(i).length))
+    new LineSlicePartition(blob, offsets)
+  }
+}
 
 private[sources] class LineSliceReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
-      private val lines = partition.asInstanceOf[LineSlicePartition].lines
+      private val p = partition.asInstanceOf[LineSlicePartition]
       private var i = -1
-      override def next(): Boolean = { i += 1; i < lines.length }
-      override def get(): InternalRow =
-        new GenericInternalRow(Array[Any](UTF8String.fromString(lines(i))))
+      override def next(): Boolean = { i += 1; i < p.offsets.length - 1 }
+      override def get(): InternalRow = new GenericInternalRow(Array[Any](
+        UTF8String.fromBytes(p.blob, p.offsets(i), p.offsets(i + 1) - p.offsets(i))))
       override def close(): Unit = ()
     }
 }

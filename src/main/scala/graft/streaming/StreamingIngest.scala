@@ -87,6 +87,26 @@ object StreamingIngest {
   private[graft] def installLocalSplitPolicy(spark: SparkSession): Unit =
     if (!spark.conf.getAll.contains(OpenCostKey)) spark.conf.set(OpenCostKey, LocalOpenCostBytes)
 
+  /** The parquet type Spark writes `TimestampType` values as. */
+  val OutputTimestampTypeKey = "spark.sql.parquet.outputTimestampType"
+
+  /** Sets [[OutputTimestampTypeKey]] to `TIMESTAMP_MICROS` on `spark` unless
+    * the session has a value of its own, tested by `getAll` as in
+    * [[installSessionSettings]]. The ingest table's `time_local` then
+    * becomes INT64 `TIMESTAMP(MICROS, isAdjustedToUTC=true)` instead of
+    * Spark's legacy INT96, which the Parquet spec deprecates and whose
+    * writer hashes every 12-byte value into a dictionary: in three probe
+    * runs of a 150-file drain on 4 cores the switch cut drain CPU by
+    * 11–16%. Spark reads a directory of both kinds as one timestamp
+    * column. Only the ingest sinks install it, not [[SessionSettings]]:
+    * DuckDB reads an INT64 UTC timestamp as `TIMESTAMP WITH TIME ZONE`, so
+    * parquet that is compared with DuckDB's naive `TIMESTAMP` (the
+    * `Verify` dumps) stays INT96.
+    */
+  private[graft] def installInt64Timestamps(spark: SparkSession): Unit =
+    if (!spark.conf.getAll.contains(OutputTimestampTypeKey))
+      spark.conf.set(OutputTimestampTypeKey, "TIMESTAMP_MICROS")
+
   /** S1: rotating-file-scan parity. Spark's file source does
     * discover-per-trigger with exactly-once bookkeeping; `cleanSource`
     * archive/delete reproduces the backup/delete policy
@@ -341,13 +361,15 @@ object StreamingIngest {
 
   /** K4-parity parquet table sink: [[Ingest.withTableLayout]] (derived
     * `insert_date`, month partitioning), trigger = flush-interval parity
-    * (default 2000 ms, `cmd/filelog/main.go:82-88`).
+    * (default 2000 ms, `cmd/filelog/main.go:82-88`), timestamps as INT64
+    * ([[installInt64Timestamps]]).
     */
   def parquetSink(
       parsed: DataFrame, path: String, checkpoint: String,
       timeCol: String = "time_local",
       flushIntervalMs: Long = 2000L): DataStreamWriter[org.apache.spark.sql.Row] = {
     installSessionSettings(parsed.sparkSession)
+    installInt64Timestamps(parsed.sparkSession)
     Ingest.withTableLayout(parsed, timeCol)
       .writeStream
       .format("parquet")

@@ -70,4 +70,28 @@ object TestSpark {
     */
   def oneWave(taskRecords: Seq[Long], tail: Long): Boolean =
     taskRecords.size <= cpus || (taskRecords.size == cpus + 1 && taskRecords.min <= tail)
+
+  /** How each parquet file under `dir` stores `column`: its physical type,
+    * and for a timestamp annotation its unit and UTC flag, e.g.
+    * `INT64 TIMESTAMP(MICROS,true)` or `INT96`.
+    */
+  def parquetTypes(dir: java.nio.file.Path, column: String): Seq[String] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
+    val files = java.nio.file.Files.walk(dir).iterator.asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+    files.map { f =>
+      val in = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toUri),
+        new org.apache.hadoop.conf.Configuration())
+      val reader = ParquetFileReader.open(in)
+      try {
+        val t = reader.getFooter.getFileMetaData.getSchema.getType(Seq(column): _*).asPrimitiveType
+        t.getPrimitiveTypeName.toString + (t.getLogicalTypeAnnotation match {
+          case ts: TimestampLogicalTypeAnnotation => s" TIMESTAMP(${ts.getUnit},${ts.isAdjustedToUTC})"
+          case _                                  => ""
+        })
+      } finally reader.close()
+    }
+  }
 }

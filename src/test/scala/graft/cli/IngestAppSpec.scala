@@ -16,9 +16,11 @@ import graft.streaming.StreamingIngest
 class IngestAppSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark // shared session; IngestApp getOrCreate reuses it
 
-  // file reads set the shared session's split policy
+  // file reads set the shared session's split policy, parquet writes its
+  // timestamp type
   override def withFixture(test: NoArgTest): Outcome =
-    TestSpark.restoringConf(StreamingIngest.OpenCostKey)(super.withFixture(test))
+    TestSpark.restoringConf(StreamingIngest.OpenCostKey,
+      StreamingIngest.OutputTimestampTypeKey)(super.withFixture(test))
 
   test("batch mode: yaml config → parse → parquet + dead letter") {
     val tmp = Files.createTempDirectory("graft_cli").toString
@@ -52,6 +54,9 @@ class IngestAppSpec extends AnyFunSuite {
     assert(out.where(out("status") === 404).count() == 1)
     // the stream parquet sink's layout: month partitions of insert_date
     assert(Files.isDirectory(Paths.get(s"$tmp/out/insert_month=202207")))
+    // and its timestamp type
+    val types = TestSpark.parquetTypes(Paths.get(s"$tmp/out"), "time_local")
+    assert(types.nonEmpty && types.forall(_ == "INT64 TIMESTAMP(MICROS,true)"))
     val dead = spark.read.text(s"$tmp/dead").collect().map(_.getString(0))
     assert(dead.toSeq == Seq("garbage line"))
   }

@@ -8,9 +8,10 @@ import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `value RLIKE '^[0-9]+$'` (unsigned) / `'^[+-]?[0-9]+$'` (signed) as a
-  * branch-free byte loop — the strconv strictness check on the ingest hot
-  * path without a regex Matcher allocation per value. Pinned equivalent to
-  * the RLIKE forms by `ParseScannerSpec`.
+  * byte loop — the strconv strictness check of the per-field Catalyst
+  * chains ([[CastChain]]) the ingest kernel replaced, kept with them as the
+  * specs' reference. Pinned equivalent to the RLIKE forms by
+  * `ParseScannerSpec`.
   *
   * ASCII-safe on UTF-8 bytes: digit/sign bytes never occur inside
   * multi-byte sequences, and any multi-byte character fails the check

@@ -173,4 +173,30 @@ class ParseScannerSpec extends AnyFunSuite {
         org.apache.spark.sql.types.StringType).map(_.toString)
     assert(tpl.fields.zip(got).toMap == viaTpl)
   }
+
+  test("typed kernel: scanner split ≡ regex split on randomized templates and lines") {
+    val rnd = new scala.util.Random(4242)
+    val litChars = " -[]{}()\"|:./,*+?^"
+    (1 to 25).foreach { t =>
+      val f = (0 until 1 + rnd.nextInt(6)).map(i =>
+        if (i % 2 == t % 2) "$f" + i else litChars(rnd.nextInt(litChars.length)).toString).mkString
+      val tpl = LogTemplate.compile(if (f.contains("$f")) f else f + "$f9")
+      val fields = tpl.fields.indices.map(g => TypedField(s"g$g", g, FieldCast.Str))
+      val lines = (1 to 40).map { _ =>
+        if (rnd.nextInt(10) == 0) null
+        else tpl.fields.foldLeft(tpl.format) { (acc, v) =>
+          acc.replace("$" + v, (0 until rnd.nextInt(5)).map(_ => "a-Z9é "(rnd.nextInt(6))).mkString)
+        }
+      }
+      val df = lines.toDF("value").repartition(2)
+      def run(split: LineSplit) = df.select(col("value"),
+        TypedParse(col("value"), split, fields, removeHyphen = true).as("t")).collect()
+        .map { r =>
+          // the fields of a rejected line are unspecified
+          val t = r.getStruct(1)
+          r.getString(0) -> Some(t.toSeq).filter(_ => t.getBoolean(fields.size))
+        }.toMap
+      assert(run(LineSplit.Scan(tpl.format)) == run(LineSplit.Regex(tpl.regex)), s"format=${tpl.format}")
+    }
+  }
 }

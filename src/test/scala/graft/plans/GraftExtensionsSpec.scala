@@ -59,7 +59,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(r.getBoolean(1)) // 'a b' at positions 1 and 3 hash identically
   }
 
-  test("parse_log_template, digit_check, fast_local_time from SQL") {
+  test("parse_log_template, fast_local_time from SQL") {
     val r = spark.sql(
       """SELECT parse_log_template('10.0.0.1 GET 200', '$ip $method $status') AS g""")
       .selectExpr("g[0]", "g[1]", "g[2]").collect().head
@@ -67,10 +67,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
     val miss = spark.sql(
       """SELECT parse_log_template('a|b', '$x $y') AS g""").collect().head
     assert(miss.isNullAt(0))
-    val d = spark.sql(
-      "SELECT digit_check('123', false) AS u, digit_check('-5', false) AS n, " +
-        "digit_check('-5', true) AS s").collect().head
-    assert(d.getBoolean(0) && !d.getBoolean(1) && d.getBoolean(2))
     val t = spark.sql(
       "SELECT CAST(fast_local_time('21/Jul/2022:00:30:43 +0000') AS STRING) AS ts, " +
         "fast_local_time('garbage') AS bad").collect().head

@@ -24,9 +24,11 @@ import graft.pipeline.Ingest
 class LocalCheckpointFileManagerSpec extends AnyFunSuite {
   import LocalCheckpointFileManager.{ClassName, ConfKey}
 
-  // a file stream sets the shared session's split policy
+  // a file stream sets the shared session's split policy, a parquet sink
+  // its timestamp type
   override def withFixture(test: NoArgTest): Outcome =
-    TestSpark.restoringConf(StreamingIngest.OpenCostKey)(super.withFixture(test))
+    TestSpark.restoringConf(StreamingIngest.OpenCostKey,
+      StreamingIngest.OutputTimestampTypeKey)(super.withFixture(test))
 
   private def dir(): JPath = Files.createTempDirectory("graft_ckpt")
   private def manager(d: JPath) =

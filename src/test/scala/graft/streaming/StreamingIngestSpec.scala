@@ -21,9 +21,11 @@ class StreamingIngestSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  // every file stream sets the shared session's split policy
+  // every file stream sets the shared session's split policy, and every
+  // parquet sink its timestamp type
   override def withFixture(test: NoArgTest): Outcome =
-    TestSpark.restoringConf(StreamingIngest.OpenCostKey)(super.withFixture(test))
+    TestSpark.restoringConf(StreamingIngest.OpenCostKey,
+      StreamingIngest.OutputTimestampTypeKey)(super.withFixture(test))
 
   val cfg = GraftConfig(
     logFormat = "$remote_addr - $remote_user [$time_local] \"$request\" $status $bytes_sent $request_time",
@@ -552,5 +554,40 @@ class StreamingIngestSpec extends AnyFunSuite {
       q.stop()
       assert(probe() == 503)
     } finally server.stop(0)
+  }
+
+  test("parquet sink: time_local as INT64 TIMESTAMP(MICROS, UTC); a session value wins; " +
+    "a sink resumed from INT96 files reads as one timestamp column") {
+    val (tmp, first) = backlog(3)
+    val key = StreamingIngest.OutputTimestampTypeKey
+    // a sink written before INT64: Spark's legacy default, set explicitly
+    spark.conf.set(key, "INT96")
+    drain(spark, tmp)
+    val old = TestSpark.parquetTypes(tmp.resolve("out"), "time_local")
+    assert(old.nonEmpty && old.forall(_ == "INT96"))
+    assert(spark.conf.get(key) == "INT96")
+    spark.conf.unset(key)
+    // the same sink resumes from its checkpoint with new files
+    val late = (0 until 2).map { i =>
+      java.nio.file.Files.writeString(tmp.resolve("in").resolve(s"late-$i.log"),
+        s"10.1.0.$i - - [01/Aug/2022:10:00:0$i -0700] \"GET /l$i HTTP/1.1\" 200 $i 0.5\n").toString
+    }
+    val second = rows(Ingest.parse(spark.read.text(late: _*), cfg))
+    drain(spark, tmp)
+    val all = TestSpark.parquetTypes(tmp.resolve("out"), "time_local")
+    assert(all.count(_ == "INT96") == old.size)
+    assert(all.count(_ == "INT64 TIMESTAMP(MICROS,true)") == all.size - old.size && all.size > old.size)
+    assert(spark.read.parquet(tmp.resolve("out").toString).schema("time_local").dataType ==
+      org.apache.spark.sql.types.TimestampType)
+    assert(sinkRows(tmp) == (first ++ second).sorted)
+  }
+
+  test("a session that never built a parquet sink still writes INT96 timestamps") {
+    val fresh = spark.newSession()
+    assert(!fresh.conf.getAll.contains(StreamingIngest.OutputTimestampTypeKey))
+    val out = java.nio.file.Files.createTempDirectory("graft_int96").resolve("t")
+    fresh.range(2).select(current_timestamp().as("time_local")).write.parquet(out.toString)
+    val types = TestSpark.parquetTypes(out, "time_local")
+    assert(types.nonEmpty && types.forall(_ == "INT96"))
   }
 }
