@@ -58,7 +58,7 @@ object Dev {
       println(f"[parse-rate] BEST ${rates.max}%,.0f lines/s/core")
     }
     case "functions" :: Nil =>
-      val fns = new plans.GraftExtensions().functions
+      val fns = plans.GraftExtensions.functions
         .map { case (id, inf, _) => (id.funcName, inf.getUsage) }
         .sortBy(_._1)
       fns.foreach { case (n, u) => println(s"$n\t$u") }
@@ -92,12 +92,6 @@ object Dev {
     val sfDir = pos.lift(0).getOrElse(s"$testdata/sf0.01")
     val ns = names(pos.lift(1).getOrElse("all"))
     withSession("plan") { spark =>
-      // Bench's session precondition, reproduced: the top-k-per-key rule +
-      // strategy are installed as a SIDE EFFECT of building q39/q43/t09/…
-      // during Bench's warmup, so every Bench fingerprint sees them.
-      // Without this, entries that PLAN onto the operator (q09, s01, s03)
-      // fingerprint the stock Sort/Window plan here.
-      plans.TopKPerKey.install(spark)
       val rows = PlanFingerprint.catalog(spark, sfDir, ns)
       rows.foreach { case (name, h, _) => println(s"[plan] $name $h") }
       flags.get("--write").foreach { f =>

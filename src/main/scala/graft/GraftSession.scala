@@ -18,7 +18,7 @@ object GraftSession {
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** The settings every session shares, on any master. */
-  def builder(appName: String, master: String): SparkSession.Builder =
+  private def builder(appName: String, master: String): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .appName(appName)
@@ -51,14 +51,26 @@ object GraftSession {
       .orElse(new SparkConf().getOption(key))
       .getOrElse(value)
 
+  /** The running session, or a new one on `master` with the shared
+    * settings.
+    */
+  def getOrCreate(appName: String, master: String): SparkSession =
+    create(builder(appName, master))
+
+  /** `settings.getOrCreate()` with the engine's SQL surface installed. */
+  private def create(settings: SparkSession.Builder): SparkSession = {
+    val spark = settings.getOrCreate()
+    graft.plans.GraftExtensions.install(spark)
+    spark
+  }
+
   /** A `local[cpus]` session with one shuffle partition per worker, no
     * UI and WARN logging.
     */
   def local(appName: String, cpus: Int = GraftSession.cpus): SparkSession = {
-    val spark = builder(appName, s"local[$cpus]")
+    val spark = create(builder(appName, s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .config("spark.ui.enabled", "false"))
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

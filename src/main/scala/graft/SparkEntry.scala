@@ -67,11 +67,18 @@ object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    catalog("q01_pricing_summary").fn(spark, "/root/testdata/sf0.001")
+    queries("q01_pricing_summary")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    catalog.map { case (name, q) => name -> q.fn }
+  /** One entry per implemented operator from SURVEY.md §2. Each builds in
+    * a session with the engine's SQL surface, whoever made the session.
+    */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    catalog.map { case (name, q) =>
+      name -> { (s: SparkSession, dir: String) =>
+        graft.plans.GraftExtensions.install(s)
+        q.fn(s, dir)
+      }
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops

@@ -86,18 +86,16 @@ object IngestApp {
     // its lifecycle alone; stop only a session this main created
     val preExisting = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession).isDefined
-    val spark = graft.GraftSession
-      .builder("graft-ingest", opts.getOrElse("master", "local[*]"))
-      .getOrCreate()
-    // expose parse_log_line/dot_product/... to spark.sql on this session
-    graft.plans.GraftExtensions.install(spark)
+    val spark = graft.GraftSession.getOrCreate("graft-ingest",
+      opts.getOrElse("master", "local[*]"))
 
     val triggerMs = opts.getOrElse("trigger-ms", "2000").toLong
     val batchSize = opts.getOrElse("batch-size", "5000").toInt
     val checkpoint = opts.getOrElse("checkpoint",
       s"/tmp/graft-checkpoint-${cfg.logsTable}")
 
-    opts.getOrElse("mode", "stream") match {
+    // a failed query must not leave the session or the /live port behind
+    try opts.getOrElse("mode", "stream") match {
       case "batch" =>
         StreamingIngest.installLocalSplitPolicy(spark)
         val lines = spark.read.text(need("input")).toDF("value")
@@ -194,10 +192,6 @@ object IngestApp {
           case other => sys.error(s"unknown sink: $other")
         }
         val query = StreamingIngest.withGracefulStop(writer.start())
-        // --live-port: the reference's run-http-server/bind-address pair —
-        // 200 {"status":"live"} while the query runs, 503 after
-        val live = opts.get("live-port").map(p =>
-          StreamingIngest.serveLiveness(query, p.toInt))
         // --backup-files/--backup-max-age-ms: S2 retention over the
         // archive dir (the reference prunes on its scrape timer; here a
         // daemon sweep per trigger interval)
@@ -213,11 +207,14 @@ object IngestApp {
           t.setDaemon(true)
           t.start()
         }
-        query.awaitTermination()
-        live.foreach(_.stop(0))
+        // --live-port: the reference's run-http-server/bind-address pair —
+        // 200 {"status":"live"} while the query runs, 503 after
+        val live = opts.get("live-port").map(p =>
+          StreamingIngest.serveLiveness(query, p.toInt))
+        try query.awaitTermination()
+        finally live.foreach(_.stop(0))
 
       case other => sys.error(s"unknown mode: $other")
-    }
-    if (!preExisting) spark.stop()
+    } finally if (!preExisting) spark.stop()
   }
 }

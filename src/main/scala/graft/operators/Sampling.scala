@@ -227,7 +227,7 @@ object Sampling {
     * `sampleBy`'s Bernoulli draw which only hits `n` in expectation.
     *
     * Plans as the row_number-filter idiom, which
-    * [[graft.plans.TopKPerKey]] (installed by the caller's session)
+    * [[graft.plans.TopKPerKey]] (part of the engine's SQL surface)
     * turns into the two-phase bounded-heap operator: map partitions thin
     * to ≤n rows per stratum before the exchange, no sorts.
     */
@@ -256,7 +256,7 @@ object Sampling {
     * the cap keeps the best, not a sample; [[stratifiedTake]] /
     * [[weightedTake]] are the randomized variants). Plans as the
     * row_number-filter idiom → [[graft.plans.TopKPerKey]]'s bounded-heap
-    * operator when installed.
+    * operator.
     */
   def rankedTake(df: DataFrame, strataCol: String, idCol: String,
       scoreCol: Column, n: Int): DataFrame =
@@ -278,7 +278,7 @@ object Sampling {
     * dependent — deliberately avoided.
     *
     * Plans as the row_number-filter idiom → [[graft.plans.TopKPerKey]]'s
-    * bounded-heap operator when installed; rows with w ≤ 0 or null never
+    * bounded-heap operator; rows with w ≤ 0 or null never
     * qualify.
     */
   def weightedTake(df: DataFrame, strataCol: String, idCol: String,

@@ -560,7 +560,7 @@ object Similarity {
     * Scale shape: the corpus side never shuffles and never touches its
     * float vectors (codes only); queries (small by contract, like
     * [[bruteForceTopK]]) broadcast with their tables; the exchanges are
-    * the per-query top-k heaps (`TopKPerKey.install`, ≤ refine rows per
+    * the per-query top-k heaps ([[graft.plans.TopKPerKey]], ≤ refine rows per
     * query), and the re-rank joins the BROADCAST shortlist back to the
     * corpus — a broadcast semi-join, so the 100 TB side still never
     * shuffles. Ranking ascends approximate ‖·‖² on the unit sphere ≡

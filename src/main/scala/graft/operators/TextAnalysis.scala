@@ -384,8 +384,7 @@ object TextAnalysis {
     * is needed. Three key exchanges total ((doc,term) → term → doc), all
     * over aggregated rows, never raw tokens. The final per-doc top-k is
     * the `filter(row_number ≤ k)` window shape the custom heap top-k
-    * operator ([[graft.plans.TopKPerKey]]) rewrites to map-side thinning
-    * when installed.
+    * operator ([[graft.plans.TopKPerKey]]) rewrites to map-side thinning.
     */
   def topTerms(docs: DataFrame, k: Int = 5, dfNum: Int = 1, dfDen: Int = 5,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {

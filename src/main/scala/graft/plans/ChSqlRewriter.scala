@@ -1688,8 +1688,8 @@ object ChSqlRewriter {
     render(t)
   }
 
-  /** The migrant front door: rewrite + run (GraftExtensions must be
-    * installed on the session for the ClickHouse function names).
+  /** The migrant front door: rewrite + run (the session needs
+    * [[GraftExtensions.install]] for the ClickHouse function names).
     */
   def sql(spark: org.apache.spark.sql.SparkSession,
       text: String): org.apache.spark.sql.DataFrame =

@@ -38,9 +38,8 @@ import org.apache.spark.sql.types.BooleanType
   *     non-cheap and multi-referenced, the exact shape CollapseProject
   *     refuses to re-inline.
   *
-  * Installed through `spark.experimental.extraOptimizations` (the
-  * TopKPerKey precedent — binds to an already-running session, which
-  * the builder-time `injectOptimizerRule` hook cannot).
+  * [[GraftExtensions.install]] adds it to `spark.experimental.extraOptimizations`,
+  * after [[TopKPerKeyRewrite]].
   */
 object DedupProjectParse extends Rule[LogicalPlan] {
 

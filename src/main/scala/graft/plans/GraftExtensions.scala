@@ -1,19 +1,21 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 import graft.functions.{OptimizerFence, ParseLogLine, VectorExprs}
 
-/** SparkSessionExtensions hook exposing the engine's custom expressions to
-  * the SQL frontend, so `spark.sql` users get the same kernels as the
-  * Column API:
+/** The engine's SQL surface: the custom expressions and aggregates under
+  * their SQL names, so `spark.sql` users get the same kernels as the
+  * Column API, and the plan rules that go with them. [[install]] gives a
+  * session this surface; a [[graft.GraftSession]] session has it from the
+  * start.
   *
   * {{{
-  * spark.builder.withExtensions(new GraftExtensions)   // or
-  * --conf spark.sql.extensions=graft.plans.GraftExtensions
-  *
   * SELECT parse_log_line(value, '^(\\S+) (\\S+)$')[0]            -- groups
   * SELECT dot_product(a.embedding, b.embedding)                  -- cosine parts
   * SELECT minhash_signature(shingle_hashes(lower(text), 3), 64)  -- sketches
@@ -27,17 +29,15 @@ import graft.functions.{OptimizerFence, ParseLogLine, VectorExprs}
   * FROM events GROUP BY user_id                                   -- funnel level
   * }}}
   *
-  * The only whole-plan extension is the top-k-per-key rewrite
-  * ([[TopKPerKey]]), which installs its optimizer rule + strategy through
-  * the `experimental` hooks (`TopKPerKey.install(spark)`) so it can bind
-  * to an already-running session; everything else is expressions — they
-  * carry their own codegen, and plan shaping is done with the fence
-  * expression at the query layer.
+  * The whole-plan parts are the top-k-per-key rewrite and strategy
+  * ([[TopKPerKey]]) and the JSON-parse dedup rule ([[DedupProjectParse]]);
+  * everything else is expressions — they carry their own codegen, and plan
+  * shaping is done with the fence expression at the query layer.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
+object GraftExtensions {
 
   private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage,
+    new ExpressionInfo(getClass.getName.stripSuffix("$"), null, name, usage,
       "", "", "", "", "", "", "built-in")
 
   private def strLit(e: Expression, fn: String): String = e match {
@@ -108,7 +108,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }.reduce((a, b) => BitwiseOr(a, b))
   }
 
-  private[graft] def functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+  private[graft] lazy val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     (FunctionIdentifier("parse_log_line"),
       info("parse_log_line", "parse_log_line(line, regex) - all capture groups as array<string>, NULL on mismatch"),
       (args: Seq[Expression]) => ParseLogLine(args(0), strLit(args(1), "parse_log_line"))),
@@ -2469,26 +2469,28 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       fn, Seq(t, id, mask))
   }
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    functions.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(_ => DedupProjectParse)
-  }
-}
+  private val rules: Seq[Rule[LogicalPlan]] = Seq(TopKPerKeyRewrite, DedupProjectParse)
 
-object GraftExtensions {
-  /** Runtime installation into an already-built session (extensions via
-    * the builder only apply at session construction). The
-    * [[DedupProjectParse]] optimizer rule rides the experimental hook
-    * (the TopKPerKey precedent) because injectOptimizerRule cannot bind
-    * to a running session; idempotent across repeated installs.
+  /** Gives `spark` the engine's SQL surface: every function of
+    * [[functions]], the optimizer rules [[TopKPerKeyRewrite]] then
+    * [[DedupProjectParse]], and the [[TopKPerKeyStrategy]] planner strategy.
+    * [[graft.GraftSession]] calls it on each session it builds and
+    * [[graft.SparkEntry.queries]] before each entry builds, so a query plans
+    * the same whatever ran before it. The rules ride the `experimental`
+    * hooks because those bind to a running session. The lock makes two
+    * concurrent calls add each rule once; a session that holds the rules
+    * and the strategy already is left as it is.
     */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
-    new GraftExtensions().functions.foreach { case (id, inf, builder) =>
-      org.apache.spark.sql.graftbridge.ColumnBridge
-        .registerFunction(spark, id, inf, builder)
+  def install(spark: SparkSession): Unit = synchronized {
+    val hooks = spark.experimental
+    if (!(rules.forall(hooks.extraOptimizations.contains) &&
+        hooks.extraStrategies.contains(TopKPerKeyStrategy))) {
+      functions.foreach { case (id, inf, builder) =>
+        ColumnBridge.registerFunction(spark, id, inf, builder)
+      }
+      hooks.extraOptimizations = hooks.extraOptimizations.filterNot(rules.contains) ++ rules
+      hooks.extraStrategies =
+        hooks.extraStrategies.filterNot(_ eq TopKPerKeyStrategy) :+ TopKPerKeyStrategy
     }
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(DedupProjectParse))
-      spark.experimental.extraOptimizations = cur :+ DedupProjectParse
   }
 }

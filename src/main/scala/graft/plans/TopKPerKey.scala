@@ -3,7 +3,6 @@ package graft.plans
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
@@ -71,18 +70,6 @@ object TopKPerKey {
     * the degraded path at a tiny bound.
     */
   @volatile var MaxPartialRows: Long = 4L << 20
-
-  /** Idempotently install the rewrite + strategy into a live session
-    * (`experimental` hooks bind at query planning, not session build).
-    */
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.exists(_ eq TopKPerKeyRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ TopKPerKeyRewrite
-    if (!spark.experimental.extraStrategies.exists(_ eq TopKPerKeyStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
-  }
 }
 
 /** Logical node: the top `k` rows per `partExprs` group under `orderSpec`,

@@ -1612,7 +1612,6 @@ object DataOps {
 
     "q43_stratified_sample" -> Q(
       (s, dir) => {
-        graft.plans.TopKPerKey.install(s)
         graft.operators.Sampling.stratifiedTake(
           t(s, dir, "documents").select("doc_id", "lang"),
           strataCol = "lang", idCol = "doc_id", n = 5, salt = "s1")
@@ -1634,7 +1633,6 @@ object DataOps {
     // rounded IEEE division, so both engines order identically
     "q51_weighted_sample" -> Q(
       (s, dir) => {
-        graft.plans.TopKPerKey.install(s)
         // empty/all-whitespace text must weigh 0, not 1 (Java split of ""
         // returns one empty token) — zero-content docs never sample
         val docs = t(s, dir, "documents").select(col("doc_id"), col("lang"),
@@ -1926,7 +1924,6 @@ object DataOps {
     // (graft_uniq_upto) — one entry pins both frontends.
     "t23_uniq_upto" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         tp(s, dir, "documents")
           .groupBy(col("source"))
           .agg(
@@ -1952,7 +1949,6 @@ object DataOps {
     // present.
     "t24_topk_weighted" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         val k = 64
         val docs = tp(s, dir, "documents")
         val terms = docs.select(explode(
@@ -2010,7 +2006,6 @@ object DataOps {
     // the SQL leg (graft_histogram bins re-aggregated in-query).
     "t25_histogram" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         import graft.operators.Histogram
         val b = 24
         val vals = tp(s, dir, "events")
@@ -2078,7 +2073,6 @@ object DataOps {
 
     "t09_top_terms" -> Q(
       (s, dir) => {
-        graft.plans.TopKPerKey.install(s)
         TextAnalysis.topTerms(tp(s, dir, "documents"), k = 5, dfNum = 1, dfDen = 2)
       },
       Some(s"""WITH tok AS (
@@ -2320,7 +2314,6 @@ object DataOps {
     // C4 and quality CTEs are the t10/t02 oracles verbatim.
     "p06_domain_balanced_curation" -> Q(
       (s, dir) => {
-        graft.plans.TopKPerKey.install(s)
         val docs = tp(s, dir, "documents")
         val keepIds = TextAnalysis.c4Filters(docs, minToks = 15)
           .where(col("keep")).select("doc_id")
@@ -2782,7 +2775,6 @@ object DataOps {
     // (d01/d17/q51) and the composition itself checked by composed CTEs.
     "p02_scrub_sample_pipeline" -> Q(
       (s, dir) => {
-        graft.plans.TopKPerKey.install(s)
         val corpus = docsWithNearDups(s, dir)
         val deduped = Dedup.exactDedup(corpus)
         val scrubbed = Dedup.scrubDuplicatedSpans(deduped, k = 8)
@@ -2977,7 +2969,6 @@ object DataOps {
     // or single IEEE divisions — the whole pipeline hash-matches DuckDB.
     "p04_target_matching_pipeline" -> Q(
       (s, dir) => {
-        graft.plans.TopKPerKey.install(s)
         val docs = tp(s, dir, "documents").select("doc_id", "text", "source")
         val minCount = math.max(1L, docs.count() / 10) // see t13: tiny-corpus clamp
         // rarity is one numeric row per doc (4 longs) — persist it so the
@@ -3334,7 +3325,6 @@ object DataOps {
     // both surfaces end to end).
     "t29_url_canonicalize_sql" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         val raw = t(s, dir, "events").select(concat(
           when(col("event_id") % 2 === 0, lit("HTTP://"))
             .otherwise(lit("https://")),

@@ -787,7 +787,6 @@ object Relational {
     // windowFunnel state shape) and replays the batch DP at finish.
     "q91_funnel_sql" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         t(s, dir, "events")
           .groupBy(col("user_id"))
           .agg(expr("graft_window_funnel(3600000000, ts, event_id, " +
@@ -1219,12 +1218,11 @@ object Relational {
 
     // q39 exercises the custom top-k-per-key operator: the query is the
     // plain row_number idiom; TopKPerKeyRewrite + TopKPerKeyStrategy
-    // (installed into the session here) displace the sort-based window
+    // (part of the session's SQL surface) displace the sort-based window
     // plan with the two-phase heap operator, and the hash-match against
     // DuckDB's window result proves the custom physical operator exact.
     "q39_topk_per_key" -> Q(
       (s, dir) => {
-        graft.plans.TopKPerKey.install(s)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("l_suppkey"))
           .orderBy(col("l_extendedprice").desc, col("l_orderkey"), col("l_linenumber"))
@@ -2624,7 +2622,6 @@ object Relational {
     // pattern one mode family up.
     "q101_funnel_strict_sql" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         t(s, dir, "events")
           .groupBy(col("user_id"))
           .agg(expr("graft_window_funnel_strict(86400000000, " +
@@ -2645,7 +2642,6 @@ object Relational {
     // formulation row-for-row. The q91/q101 pattern for path analysis.
     "q102_next_node_sql" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         t(s, dir, "events")
           .groupBy(col("user_id"))
           .agg(expr("graft_sequence_next_node('forward', 'first_match', " +
@@ -2667,7 +2663,6 @@ object Relational {
     // across the whole stats family).
     "q103_ttest_sql" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         t(s, dir, "events")
           .select((col("user_id") % 2).cast("string").as("variant"),
             floor(col("value") * 100).cast("long").as("v"))
@@ -2682,7 +2677,6 @@ object Relational {
 
     "q104_mann_whitney_sql" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         t(s, dir, "events")
           .select((col("user_id") % 2).as("variant"),
             floor(col("value") * 100).cast("long").as("v"))
@@ -2696,7 +2690,6 @@ object Relational {
 
     "q105_linreg_sql" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         t(s, dir, "lineitem")
           .select(col("l_returnflag").as("grp"),
             floor(col("l_quantity")).cast("long").as("x"),
@@ -2712,7 +2705,6 @@ object Relational {
 
     "q106_cramers_v_sql" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         t(s, dir, "orders")
           .agg(expr("cramersV(o_orderstatus, o_orderpriority)").as("r"))
           .select(col("r.*"))
@@ -2724,7 +2716,6 @@ object Relational {
 
     "q107_rank_corr_sql" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         t(s, dir, "orders")
           .groupBy(to_date(col("o_orderdate")).as("day"))
           .agg(count(lit(1)).as("x"),
@@ -2744,7 +2735,6 @@ object Relational {
     // hash-matched against the q66 oracle verbatim.
     "q108_map_combinators_sql" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         val kk = regexp_extract(col("props"), "\"k\":\\s*(\\d+)", 1)
           .cast("long")
         t(s, dir, "events").select(
@@ -2780,7 +2770,6 @@ object Relational {
     // irrelevant by construction).
     "q109_array_auc" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         t(s, dir, "events")
           .select(col("event_type").as("grp"),
             floor(col("value") * 100).cast("long").as("score"),
@@ -2824,7 +2813,6 @@ object Relational {
 
     "q110_lttb_sql" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         t(s, dir, "events")
           .groupBy(col("user_id"),
             expr("unix_micros(ts) div 1000000").as("x"))
@@ -2883,7 +2871,6 @@ object Relational {
 
     "q112_ks_sql" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         t(s, dir, "events")
           .select((col("user_id") % 2).as("g"),
             floor(col("value") * 100).cast("long").as("v"))
@@ -2897,7 +2884,6 @@ object Relational {
 
     "q113_anova_sql" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         t(s, dir, "orders")
           .select(col("o_orderpriority").as("grp"),
             floor(col("o_totalprice") / lit(100)).cast("long").as("v"))
@@ -2915,7 +2901,6 @@ object Relational {
     // and hash-matches the shared generated oracle bit-for-bit.
     "q114_corr_matrix_sql" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         val m = t(s, dir, "lineitem")
           .select(floor(col("l_quantity")).cast("long").as("x0"),
             floor(col("l_extendedprice") / lit(100)).cast("long").as("x1"),
@@ -2934,7 +2919,6 @@ object Relational {
 
     "q115_interval_sql" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         t(s, dir, "events")
           .select(col("user_id"),
             unix_micros(col("ts")).as("s_us"),
@@ -2953,7 +2937,6 @@ object Relational {
 
     "q116_sparkbar_sql" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         t(s, dir, "orders")
           .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("month"),
             dayofmonth(col("o_orderdate")).as("day"))
@@ -2977,7 +2960,6 @@ object Relational {
     // "every row", hash-equal by totality.
     "q117_geohash_sql" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         t(s, dir, "events")
           .select(col("event_id"), col("user_id"),
             (((col("user_id") * 2654435761L) % 180000000L).cast("double") /
@@ -3008,7 +2990,6 @@ object Relational {
     // integer evidence, projected to the scalar statistics).
     "q118_ngram_sql" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         t(s, dir, "documents")
           .select(col("doc_id"), lower(col("text")).as("tl"))
           .select(col("doc_id"),
@@ -3027,7 +3008,6 @@ object Relational {
     // error bounds are t22's self-checked territory.
     "q119_uniq_theta_sql" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         t(s, dir, "events")
           .select(col("event_type"), (col("user_id") % 1500).as("u"))
           .groupBy(col("event_type"))
@@ -3048,7 +3028,6 @@ object Relational {
     // let-binding transform keeps the per-row cost at one sort.
     "q120_tukey_scores_sql" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         t(s, dir, "events")
           .select(col("user_id"), unix_micros(col("ts")).as("tt"),
             col("event_id"), floor(col("value") * 100).cast("long").as("v"))
@@ -3107,7 +3086,6 @@ object Relational {
     // classful letter stays a Column composition (not a CH function).
     "q121_ip_sql" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         val ip = (col("event_id") * 2654435761L) % 4294967296L
         t(s, dir, "events").select(ip.as("ip"))
           .withColumn("ip_str", expr("IPv4NumToString(ip)"))
@@ -3144,7 +3122,6 @@ object Relational {
     // o_orderkey, so min_by/arg_min agree deterministically.
     "q122_ch_alias_battery" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         t(s, dir, "orders")
           .select(col("o_orderstatus"), col("o_custkey"), col("o_orderkey"),
             col("o_orderpriority"),
@@ -3197,7 +3174,6 @@ object Relational {
     // minute there).
     "q123_date_fns_sql" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         t(s, dir, "events")
           .select(col("ts"), col("value"))
           .groupBy(expr("toStartOfHour(ts)").as("hr"),
@@ -3232,7 +3208,6 @@ object Relational {
     // Map-only extraction + one bounded type-key exchange.
     "q124_json_sql" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         val js = concat(lit("{\"a\":{\"k\":"),
           (col("event_id") % 100).cast("string"),
           lit("},\"tags\":[\""), col("event_type"), lit("\",\"x\"]}"))
@@ -3294,7 +3269,6 @@ object Relational {
     // transform, then variant-binary navigation; one type-key exchange.
     "q125_json_structural" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         val js = concat(lit("{\"a\":{\"k\":"),
           (col("event_id") % 100).cast("string"),
           lit("},\"n\":null,\"tags\":[\""), col("event_type"),
@@ -3348,7 +3322,6 @@ object Relational {
     // boundary-crossing, its week IS Monday-based).
     "q126_date_tier2" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         t(s, dir, "events")
           .select(col("ts"))
           .select(col("ts"),
@@ -3387,7 +3360,6 @@ object Relational {
     // pass/gap/trap table lives in MigrantSqlSpec.
     "q127_migrant_sql" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         // only the events view: the statement touches one table, and
         // registering just it keeps the entry probeable against the
         // amplified four-table corpus (and skips nine parquet loads)
@@ -3426,7 +3398,6 @@ object Relational {
     // Map-only kernels + one bounded band-key exchange.
     "q128_scalar_battery" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         t(s, dir, "events")
           .select(col("event_type"), col("value"), col("event_id"))
           .select(
@@ -3481,7 +3452,6 @@ object Relational {
     // partitioned, no driver-side work.
     "q129_ch_rewriter" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         t(s, dir, "events").createOrReplaceTempView("events")
         graft.plans.ChSqlRewriter.sql(s,
           """SELECT event_type, user_id, count() AS n,
@@ -3507,7 +3477,6 @@ object Relational {
     // map-side — the stock rollup plan shape.
     "q130_ch_with_totals" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         t(s, dir, "events").createOrReplaceTempView("events")
         graft.plans.ChSqlRewriter.sql(s,
           """SELECT event_type, count() AS n,
@@ -3533,7 +3502,6 @@ object Relational {
     // axis length.
     "q131_ch_with_fill" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         t(s, dir, "events").createOrReplaceTempView("events")
         graft.plans.ChSqlRewriter.sql(s,
           """SELECT toStartOfDay(ts) AS d, count() AS n,
@@ -3569,7 +3537,6 @@ object Relational {
     // nondeterministic). Map-only kernels + one band-key exchange.
     "q132_scalar_batch2" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         t(s, dir, "events")
           .select(col("event_type"), col("event_id"), col("value"),
             col("ts"))
@@ -3639,7 +3606,6 @@ object Relational {
     // exchange.
     "q133_scalar_batch3" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         t(s, dir, "documents")
           .select(col("source"), col("doc_id"))
           .select(col("source"),
@@ -3701,7 +3667,6 @@ object Relational {
     // argMax/the subquery flow through the same rewrite untouched.
     "q134_ch_asof_join" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         views(s, dir)
         graft.plans.ChSqlRewriter.sql(s,
           """SELECT e.event_id AS event_id, e.user_id AS user_id,
@@ -3744,7 +3709,6 @@ object Relational {
     // join-then-dedup a migrant would hand-write.
     "q135_ch_any_join" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         views(s, dir)
         graft.plans.ChSqlRewriter.sql(s,
           """SELECT e.event_type, o.o_orderstatus AS st, count() AS n,
@@ -3786,7 +3750,6 @@ object Relational {
     // rows — INTERPOLATE touches only its named column.
     "q136_ch_interpolate" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         t(s, dir, "events").createOrReplaceTempView("events")
         graft.plans.ChSqlRewriter.sql(s,
           """SELECT toStartOfDay(ts) AS d, count() AS n,
@@ -3849,7 +3812,6 @@ object Relational {
     // not just in the text pins. Same one-shuffle shape as q134.
     "q138_ch_asof_forward" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         views(s, dir)
         graft.plans.ChSqlRewriter.sql(s,
           """SELECT e.event_id AS event_id, e.user_id AS user_id,
@@ -3883,7 +3845,6 @@ object Relational {
     // the same-day order is invisible — exactly CH's strict read.
     "q139_ch_asof_strict_left" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         views(s, dir)
         graft.plans.ChSqlRewriter.sql(s,
           """SELECT e.event_id AS event_id, e.d AS d,
@@ -3934,7 +3895,6 @@ object Relational {
     // + one type-key exchange.
     "q137_scalar_batch4" -> Q(
       (s, dir) => {
-        graft.plans.GraftExtensions.install(s)
         t(s, dir, "events")
           .select(col("event_type"), col("event_id"), col("user_id"),
             col("ts"))

@@ -161,6 +161,40 @@ class IngestAppSpec extends AnyFunSuite {
     assert(trailing.getMessage.contains("--dead-letter"), trailing.getMessage)
   }
 
+  test("stream mode: a failed query stops the /live server and main throws") {
+    val tmp = Files.createTempDirectory("graft_cli_fail").toString
+    Files.writeString(Paths.get(s"$tmp/cfg.yaml"),
+      """nginx:
+        |  log_format: '$remote_addr - $remote_user [$time_local] "$request" $status $bytes_sent'
+        |  log_time_format: 02/Jan/2006:15:04:05 -0700
+        |scheme:
+        |  logs_table: access_log
+        |  columns:
+        |    remote_addr: remote_addr
+        |    time_local: time_local
+        |    status: status
+        |    bytes_sent: bytes_sent
+        |""".stripMargin)
+    Files.createDirectories(Paths.get(s"$tmp/in"))
+    Files.writeString(Paths.get(s"$tmp/in/access.log"),
+      "10.0.0.1 - - [21/Jul/2022:00:30:43 +0000] \"GET /x HTTP/1.1\" 200 512\n")
+    val livePort = {
+      val s = new java.net.ServerSocket(0)
+      try s.getLocalPort finally s.close()
+    }
+    // no JDBC driver takes this URL, so the first batch fails after its retries
+    val run = scala.concurrent.Future(IngestApp.main(Array(
+      "--config", s"$tmp/cfg.yaml", "--mode", "stream",
+      "--source", "file", "--input", s"$tmp/in",
+      "--sink", "jdbc", "--url", "jdbc:graft-no-such-driver://nowhere",
+      "--table", "access_log", "--checkpoint", s"$tmp/cp",
+      "--live-port", livePort.toString, "--trigger-ms", "200")))(
+      scala.concurrent.ExecutionContext.global)
+    intercept[Exception](scala.concurrent.Await.result(run,
+      scala.concurrent.duration.Duration(120, "s")))
+    new java.net.ServerSocket(livePort).close()
+  }
+
   test("stream mode: kafka-lite source → parquet, end-to-end through the CLI") {
     val tmp = Files.createTempDirectory("graft_cli_kl").toString
     Files.writeString(Paths.get(s"$tmp/cfg.yaml"),

@@ -40,7 +40,6 @@ class UniqUpToSpec extends AnyFunSuite {
   }
 
   test("randomized: Column and SQL forms both equal least(distinct, n+1) per key") {
-    graft.plans.GraftExtensions.install(spark)
     val rnd = new scala.util.Random(13)
     val rows = (0 until 3000).map { _ =>
       (s"k${rnd.nextInt(7)}", rnd.nextInt(1 + rnd.nextInt(60)))
@@ -125,7 +124,6 @@ class UniqUpToSpec extends AnyFunSuite {
   }
 
   test("parameter validation: cap must be positive, SQL cap must be a literal") {
-    graft.plans.GraftExtensions.install(spark)
     intercept[IllegalArgumentException] { new UniqUpTo.UniqUpToAgg(0) }
     Seq("a").toDF("v").createOrReplaceTempView("uniq_upto_badlit")
     val e = intercept[Exception] {

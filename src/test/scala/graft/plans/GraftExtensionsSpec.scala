@@ -3,17 +3,12 @@ package graft.plans
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** SQL-frontend access to the custom expressions, installed at runtime
-  * into the shared test session (builder-time extensions only bind when
-  * the session is first built, which the suite order doesn't guarantee).
+/** SQL-frontend access to the custom expressions, through the shared
+  * test session's SQL surface.
   */
 class GraftExtensionsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = graft.TestSpark.spark
-    GraftExtensions.install(s)
-    s
-  }
+  lazy val spark: SparkSession = graft.TestSpark.spark
 
   test("parse_log_line from SQL") {
     val r = spark.sql(

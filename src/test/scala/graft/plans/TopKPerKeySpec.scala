@@ -11,11 +11,7 @@ import graft.TestSpark
   * window plan, and declines on every shape where it would be wrong.
   */
 class TopKPerKeySpec extends AnyFunSuite {
-  lazy val spark = {
-    val s = TestSpark.spark
-    TopKPerKey.install(s)
-    s
-  }
+  lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private def data = {

@@ -41,7 +41,6 @@ class MigrantSqlSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = {
     val s = graft.TestSpark.spark
-    graft.plans.GraftExtensions.install(s)
     graft.sources.Tables.registerAll(s, "/root/testdata/sf0.001")
     s
   }
