@@ -14,8 +14,8 @@ object Bench {
 
   /** Headline subset: one representative per operator family, including
     * every heavy operator (zorder write, winnowing, duplicate clustering,
-    * span inventory, stratified sampling — added r4 so no expensive path
-    * goes unbenched).
+    * span inventory, stratified sampling), so no expensive path goes
+    * unbenched.
     */
   val headline: Seq[String] = Seq(
     "q01_pricing_summary", "q03_segment_revenue", "q05_region_revenue",
@@ -66,8 +66,8 @@ object Bench {
     "q118_ngram_sql", "q119_uniq_theta_sql", "q120_tukey_scores_sql",
     "t29_url_canonicalize_sql", "q121_ip_sql", "q122_ch_alias_battery",
     "q123_date_fns_sql", "q124_json_sql",
-    // r16: the structural JSON family (variant surface), the tier-2
-    // date family, and the verbatim migrant capstone
+    // the structural JSON family (variant surface), the tier-2 date
+    // family, and the verbatim migrant capstone
     "q125_json_structural", "q126_date_tier2", "q127_migrant_sql",
     "q128_scalar_battery",
     "s11_embedding_outliers",
@@ -78,18 +78,11 @@ object Bench {
     "p03_quality_curation_pipeline", "p04_target_matching_pipeline",
     "p05_perplexity_curation_pipeline", "p06_domain_balanced_curation",
     "p07_tokenize_pack_pipeline", "p08_doremi_mixture")
-  // d15_semantic_dedup_blocked is deliberately NOT timed here (r14, the
-  // r13 verdict item 3 outcome): the catalog entry embeds a deliberately
-  // O(n²) exact-recall MEASUREMENT harness (all-pairs cosine + double
-  // connected components — the most variance-prone entry in the set; its
-  // r13 median doubled to 7.62 s while an isolated 3-rep run read
-  // 5.05–5.48 s with the plan hash unchanged), so timing it benchmarks
-  // the measurement, not the operator. It stays in the CORRECTNESS gate
-  // (Verify/z01 self-check) untouched, and the operator path —
-  // semanticDedup with the default auto-sized LSH pair gen — is timed at
-  // BOTH scales every round as the sem_lsh_default_auto probe (1.48× at
-  // 10× in the r14 fresh-JVM rep). Its r5 heap-wake finding (+120% on
-  // whatever ran after it) retires with it.
+  // d15_semantic_dedup_blocked is not timed here: the catalog entry embeds
+  // an O(n²) exact-recall harness (all-pairs cosine and two connected-
+  // component passes, the most variance-prone entry in the set), so timing
+  // it would measure the harness, not the operator. It stays in the
+  // correctness gate (Verify and the z01 self-check).
 
   /** Parsed lines/s on ONE core, one figure per rep (BASELINE.md "≥10k
     * parsed lines/s/core"): the full parse+cast pipeline over the sf log
@@ -117,11 +110,11 @@ object Bench {
     // JVM/codegen warmup on the smallest SF so measured times are steady-state
     Measure.warm(spark, headline, "bench")
 
-    // FIXED-WORK CALIBRATION PROBES (r6 verdict item 2): between r5 and r6
-    // every untouched map-only query drifted +25-50% — ambient sandbox
-    // load — and nothing in the artifact could prove it. Two probes whose
-    // work is CONSTANT across rounds make cross-run drift measurable (and
-    // normalizable: divide a query's delta by the probe's delta):
+    // FIXED-WORK CALIBRATION PROBES: ambient machine load moves every
+    // untouched query's time, and nothing else in the output would show
+    // it. Two probes whose work is CONSTANT across runs make cross-run
+    // drift measurable (and normalizable: divide a query's delta by the
+    // probe's delta):
     //   calib_cpu_ms   — single-threaded splitmix64 mixing loop (3e8
     //                    rounds), pure ALU, zero allocation: tracks raw
     //                    per-core CPU availability under current load.
@@ -141,21 +134,19 @@ object Bench {
       f"[bench] calib cpu=${calibCpuMs}%.0fms query=${calibQueryMs}%.0fms (sink=$calibSink)")
 
     // 3 timed reps per query, median/min/max (sub-second single-shot
-    // timings are indistinguishable from JIT/GC jitter — r4 verdict item 3)
+    // timings are indistinguishable from JIT/GC jitter)
     val results: Seq[(String, Measure.Stat)] =
       headline.map(name => name -> Measure.entry(spark, name, sfDir, 3, "bench"))
 
-    // PLAN FINGERPRINTS (r9 verdict item 3): one canonical-plan hash per
-    // headline entry, written to PLANS_r{N}.json next to the bench line.
-    // Standing rule this mechanizes: an unchanged hash round-over-round
-    // PROVES a timing drift has no plan mechanism (adjudicated on the
-    // spot — no isolated re-measurement needed); a changed hash names
-    // the replanned entry and its node histogram says how. One-line
-    // check: `python3 tools/diff_plans.py PLANS_r{N-1}.json PLANS_r{N}
-    // .json` (exit 0 = all shared hashes unchanged). Computed in a
-    // separate pass AFTER the timing loop so forcing queryExecution
-    // doesn't pre-warm planning out of the measured reps (which would
-    // break comparability with earlier rounds).
+    // PLAN FINGERPRINTS: one canonical-plan hash per catalog entry,
+    // written to PLANS_r{N}.json next to the bench line. An unchanged
+    // hash between runs PROVES a timing drift has no plan mechanism (no
+    // isolated re-measurement needed); a changed hash names the replanned
+    // entry and its node histogram says how. One-line check:
+    // `python3 tools/diff_plans.py PLANS_r{N-1}.json PLANS_r{N}.json`
+    // (exit 0 = all shared hashes unchanged). Computed in a separate pass
+    // AFTER the timing loop so forcing queryExecution doesn't pre-warm
+    // planning out of the measured reps.
     // SPARK_GRAFT_ROUND overrides the detection for a re-run AFTER the
     // round's BENCH snapshot was saved (otherwise max+1 would label the
     // re-run's plans with the NEXT round's number and mask its diff)
@@ -166,10 +157,9 @@ object Bench {
           s.replaceAll("\\D", "").toInt }
       if (rs.isEmpty) 1 else rs.max + 1
     }
-    // per-entry hash map kept for the stats line below (r19 verdict item
-    // 6: a d13-style ambient drift self-adjudicates when the headline
-    // entry's own median carries its plan hash — plan-same ⇒ ambient —
-    // without a judge diffing plan files)
+    // per-entry hash map kept for the stats line below: each median
+    // carries its plan hash, so an ambient drift (same plan) shows without
+    // diffing plan files
     var fpMap: Map[String, String] = Map.empty
     try {
       // the FULL catalog, not just the headline: the fingerprint forces
@@ -193,7 +183,7 @@ object Bench {
     // ≥10k lines/s): materialize the synthetic log lines to text files,
     // then drive readStream → parse → parquet sink over the burst.
     //
-    // METHODOLOGY (r4 verdict item 7): two figures are reported.
+    // METHODOLOGY: two figures are reported.
     // `stream_ingest_lines_per_sec` = rows / Σ triggerExecution — the
     // end-to-end rate a long-running stream sustains INCLUDING the
     // per-trigger fixed costs (offset WAL, file-sink manifest commit,
@@ -251,75 +241,24 @@ object Bench {
       System.err.println(s"[bench] per-core parse FAILED: $e"); -1.0
     }
 
-    // SCALE PROBE: one decade of measured scaling per heavy family (r6
-    // verdict item 7 originally; full history, amplification recipe, and
-    // per-entry expectations now live in graft.BenchProbe). From r14 the
-    // sweep runs in a FRESH FORKED JVM: r11's t18 14.97x and r11-r13's
-    // p02 2.3x -> 7.36x probe flags were both adjudicated as long-lived
-    // bench-JVM state (plan hashes unchanged, isolated runs in band), so
-    // the harness removes the mechanism structurally instead of paying a
-    // flag -> isolate -> adjudicate cycle every round. Both probe legs
-    // are measured inside the probe JVM (internally consistent ratios;
-    // r14 basis-change note in BenchProbe), and the child writes one
-    // JSON blob embedded unchanged as `scale_probe`.
-    val probeFactor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
-    val scaleProbeJson: String = if (probeFactor <= 1) "null" else try {
-      val out = java.nio.file.Files.createTempFile("graft_probe", ".json")
-      val javaBin = System.getProperty("java.home") + "/bin/java"
-      import scala.jdk.CollectionConverters._
-      val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-        .getInputArguments.asScala.toSeq
-        .filterNot(a => a.startsWith("-agentlib") || a.startsWith("-javaagent"))
-      val cp = System.getProperty("java.class.path")
-      val cmd = (Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.BenchProbe",
-        sfDir, probeFactor.toString, out.toString)).asJava
-      val pb = new ProcessBuilder(cmd)
-      // child stdout+stderr both land on OUR stderr: the parent's stdout
-      // carries the driver contract line and must stay clean
-      pb.redirectErrorStream(true)
-      val proc = pb.start()
-      val pump = new Thread(() => {
-        val in = proc.getInputStream
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n >= 0) { System.err.write(buf, 0, n); System.err.flush(); n = in.read(buf) }
-      })
-      pump.setDaemon(true); pump.start()
-      val exit = proc.waitFor()
-      pump.join(2000)
-      if (exit != 0) { System.err.println(s"[bench] probe JVM exited $exit"); "null" }
-      else new String(java.nio.file.Files.readAllBytes(out),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] scale probe FAILED: $e")
-      e.printStackTrace()
-      "null"
-    }
-
-
     // `queries` stays scalar (the driver contract): value = per-query
-    // MEDIAN of 3. The {median,min,max} spread (r4 verdict item 3) is
-    // emitted as a SEPARATE stats line printed BEFORE the headline line
-    // and mirrored to bench_detail.json: the driver keeps only the last
-    // ~2000 chars of output, and folding the stats into the headline line
-    // (r5) pushed its START out of that window — the driver recorded
-    // `parsed: null` and the whole round's bench was unreadable. The
-    // headline line must stay comfortably under the window on its own.
-    // 2 decimals (10 ms) in the headline map — the stats line and
-    // bench_detail.json keep millisecond resolution. The catalog passed
-    // ~64 headline entries in r8 and the full map (2051 chars) no longer
-    // fits the tail window, so the headline `queries` map is BUDGETED:
-    // entries in median-descending order until the serialized map hits
-    // ~1500 chars — every expensive entry (what the per-round perf
-    // comparison is about) always fits; the cheap constant-time tail
-    // lives in the stats line/bench_detail.json only. `value` still sums
-    // over EVERYTHING.
+    // MEDIAN of 3. The {median,min,max} spread goes to a SEPARATE stats
+    // line printed BEFORE the headline line and mirrored to
+    // bench_detail.json: the consumer of the contract line reads only the
+    // last ~2000 chars of stdout, so the headline line must fit that
+    // window on its own.
+    // 2 decimals (10 ms) in the headline map; the stats line and
+    // bench_detail.json keep millisecond resolution. The full map of every
+    // headline entry does not fit the window, so the headline `queries`
+    // map is BUDGETED: entries in median-descending order until the
+    // serialized map reaches the budget. Every expensive entry always
+    // fits; the cheap tail lives in the stats line and bench_detail.json
+    // only. `value` still sums over EVERYTHING.
     val qs = {
       val parts = results.sortBy(-_._2.median)
         .map { case (k, v) => "\"" + k + f"\":${v.median}%.2f" }
-      // 1450 (was 1500): the r19 calib-normalized fields add ~65 chars
-      // to the fixed tail, and the whole line must stay well inside the
-      // driver's ~2000-char stdout window (the r5 lesson above)
+      // leaves room for the fixed tail of the line inside the ~2000-char
+      // stdout window
       val budget = 1450
       var used = 2
       val kept = parts.takeWhile { p =>
@@ -331,34 +270,30 @@ object Bench {
       kept.mkString("{", ",", "}")
     }
     val qStats = results.map { case (k, v) =>
-      // plan_md5 next to each median (ADDITIVE, stats line only — the
-      // headline contract line is untouched): an entry whose time moved
-      // with an unchanged hash is ambient by construction
+      // plan_md5 next to each median (stats line only): an entry whose
+      // time moved with an unchanged hash has no plan mechanism
       val fp = fpMap.get(k).map(h => s""","plan_md5":"$h"""").getOrElse("")
       "\"" + k +
         f"""\":{"median":${v.median}%.3f,"min":${v.min}%.3f,"max":${v.max}%.3f$fp}"""
     }.mkString("{", ",", "}")
     val total = results.map(_._2.median).filter(_ > 0).sum
     val statsLine =
-      s"""{"metric":"queries_stats","stats":$qStats,"scale_probe":$scaleProbeJson}"""
+      s"""{"metric":"queries_stats","stats":$qStats}"""
     // prefixed so no parser — tail-window or full-stdout — can mistake the
     // stats line for the contract line; bench_detail.json keeps the raw JSON
     println("[bench] stats " + statsLine)
     try java.nio.file.Files.write(java.nio.file.Paths.get("bench_detail.json"),
       (statsLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: Throwable => System.err.println(s"[bench] detail write failed: $e") }
-    // CALIBRATION-NORMALIZED TOTAL (r18 verdict item 3): three rounds
-    // running, the raw total drifted with ambient box state and needed a
-    // manual fresh-JVM adjudication each time (both fixed-work probes
-    // moving the same way as the total = ambient, not regression). The
-    // normalized figure divides that argument in: value × (ref/calib) for
-    // BOTH probes, where ref is the r18 snapshot's calibration
-    // (calib_cpu 1167 ms, calib_query 128 ms — BENCH_r18.json), so a
-    // round-over-round comparison of `value_calib_norm_*` already
+    // CALIBRATION-NORMALIZED TOTAL: the raw total drifts with ambient
+    // machine state (both fixed-work probes moving the same way as the
+    // total = ambient, not regression). The normalized figure divides that
+    // argument in: value × (ref/calib) for BOTH probes, where ref is the
+    // calibration of BENCH_r18.json (calib_cpu 1167 ms, calib_query
+    // 128 ms), so a comparison of `value_calib_norm_*` between runs already
     // discounts machine speed. Two normalizations are emitted because the
     // probes track different costs (per-core ALU vs Spark dispatch) and
-    // entries blend them differently; `value` stays the raw sum — the
-    // normalized fields are ADDITIVE, nothing is renamed or removed.
+    // entries blend them differently; `value` stays the raw sum.
     val calibNormCpu = if (calibCpuMs > 0) total * (1167.0 / calibCpuMs) else -1.0
     val calibNormQuery = if (calibQueryMs > 0) total * (128.0 / calibQueryMs) else -1.0
     val line =

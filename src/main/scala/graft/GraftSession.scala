@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 import graft.streaming.StreamingIngest
@@ -38,18 +37,6 @@ object GraftSession {
       // truncation; normalization then yields identical strings in any
       // session.
       .config("spark.sql.maxMetadataStringLength", "100000")
-      // streams: checkpoint logs written without a process per file, and
-      // generated classes shared by every query; an explicit value wins
-      .config(StreamingIngest.SessionSettings.map { case (k, v) => k -> explicitOr(k, v) }.toMap)
-
-  /** `value`, unless the running session or the Spark conf (`--conf`, a
-    * system property) sets `key`.
-    */
-  private def explicitOr(key: String, value: String): String =
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .flatMap(_.conf.getAll.get(key))
-      .orElse(new SparkConf().getOption(key))
-      .getOrElse(value)
 
   /** The running session, or a new one on `master` with the shared
     * settings.
@@ -57,10 +44,13 @@ object GraftSession {
   def getOrCreate(appName: String, master: String): SparkSession =
     create(builder(appName, master))
 
-  /** `settings.getOrCreate()` with the engine's SQL surface installed. */
+  /** `settings.getOrCreate()` with the engine's SQL surface and stream
+    * settings installed; a stream setting the session already has wins.
+    */
   private def create(settings: SparkSession.Builder): SparkSession = {
     val spark = settings.getOrCreate()
     graft.plans.GraftExtensions.install(spark)
+    StreamingIngest.installSessionSettings(spark)
     spark
   }
 

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The measuring step shared by Bench, BenchProbe and `Dev time`: a
+/** The measuring step shared by Bench and `Dev time`: a
   * catalog entry is timed over a `noop` write, so every projected column
   * is evaluated (a `count()` lets Catalyst prune the projection and times
   * a different query), and every run is followed by [[settle]].

@@ -1,7 +1,7 @@
 package graft.cli
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.config.GraftConfig
 import graft.pipeline.Ingest
@@ -46,8 +46,9 @@ import graft.streaming.StreamingIngest
   * text directory and writes once — same pipeline, bounded input.
   * `--dead-letter` persists rejected raw lines (delivers the reference's
   * README.md:30 TODO); in stream mode it runs a second query over its own
-  * copy of the source, so `file` (a second cleanSource over the same
-  * directory), `syslog` and `filebuf` (second listeners) reject it.
+  * copy of the source, stopped when the main query ends, so `file` (a
+  * second cleanSource over the same directory), `syslog` and `filebuf`
+  * (second listeners) reject it.
   *
   * Every argument is a `--flag value` pair; an unknown flag or a flag
   * without a value fails with an `IllegalArgumentException` naming it.
@@ -153,12 +154,6 @@ object IngestApp {
           case other   => sys.error(s"unknown source: $other")
         }
         val (good, bad) = Ingest.parseWithDeadLetter(lines, cfg)
-        // dead-letter stream: raw rejected lines to text files
-        opts.get("dead-letter").foreach { p =>
-          bad.writeStream.format("text").option("path", p)
-            .option("checkpointLocation", s"$checkpoint-dead")
-            .trigger(Trigger.ProcessingTime(triggerMs)).start()
-        }
         val writer = opts.getOrElse("sink", "parquet") match {
           case "parquet" =>
             StreamingIngest.parquetSink(good, need("output"), checkpoint,
@@ -191,30 +186,57 @@ object IngestApp {
               .trigger(Trigger.ProcessingTime(triggerMs))
           case other => sys.error(s"unknown sink: $other")
         }
-        val query = StreamingIngest.withGracefulStop(writer.start())
-        // --backup-files/--backup-max-age-ms: S2 retention over the
-        // archive dir (the reference prunes on its scrape timer; here a
-        // daemon sweep per trigger interval)
-        for (dir <- opts.get("archive-dir")
-             if opts.contains("backup-files") || opts.contains("backup-max-age-ms")) {
-          val maxFiles = opts.get("backup-files").map(_.toInt).getOrElse(Int.MaxValue)
-          val maxAge = opts.get("backup-max-age-ms").map(_.toLong).getOrElse(Long.MaxValue)
-          val t = new Thread(() => while (query.isActive) {
-            try StreamingIngest.pruneArchive(dir, maxFiles, maxAge)
-            catch { case _: Throwable => () }
-            Thread.sleep(math.max(1000L, triggerMs))
-          }, "graft-archive-retention")
-          t.setDaemon(true)
-          t.start()
+        // dead-letter stream: raw rejected lines to text files
+        val deadLetter = opts.get("dead-letter").map { p =>
+          bad.writeStream.format("text").option("path", p)
+            .option("checkpointLocation", s"$checkpoint-dead")
+            .trigger(Trigger.ProcessingTime(triggerMs)).start()
         }
-        // --live-port: the reference's run-http-server/bind-address pair —
-        // 200 {"status":"live"} while the query runs, 503 after
-        val live = opts.get("live-port").map(p =>
-          StreamingIngest.serveLiveness(query, p.toInt))
-        try query.awaitTermination()
-        finally live.foreach(_.stop(0))
+        try runQuery(writer.start(), opts, triggerMs)
+        finally deadLetter.foreach(_.stop())
 
       case other => sys.error(s"unknown mode: $other")
     } finally if (!preExisting) spark.stop()
+  }
+
+  /** Runs the started main `query` until it ends, with a graceful-stop
+    * hook, the archive retention sweep and the `/live` server; the hook
+    * and the server go when the query ends, so a long-lived JVM keeps
+    * nothing of a finished run.
+    */
+  private def runQuery(query: StreamingQuery, opts: Map[String, String],
+      triggerMs: Long): Unit = {
+    // graceful-stop parity (`pkg/signal/notify.go:29-55`): SIGTERM/SIGINT
+    // stop the query, letting the in-flight micro-batch finish
+    val hook = sys.addShutdownHook {
+      try query.stop()
+      catch { case _: Throwable => () }
+    }
+    try {
+      // --backup-files/--backup-max-age-ms: S2 retention over the
+      // archive dir (the reference prunes on its scrape timer; here a
+      // daemon sweep per trigger interval)
+      for (dir <- opts.get("archive-dir")
+           if opts.contains("backup-files") || opts.contains("backup-max-age-ms")) {
+        val maxFiles = opts.get("backup-files").map(_.toInt).getOrElse(Int.MaxValue)
+        val maxAge = opts.get("backup-max-age-ms").map(_.toLong).getOrElse(Long.MaxValue)
+        val t = new Thread(() => while (query.isActive) {
+          try StreamingIngest.pruneArchive(dir, maxFiles, maxAge)
+          catch { case _: Throwable => () }
+          Thread.sleep(math.max(1000L, triggerMs))
+        }, "graft-archive-retention")
+        t.setDaemon(true)
+        t.start()
+      }
+      // --live-port: the reference's run-http-server/bind-address pair —
+      // 200 {"status":"live"} while the query runs, 503 after
+      val live = opts.get("live-port").map(p =>
+        StreamingIngest.serveLiveness(query, p.toInt))
+      try query.awaitTermination()
+      finally live.foreach(_.stop(0))
+    } finally {
+      // throws once the JVM is shutting down, when the hook has run
+      try hook.remove() catch { case _: IllegalStateException => () }
+    }
   }
 }

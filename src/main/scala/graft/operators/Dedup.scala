@@ -1137,7 +1137,7 @@ object Dedup {
       * ([[Similarity.lshAutoPlanes]]), so expected bucket occupancy stays
       * ≤ ~32 regardless of corpus size and candidate pairs grow ∝ n, not
       * n². A FIXED plane count is the scaling hazard this retires:
-      * Bench's scale_probe measured the old fixed 4×16 default (16
+      * a 10× scale probe measured the old fixed 4×16 default (16
       * buckets/table, occupancy ∝ n, candidates ∝ n²/16) at 39× wall-time
       * for 10× data, vs ~2× for occupancy-bounded configs.
       *

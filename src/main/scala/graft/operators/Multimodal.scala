@@ -369,10 +369,8 @@ object Multimodal {
     * are governed by true fingerprint collisions, not by a saturated
     * key space: the r8-filed defect — 64/7 ≈ 9-bit bands, ≤ 512
     * values, buckets ∝ n, candidates ∝ n²/512 — is retired by
-    * construction at this design point, and the `m04_phash_pairs`
-    * scale_probe measures the pair-generation path at 10× corpus on a
-    * high-entropy payload set (the catalog corpus's low-entropy ASCII
-    * grids make the TRUE answer ∝ n² there — output size, not plan
+    * construction at this design point (the catalog corpus's low-entropy
+    * ASCII grids make the TRUE answer ∝ n² there — output size, not plan
     * shape). Recall-1.0 equality banding forces nBands ≥ maxDist+1, so
     * band width shrinks as g²/(maxDist+1): the TOLERANCE DIAL is the
     * `grid` parameter, not narrower bands — 16×16 carries maxDist ≤ 15

@@ -3090,9 +3090,8 @@ object DataOps {
     // device, not a similarity signal), so the entry pins the
     // exact-collision regime (178 pairs at sf0.01); banding at maxDist
     // > 0 incl. the long-straddling band extraction is pinned ≡
-    // brute-force popcount in MultimodalSpec, the REAL decode path's
-    // Hamming discrimination on PNG fixtures there too, and the
-    // pair-generation's 10× scaling by the m04_phash_pairs scale_probe.
+    // brute-force popcount in MultimodalSpec, and the REAL decode path's
+    // Hamming discrimination on PNG fixtures there too.
     "m04_phash_dedup" -> Q(
       (s, dir) => Multimodal.phashNearDups(
         Multimodal.asMediaTable(tp(s, dir, "documents")), maxDist = 0),

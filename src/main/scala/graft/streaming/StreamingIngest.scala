@@ -42,7 +42,7 @@ object StreamingIngest {
     * value for it. `getAll` holds only the values that were set, where
     * `getOption` would also return Spark's default.
     */
-  private def installSessionSettings(spark: SparkSession): Unit = {
+  private[graft] def installSessionSettings(spark: SparkSession): Unit = {
     val set = spark.conf.getAll
     SessionSettings.foreach { case (k, v) => if (!set.contains(k)) spark.conf.set(k, v) }
   }
@@ -414,17 +414,6 @@ object StreamingIngest {
           }
         }
       }
-  }
-
-  /** Graceful-stop parity (`pkg/signal/notify.go:29-55`): stop the query on
-    * SIGTERM/SIGINT, letting the in-flight micro-batch finish.
-    */
-  def withGracefulStop(query: StreamingQuery): StreamingQuery = {
-    sys.addShutdownHook {
-      try query.stop()
-      catch { case _: Throwable => () }
-    }
-    query
   }
 
   /** S2 parity — backup retention (`pkg/fileio/io.go:16-73`): keep at most

@@ -24,6 +24,20 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(conf.get("spark.sql.artifact.isolation.enabled") == "false")
   }
 
+  test("getOrCreate on the running session keeps the stream settings set explicitly") {
+    import graft.streaming.{LocalCheckpointFileManager, StreamingIngest}
+    val explicit = Map(
+      LocalCheckpointFileManager.ConfKey ->
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager",
+      StreamingIngest.ArtifactIsolationKey -> "true")
+    TestSpark.restoringConf(explicit.keys.toSeq: _*) {
+      explicit.foreach { case (k, v) => TestSpark.spark.conf.set(k, v) }
+      val spark = GraftSession.getOrCreate("graft-test", "local[2]")
+      assert(spark eq TestSpark.spark)
+      explicit.foreach { case (k, v) => assert(spark.conf.get(k) == v, k) }
+    }
+  }
+
   test("GraftSession.scala is the only source that calls the session builder") {
     val call = "SparkSession" + ".builder" // split so this file does not match
     val callers = Seq("src/main", "src/test").flatMap { root =>

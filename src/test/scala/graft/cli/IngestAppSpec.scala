@@ -195,6 +195,67 @@ class IngestAppSpec extends AnyFunSuite {
     new java.net.ServerSocket(livePort).close()
   }
 
+  /** A stream run with a dead-letter query whose main query fails: a
+    * kafka-lite source on a stub broker, and a JDBC sink whose URL no
+    * driver takes. Returns the ids of the queries left running by the run,
+    * after stopping them.
+    */
+  private def failedDeadLetterRun(): Set[java.util.UUID] = {
+    val tmp = Files.createTempDirectory("graft_cli_dlfail").toString
+    Files.writeString(Paths.get(s"$tmp/cfg.yaml"),
+      """nginx:
+        |  log_format: '$remote_addr - $remote_user [$time_local] "$request" $status $bytes_sent'
+        |  log_time_format: 02/Jan/2006:15:04:05 -0700
+        |scheme:
+        |  logs_table: access_log
+        |  columns:
+        |    remote_addr: remote_addr
+        |    time_local: time_local
+        |    status: status
+        |    bytes_sent: bytes_sent
+        |""".stripMargin)
+    val broker = new graft.sources.KafkaStubBroker(numPartitions = 1)
+    val port = broker.start()
+    broker.append("dllogs", 0, Seq(
+      "10.0.0.1 - - [21/Jul/2022:00:30:43 +0000] \"GET /x HTTP/1.1\" 200 512",
+      "not a log line"))
+    val before = spark.streams.active.map(_.id).toSet
+    try {
+      val run = scala.concurrent.Future(IngestApp.main(Array(
+        "--config", s"$tmp/cfg.yaml", "--mode", "stream",
+        "--source", "kafka-lite", "--brokers", s"127.0.0.1:$port", "--topic", "dllogs",
+        "--dead-letter", s"$tmp/dead",
+        "--sink", "jdbc", "--url", "jdbc:graft-no-such-driver://nowhere",
+        "--table", "access_log", "--checkpoint", s"$tmp/cp", "--trigger-ms", "200")))(
+        scala.concurrent.ExecutionContext.global)
+      val e = intercept[Exception](scala.concurrent.Await.result(run,
+        scala.concurrent.duration.Duration(120, "s")))
+      assert(!e.isInstanceOf[java.util.concurrent.TimeoutException], e)
+      spark.streams.active.map(_.id).toSet -- before
+    } finally {
+      spark.streams.active.filterNot(q => before(q.id))
+        .foreach(q => try q.stop() catch { case _: Throwable => () })
+      broker.stop()
+    }
+  }
+
+  test("stream mode: a failed main query stops its dead-letter query") {
+    assert(failedDeadLetterRun().isEmpty)
+  }
+
+  test("stream mode: a finished run leaves no JVM shutdown hook behind") {
+    // the JVM's registry of Runtime.addShutdownHook threads
+    val hooks = {
+      val f = Class.forName("java.lang.ApplicationShutdownHooks").getDeclaredField("hooks")
+      f.setAccessible(true)
+      f.get(null).asInstanceOf[java.util.Map[_, _]]
+    }
+    spark.streams.active // the shared session exists before counting
+    val before = hooks.size
+    failedDeadLetterRun()
+    assert(hooks.size == before)
+  }
+
   test("stream mode: kafka-lite source → parquet, end-to-end through the CLI") {
     val tmp = Files.createTempDirectory("graft_cli_kl").toString
     Files.writeString(Paths.get(s"$tmp/cfg.yaml"),
