@@ -104,6 +104,17 @@ object Bench {
     } finally lines.unpersist()
   }
 
+  /** The round a run's `PLANS_rNN.json` is labelled with: one past the
+    * highest `BENCH_rNN.json` or `PLANS_rNN.json` in `dir`, so a run
+    * never overwrites a plan dump already there.
+    */
+  def nextRound(dir: java.io.File): Int = {
+    val rs = Option(dir.listFiles).getOrElse(Array.empty).map(_.getName)
+      .collect { case s if s.matches("(BENCH|PLANS)_r\\d+\\.json") =>
+        s.replaceAll("\\D", "").toInt }
+    if (rs.isEmpty) 1 else rs.max + 1
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local("graft-bench")
@@ -150,13 +161,8 @@ object Bench {
     // SPARK_GRAFT_ROUND overrides the detection for a re-run AFTER the
     // round's BENCH snapshot was saved (otherwise max+1 would label the
     // re-run's plans with the NEXT round's number and mask its diff)
-    val roundN = sys.env.get("SPARK_GRAFT_ROUND").map(_.toInt).getOrElse {
-      val rs = Option(new java.io.File(".").listFiles).getOrElse(Array.empty)
-        .map(_.getName)
-        .collect { case s if s.matches("BENCH_r\\d+\\.json") =>
-          s.replaceAll("\\D", "").toInt }
-      if (rs.isEmpty) 1 else rs.max + 1
-    }
+    val roundN = sys.env.get("SPARK_GRAFT_ROUND").map(_.toInt)
+      .getOrElse(nextRound(new java.io.File(".")))
     // per-entry hash map kept for the stats line below: each median
     // carries its plan hash, so an ambient drift (same plan) shows without
     // diffing plan files
@@ -166,7 +172,7 @@ object Bench {
       // planning only (no execution), so a plan regression in a
       // non-benched entry is caught for seconds of extra work
       val rows = PlanFingerprint.catalog(spark, sfDir, SparkEntry.queries.keys.toSeq.sorted)
-      fpMap = rows.map { case (name, h, _) => name -> h }.toMap
+      fpMap = rows.map { case (name, h, _, _) => name -> h }.toMap
       PlanFingerprint.write(f"PLANS_r$roundN%02d.json", rows)
       System.err.println(f"[bench] plan fingerprints → PLANS_r$roundN%02d.json")
     } catch { case e: Throwable =>
@@ -198,8 +204,8 @@ object Bench {
     // Keep this after the timed catalog and the plan fingerprints:
     // `fileSource` sets the session's split policy, which
     // `Tables.loadParallel` reads.
+    val tmp = java.nio.file.Files.createTempDirectory("graft_bench_stream")
     val (streamLps, streamLpsProc): (Double, Double) = try {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_bench_stream")
       val inDir = s"$tmp/in"; val cp = s"$tmp/cp"; val outDir = s"$tmp/out"
       val cfg = graft.queries.DataOps.ingestConfig
       graft.queries.DataOps.logLinesFor(spark, sfDir)
@@ -233,7 +239,7 @@ object Bench {
       (e2e, proc)
     } catch { case e: Throwable =>
       System.err.println(s"[bench] stream ingest FAILED: $e"); (-1.0, -1.0)
-    }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
 
     // per-core parse rate, best of 2 for steady state
     val coreLps: Double = try parseRates(spark, sfDir, 2).max

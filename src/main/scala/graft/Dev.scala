@@ -93,7 +93,7 @@ object Dev {
     val ns = names(pos.lift(1).getOrElse("all"))
     withSession("plan") { spark =>
       val rows = PlanFingerprint.catalog(spark, sfDir, ns)
-      rows.foreach { case (name, h, _) => println(s"[plan] $name $h") }
+      rows.foreach { case (name, h, _, _) => println(s"[plan] $name $h") }
       flags.get("--write").foreach { f =>
         PlanFingerprint.write(f, rows)
         println(s"[plan] wrote $f")

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Canonical physical-plan fingerprints — the mechanical half of bench
   * drift adjudication (r9 verdict item 3). Three consecutive rounds paid
@@ -170,32 +171,47 @@ object PlanFingerprint {
     (md.map("%02x".format(_)).mkString, nodeHistogram(c))
   }
 
-  /** (name, hash, node histogram) for each named catalog entry built over
-    * `sfDir`: the [[dataDependentPlans]] marker where one exists, and
-    * `ERROR:<exception class>` for an entry that fails to build.
+  /** Expression nodes summed over every operator of `plan` — the size
+    * the analyzer, optimizer and code generator walk, which a plan-time
+    * unrolled expression inflates while the operator histogram stays put.
+    */
+  def exprNodes(plan: LogicalPlan): Int = {
+    var n = 0
+    plan.foreach(_.expressions.foreach(_.foreach(_ => n += 1)))
+    n
+  }
+
+  /** (name, hash, node histogram, optimized-plan [[exprNodes]]) for each
+    * named catalog entry built over `sfDir`: the [[dataDependentPlans]]
+    * marker where one exists, and `ERROR:<exception class>` for an entry
+    * that fails to build, both without an expression count.
     */
   def catalog(spark: SparkSession, sfDir: String,
-      names: Seq[String]): Seq[(String, String, Map[String, Int])] =
+      names: Seq[String]): Seq[(String, String, Map[String, Int], Option[Int])] =
     names.map { name =>
-      val (h, nodes) =
-        if (dataDependentPlans.contains(name))
-          (dataDependentPlans(name), Map.empty[String, Int])
-        else try fingerprintNamed(SparkEntry.queries(name)(spark, sfDir), name)
-        catch { case e: Throwable =>
-          System.err.println(s"[plan] $name FAILED: $e")
-          ("ERROR:" + e.getClass.getSimpleName, Map.empty[String, Int])
-        }
-      (name, h, nodes)
+      if (dataDependentPlans.contains(name))
+        (name, dataDependentPlans(name), Map.empty[String, Int], None)
+      else try {
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        val (h, nodes) = fingerprintNamed(df, name)
+        (name, h, nodes, Some(exprNodes(df.queryExecution.optimizedPlan)))
+      } catch { case e: Throwable =>
+        System.err.println(s"[plan] $name FAILED: $e")
+        (name, "ERROR:" + e.getClass.getSimpleName, Map.empty[String, Int], None)
+      }
     }
 
-  /** Writes `PLANS_rNN.json`'s format, `{name: {plan_md5, nodes}}` one
-    * entry per line — what `tools/diff_plans.py` reads.
+  /** Writes `PLANS_rNN.json`'s format, `{name: {plan_md5, nodes,
+    * expr_nodes}}` one entry per line (`expr_nodes` only where counted) —
+    * what `tools/diff_plans.py` reads.
     */
-  def write(path: String, rows: Seq[(String, String, Map[String, Int])]): Unit = {
-    val entries = rows.map { case (name, h, nodes) =>
+  def write(path: String,
+      rows: Seq[(String, String, Map[String, Int], Option[Int])]): Unit = {
+    val entries = rows.map { case (name, h, nodes, exprs) =>
       val nodesJson = nodes.toSeq.sorted
         .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-      "\"" + name + "\":{\"plan_md5\":\"" + h + "\",\"nodes\":" + nodesJson + "}"
+      "\"" + name + "\":{\"plan_md5\":\"" + h + "\",\"nodes\":" + nodesJson +
+        exprs.fold("")(n => s",\"expr_nodes\":$n") + "}"
     }
     java.nio.file.Files.write(java.nio.file.Paths.get(path),
       (entries.mkString("{", ",\n", "}") + "\n")

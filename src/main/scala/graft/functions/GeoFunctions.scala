@@ -1,112 +1,228 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, ImplicitCastInputTypes, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{DataType, DoubleType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 /** ClickHouse geo function family: `geohashEncode` / `geohashDecode`
-  * (Niemeyer 2008 — the public base-32 Z-order curve over lat/lon) as
-  * pure Column builders. Geohashing is bit interleaving + a base-32
-  * render: ALL integer arithmetic after one quantizing multiply, so
-  * every builder stays inside whole-stage codegen (no UDFs) and every
-  * step is exactly reproducible in ANSI SQL for the oracle — unlike the
-  * great-circle trig functions, whose libm sin/cos are not bit-pinned
-  * across engines (left out deliberately; a codegen'd haversine is easy
-  * but not oracle-exact).
+  * (Niemeyer 2008 — the public base-32 Z-order curve over lat/lon). Each
+  * is one Catalyst expression ([[GeohashEncode]], [[GeohashDecode]])
+  * whose generated code makes one call per row into the static kernel
+  * below: clamped quantize, bit interleave, base-32 render, and the
+  * inverse parse and cell-centre decode. Everything after the one
+  * quantizing multiply is integer arithmetic, so each step is exactly
+  * reproducible in ANSI SQL for the oracle — unlike the great-circle
+  * trig functions, whose libm sin/cos are not bit-pinned across engines
+  * (left out deliberately).
   *
-  * The interleave loop unrolls at PLAN time (the q34 Morton pattern):
-  * precision p costs 5p shift-and-mask terms folded into one codegen
-  * expression — at 100 TB this is a per-row integer kernel with zero
-  * shuffle implications, and the encoded prefix is exactly the spatial
-  * bucketing key a geo aggregation wants (shared prefix = shared cell).
+  * The kernel keeps the semantics of the Catalyst composition it
+  * replaced (`GeohashChain` in the specs, bit-identical on every input):
+  *   - a NULL coordinate lands in the top cell (the composition's
+  *     `least`/`greatest` clamp skipped NULL) and NaN in cell 0;
+  *   - decode reads a character past the end of the string as `0` and a
+  *     character off the alphabet as -1, which sets every higher bit;
+  *   - decoding NULL gives a struct of two NULLs.
+  *
+  * The encoded prefix is the spatial bucketing key a geo aggregation
+  * wants (shared prefix = shared cell).
   */
 object GeoFunctions {
 
   /** The geohash base-32 alphabet (public standard; no a/i/l/o). */
   val Alphabet = "0123456789bcdefghjkmnpqrstuvwxyz"
 
-  private def bitCounts(precision: Int): (Int, Int, Int) = {
-    require(precision >= 1 && precision <= 12, s"precision: $precision")
-    val total = 5 * precision
-    ((total + 1) / 2, total / 2, total) // lon gets the extra bit
+  /** `geohashDecode`'s result: the cell centre, longitude first. */
+  val DecodedType: StructType = StructType(Seq(
+    StructField("longitude", DoubleType), StructField("latitude", DoubleType)))
+
+  private val alphabetBytes: Array[Byte] =
+    Alphabet.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+
+  /** Base-32 value of each ASCII byte, -1 off the alphabet. */
+  private val codes: Array[Int] = {
+    val t = Array.fill(128)(-1)
+    alphabetBytes.indices.foreach(i => t(alphabetBytes(i).toInt) = i)
+    t
   }
 
-  /** Quantized cell index of `v` in [-half, half] at `bits` resolution,
-    * clamped into range (the +half=boundary point belongs to the last
-    * cell, matching reference encoders).
-    */
-  private def quantize(v: Column, half: Double, bits: Int): Column =
-    greatest(lit(0L), least(lit((1L << bits) - 1),
-      floor((v + lit(half)) / lit(2.0 * half) * lit((1L << bits).toDouble))))
-
-  /** The 5·p-bit interleaved Z-value (lon bit first — the geohash
-    * convention) as a LongType column. Exposed for bucketing on the raw
-    * integer key instead of the string render.
-    */
-  def geohashBits(lat: Column, lon: Column, precision: Int): Column = {
-    val (nLon, nLat, total) = bitCounts(precision)
-    val lonQ = quantize(lon, 180.0, nLon)
-    val latQ = quantize(lat, 90.0, nLat)
-    (0 until total).map { k =>
-      val (src, bit) =
-        if (k % 2 == 0) (lonQ, nLon - 1 - k / 2)
-        else (latQ, nLat - 1 - (k - 1) / 2)
-      shiftleft(shiftright(src, bit).bitwiseAND(lit(1L)), total - 1 - k)
-    }.reduce((a, b) => a.bitwiseOR(b))
-  }
-
-  /** Base-32 render of [[geohashBits]] — the ClickHouse
-    * `geohashEncode(lon, lat, precision)` string.
+  /** The ClickHouse `geohashEncode(lon, lat, precision)` string (note the
+    * Column builder's latitude-first argument order).
     */
   def geohashEncode(lat: Column, lon: Column, precision: Int): Column =
-    renderBits(geohashBits(lat, lon, precision), precision)
+    ColumnBridge.column(GeohashEncode(
+      ColumnBridge.expression(lon), ColumnBridge.expression(lat), precision))
 
-  /** Render an already-computed bits column (compute the Z-value once,
-    * render from the materialized column — keeps the plan tree linear).
+  /** The ClickHouse `geohashDecode(h)` cell centre as
+    * `struct<longitude, latitude>`, reading the first `precision`
+    * characters of `h`.
     */
-  def renderBits(bits: Column, precision: Int): Column = {
-    val chars = array(Alphabet.map(c => lit(c.toString)): _*)
-    concat((0 until precision).map { i =>
-      element_at(chars,
-        (shiftright(bits, 5 * (precision - 1 - i)).bitwiseAND(lit(31L)) +
-          lit(1L)).cast("int"))
-    }: _*)
+  def geohashDecode(h: Column, precision: Int): Column =
+    ColumnBridge.column(GeohashDecode(ColumnBridge.expression(h), precision))
+
+  private[functions] def checkPrecision(precision: Int): Unit =
+    require(precision >= 1 && precision <= 12, s"precision: $precision")
+
+  /** Cell index of `v` in [-half, half] at `bits` resolution, clamped into
+    * range (the +half boundary point belongs to the last cell, matching
+    * reference encoders; +Infinity to the last cell, NaN to cell 0).
+    */
+  private def quantize(v: Double, half: Double, bits: Int): Long =
+    math.max(0L, math.min((1L << bits) - 1,
+      math.floor((v + half) / (2.0 * half) * (1L << bits).toDouble).toLong))
+
+  /** The geohash of (lon, lat) at `precision` characters: the 5·p-bit
+    * Z-value (longitude bit first, longitude gets the odd extra bit)
+    * rendered five bits per character.
+    */
+  def encode(lon: Double, lat: Double, precision: Int): UTF8String = {
+    val total = 5 * precision
+    val nLon = (total + 1) / 2
+    val nLat = total / 2
+    val lonQ = quantize(lon, 180.0, nLon)
+    val latQ = quantize(lat, 90.0, nLat)
+    var bits = 0L
+    var k = 0
+    while (k < total) {
+      val bit =
+        if ((k & 1) == 0) lonQ >> (nLon - 1 - k / 2)
+        else latQ >> (nLat - 1 - k / 2)
+      bits = (bits << 1) | (bit & 1L)
+      k += 1
+    }
+    val out = new Array[Byte](precision)
+    var i = 0
+    while (i < precision) {
+      out(i) = alphabetBytes(((bits >> (5 * (precision - 1 - i))) & 31L).toInt)
+      i += 1
+    }
+    UTF8String.fromBytes(out)
   }
 
-  /** Parse a geohash string back to its Z-value (inverse of
-    * [[renderBits]]; unknown characters poison the result via instr = 0
-    * → -1 bits, surfacing as a nonsense value rather than silently
-    * truncating — callers validate upstream).
+  /** The cell centre of the first `precision` characters of `h`, as a
+    * (longitude, latitude) row; both fields NULL when `h` is.
     */
-  def geohashParse(h: Column, precision: Int): Column =
-    (0 until precision).map { i =>
-      shiftleft(
-        (instr(lit(Alphabet), substring(h, i + 1, 1)) - lit(1)).cast("long"),
-        5 * (precision - 1 - i))
-    }.reduce((a, b) => a.bitwiseOR(b))
-
-  /** Cell-center latitude decoded from a bits column — ClickHouse
-    * `geohashDecode` returns the cell center; all arithmetic exact up to
-    * one correctly-rounded multiply/divide pair.
-    */
-  def decodeCenterLat(bits: Column, precision: Int): Column = {
-    val (nLon, nLat, total) = bitCounts(precision)
-    val latQ = (0 until nLat).map { j =>
-      // lat bits sit at interleaved positions 1, 3, 5, … (0-based from MSB)
-      val pos = total - 1 - (2 * j + 1)
-      shiftleft(shiftright(bits, pos).bitwiseAND(lit(1L)), nLat - 1 - j)
-    }.reduce((a, b) => a.bitwiseOR(b))
-    (latQ.cast("double") + lit(0.5)) / lit((1L << nLat).toDouble) *
-      lit(180.0) - lit(90.0)
+  def decode(h: UTF8String, precision: Int): InternalRow = {
+    if (h == null) return new GenericInternalRow(2)
+    val total = 5 * precision
+    val nLon = (total + 1) / 2
+    val nLat = total / 2
+    val bits = parse(h, precision)
+    new GenericInternalRow(Array[Any](
+      center(deinterleave(bits, total - 1, nLon), nLon, 180.0),
+      center(deinterleave(bits, total - 2, nLat), nLat, 90.0)))
   }
 
-  /** Cell-center longitude decoded from a bits column. */
-  def decodeCenterLon(bits: Column, precision: Int): Column = {
-    val (nLon, _, total) = bitCounts(precision)
-    val lonQ = (0 until nLon).map { j =>
-      val pos = total - 1 - 2 * j
-      shiftleft(shiftright(bits, pos).bitwiseAND(lit(1L)), nLon - 1 - j)
-    }.reduce((a, b) => a.bitwiseOR(b))
-    (lonQ.cast("double") + lit(0.5)) / lit((1L << nLon).toDouble) *
-      lit(360.0) - lit(180.0)
+  /** The Z-value of `h`'s first `precision` characters, walked by UTF-8
+    * character. A character past the end reads as 0; one off the alphabet
+    * (any non-ASCII character included) as -1, whose sign bits poison
+    * every higher position.
+    */
+  private def parse(h: UTF8String, precision: Int): Long = {
+    val base = h.getBaseObject
+    val off = h.getBaseOffset
+    val n = h.numBytes
+    var bits = 0L
+    var pos = 0
+    var i = 0
+    while (i < precision) {
+      val code =
+        if (pos >= n) 0
+        else {
+          val b = Platform.getByte(base, off + pos)
+          pos += UTF8String.numBytesForFirstByte(b)
+          if (b >= 0) codes(b.toInt) else -1
+        }
+      bits |= code.toLong << (5 * (precision - 1 - i))
+      i += 1
+    }
+    bits
   }
+
+  /** `n` bits of `bits` taken at every second position from `top` down. */
+  private def deinterleave(bits: Long, top: Int, n: Int): Long = {
+    var q = 0L
+    var j = 0
+    while (j < n) {
+      q = (q << 1) | ((bits >> (top - 2 * j)) & 1L)
+      j += 1
+    }
+    q
+  }
+
+  private def center(q: Long, bits: Int, half: Double): Double =
+    (q.toDouble + 0.5) / (1L << bits).toDouble * (2.0 * half) - half
+}
+
+/** `geohashEncode(lon, lat, precision)`: one [[GeoFunctions.encode]] call
+  * per row. Never NULL: a NULL coordinate is passed as +Infinity, which
+  * clamps to the same top cell.
+  */
+case class GeohashEncode(lon: Expression, lat: Expression, precision: Int)
+    extends BinaryExpression with ImplicitCastInputTypes {
+  GeoFunctions.checkPrecision(precision)
+
+  override def left: Expression = lon
+  override def right: Expression = lat
+  override def inputTypes: Seq[DoubleType] = Seq(DoubleType, DoubleType)
+  override def dataType: DataType = StringType
+  override def nullable: Boolean = false
+  override def prettyName: String = "geohashEncode"
+  override def sql: String = s"$prettyName(${lon.sql}, ${lat.sql}, $precision)"
+
+  override def eval(input: InternalRow): Any = {
+    def coord(v: Any): Double =
+      if (v == null) Double.PositiveInfinity else v.asInstanceOf[Double]
+    GeoFunctions.encode(coord(lon.eval(input)), coord(lat.eval(input)), precision)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val x = lon.genCode(ctx)
+    val y = lat.genCode(ctx)
+    ev.copy(code = code"""
+      ${x.code}
+      ${y.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} = graft.functions.GeoFunctions.encode(
+        ${x.isNull} ? Double.POSITIVE_INFINITY : ${x.value},
+        ${y.isNull} ? Double.POSITIVE_INFINITY : ${y.value}, $precision);""",
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): GeohashEncode =
+    copy(lon = newLeft, lat = newRight)
+}
+
+/** `geohashDecode(h, precision)`: one [[GeoFunctions.decode]] call per
+  * row, returning the cell centre as `struct<longitude, latitude>`.
+  */
+case class GeohashDecode(child: Expression, precision: Int)
+    extends UnaryExpression with ImplicitCastInputTypes {
+  GeoFunctions.checkPrecision(precision)
+
+  override def inputTypes: Seq[StringType] = Seq(StringType)
+  override def dataType: DataType = GeoFunctions.DecodedType
+  override def nullable: Boolean = false
+  override def prettyName: String = "geohashDecode"
+  override def sql: String = s"$prettyName(${child.sql}, $precision)"
+
+  override def eval(input: InternalRow): Any =
+    GeoFunctions.decode(child.eval(input).asInstanceOf[UTF8String], precision)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val h = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${h.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} = graft.functions.GeoFunctions.decode(
+        ${h.isNull} ? null : ${h.value}, $precision);""",
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): GeohashDecode =
+    copy(child = newChild)
 }

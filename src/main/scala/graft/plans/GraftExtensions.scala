@@ -1963,37 +1963,34 @@ object GraftExtensions {
         fn("graft_kll_quantile", Seq(a(0), Literal(200), a(1)))))
   }
 
-  /** The ClickHouse geo + fuzzy-string scalars under their OWN names —
-    * the urlFunctions convention (pure built-in/codegen expression
-    * trees, SQL ≡ Column by construction, spec-pinned anyway). The
-    * plan-time parameters (precision, needle) must be literals: the
-    * geohash bit interleave and the needle gram profile unroll into the
-    * expression tree at resolution (the q78/q96 designs).
+  /** The ClickHouse geo + fuzzy-string scalars under their OWN names,
+    * spec-pinned SQL ≡ Column. The geohash pair is one codegen'd kernel
+    * call per row ([[graft.functions.GeohashEncode]] /
+    * [[graft.functions.GeohashDecode]]); the fuzzy pair is a built-in
+    * expression tree. The plan-time parameters must be literals: the
+    * geohash precision is a constant of the kernel call, and the needle
+    * gram profile unrolls into the expression tree at resolution (the q96
+    * design).
     */
   private def geoFuzzyFunctions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = {
-    import graft.functions.{FuzzyMatch, GeoFunctions}
+    import graft.functions.{FuzzyMatch, GeohashDecode, GeohashEncode}
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column, eagerExpression => expression}
     Seq(
       (FunctionIdentifier("geohashEncode"),
-        info("geohashEncode", "geohashEncode(longitude, latitude[, precision = 12]) - ClickHouse geohashEncode: base-32 geohash of the point (CH argument order - longitude first); precision an INT LITERAL 1..12 (the bit interleave unrolls at plan time); out-of-range coordinates clamp to the edge cell"),
+        info("geohashEncode", "geohashEncode(longitude, latitude[, precision = 12]) - ClickHouse geohashEncode: base-32 geohash of the point (CH argument order - longitude first), one compiled kernel call per row; precision an INT LITERAL 1..12; out-of-range coordinates clamp to the edge cell, a NULL coordinate to the top cell"),
         (args: Seq[Expression]) => {
           if (args.size != 2 && args.size != 3)
             throw new IllegalArgumentException(
               s"geohashEncode expects (longitude, latitude[, precision]) " +
                 s"(${args.size} argument(s) given)")
           val p = if (args.size == 3) intLit(args(2), "geohashEncode") else 12
-          expression(GeoFunctions.geohashEncode(
-            column(args(1)), column(args(0)), p))
+          GeohashEncode(args(0), args(1), p)
         }),
       (FunctionIdentifier("geohashDecode"),
-        info("geohashDecode", "geohashDecode(h, precision) - ClickHouse geohashDecode: the cell-CENTER point as struct(longitude, latitude); DEVIATION: precision is a required INT LITERAL (CH infers it from the string length at runtime; this engine unrolls the bit de-interleave at plan time - pass length(h)'s known value); unknown base-32 characters poison the result rather than truncating"),
+        info("geohashDecode", "geohashDecode(h, precision) - ClickHouse geohashDecode: the cell-CENTER point as struct(longitude, latitude), one compiled kernel call per row; DEVIATION: precision is a required INT LITERAL 1..12 (CH infers it from the string length at runtime - pass length(h)'s known value); a shorter h reads as padded with '0', unknown base-32 characters poison the result rather than truncating"),
         (args: Seq[Expression]) => {
           arity(args, 2, "geohashDecode", "(h, precision)")
-          val p = intLit(args(1), "geohashDecode")
-          val bits = GeoFunctions.geohashParse(column(args(0)), p)
-          expression(org.apache.spark.sql.functions.struct(
-            GeoFunctions.decodeCenterLon(bits, p).as("longitude"),
-            GeoFunctions.decodeCenterLat(bits, p).as("latitude")))
+          GeohashDecode(args(0), intLit(args(1), "geohashDecode"))
         }),
       (FunctionIdentifier("ngramDistance"),
         info("ngramDistance", "ngramDistance(haystack, needle) - ClickHouse ngramDistance: 4-gram multiset profile distance in [0, 1] (0 = identical profiles, 1 = disjoint); needle a STRING LITERAL of >= 4 chars (its gram profile folds into the plan); case-sensitive - wrap both sides in lower() for the CaseInsensitive variants; map-only, no UDFs"),

@@ -71,9 +71,10 @@ object Relational {
   }
 
   /** The q78 oracle, GENERATED from the same (nLon, nLat, precision)
-    * parameters GeoFunctions unrolls — the two interleave loops share one
-    * source of truth. String/integer steps need only equal VALUES; the
-    * float quantize + center decode are mirrored token-for-token.
+    * parameters the GeoFunctions kernel loops over — the two interleave
+    * loops share one source of truth. String/integer steps need only
+    * equal VALUES; the float quantize + center decode are mirrored
+    * token-for-token.
     */
   private def geohashOracle: String = {
     val p = 6
@@ -1729,13 +1730,16 @@ object Relational {
         "after the earliest consecutive view->click chain per user — " +
         "three windows over ONE user-keyed exchange, no self-joins"),
 
-    // q78: geohashEncode/geohashDecode (ClickHouse geo family) — pure
-    // integer bit-interleave + base-32 render (GeoFunctions), points
-    // synthesized deterministically from ids. The oracle SQL is GENERATED
-    // from the same (nLon, nLat, precision) parameters the Column builder
-    // unrolls, so the two interleave loops cannot drift apart. Integer
-    // steps are exact; the only float ops (quantize multiply, center
-    // decode) are mirrored token-for-token.
+    // q78: geohashEncode/geohashDecode (ClickHouse geo family) through
+    // the Column builders — one compiled kernel call per row each
+    // (GeoFunctions), points synthesized deterministically from ids. The
+    // round trip re-encodes the decoded cell centre, which reproduces the
+    // hash on any input (the centre re-quantizes to its own cell), so its
+    // count equals the oracle's parse-roundtrip count: both are "every
+    // row". The oracle SQL is GENERATED from the same (nLon, nLat,
+    // precision) parameters the kernel loops over; integer steps are
+    // exact, and the only float ops (quantize multiply, centre decode)
+    // are mirrored token-for-token.
     "q78_geohash" -> Q(
       (s, dir) => {
         import graft.functions.GeoFunctions._
@@ -1745,21 +1749,23 @@ object Relational {
           (((col("event_id") * 2654435761L + 40503L) % 360000000L)
             .cast("double") / lit(1000000.0) - lit(180.0)).as("lon"))
         pts
-          .withColumn("gbits", geohashBits(col("lat"), col("lon"), 6))
-          .withColumn("gh", renderBits(col("gbits"), 6))
-          .withColumn("rt", geohashParse(col("gh"), 6) === col("gbits"))
-          .withColumn("clat", decodeCenterLat(col("gbits"), 6))
-          .withColumn("clon", decodeCenterLon(col("gbits"), 6))
+          .withColumn("gh", geohashEncode(col("lat"), col("lon"), 6))
+          .withColumn("d", geohashDecode(col("gh"), 6))
+          .withColumn("rt", geohashEncode(col("d.latitude"), col("d.longitude"), 6)
+            === col("gh"))
           .groupBy(substring(col("gh"), 1, 3).as("cell"))
           .agg(count(lit(1)).as("n"),
             count_distinct(col("user_id")).as("n_users"),
             sum(when(col("rt"), 1L).otherwise(0L)).as("n_roundtrip"),
-            min(col("clat")).as("min_clat"), max(col("clat")).as("max_clat"),
-            min(col("clon")).as("min_clon"), max(col("clon")).as("max_clon"))
+            min(col("d.latitude")).as("min_clat"),
+            max(col("d.latitude")).as("max_clat"),
+            min(col("d.longitude")).as("min_clon"),
+            max(col("d.longitude")).as("max_clon"))
       },
       Some(geohashOracle),
-      "ClickHouse geohashEncode/Decode: plan-time-unrolled bit interleave " +
-        "+ base-32 render, per-row string<->bits round-trip proved, " +
+      "ClickHouse geohashEncode/Decode: one compiled kernel call per row " +
+        "(quantize, bit interleave, base-32 render; parse, cell-centre " +
+        "decode), per-row encode(decode(h)) = h round-trip proved, " +
         "3-char-cell spatial rollup; oracle interleave generated from the " +
         "same parameters"),
 
@@ -2952,12 +2958,8 @@ object Relational {
 
     // q117: the geo scalars through the SQL frontend — q78's spatial
     // rollup with every geohash step running through geohashEncode /
-    // geohashDecode under their ClickHouse names. The roundtrip proof
-    // uses the SQL surface's own inverse (re-encoding the decoded cell
-    // center reproduces the hash — total on any input since the center
-    // re-quantizes to its own cell, spec-pinned on random points), so
-    // its count equals the oracle's parse-roundtrip count: both are
-    // "every row", hash-equal by totality.
+    // geohashDecode under their ClickHouse names (longitude first), the
+    // same two kernel expressions the Column builders return.
     "q117_geohash_sql" -> Q(
       (s, dir) => {
         t(s, dir, "events")
@@ -2981,8 +2983,8 @@ object Relational {
       },
       Some(geohashOracle),
       "geohashEncode/geohashDecode through the SQL frontend (ClickHouse " +
-        "argument order, plan-time-unrolled interleave): the q78 spatial " +
-        "rollup hash-matched against the shared generated oracle"),
+        "argument order, one compiled kernel call per row): the q78 " +
+        "spatial rollup hash-matched against the shared generated oracle"),
 
     // q118: the fuzzy scalars through the SQL frontend — q96's corpus
     // scored by ngramDistance/ngramSearch under their ClickHouse names;

@@ -78,10 +78,11 @@ class PlanFingerprintSpec extends AnyFunSuite {
   }
 
   test("a data-dependent entry yields its constant marker, unbuilt") {
-    val Seq((name, h, nodes)) =
+    val Seq((name, h, nodes, exprs)) =
       PlanFingerprint.catalog(spark, "/nonexistent", Seq("t20_kll_quantiles"))
     assert(name == "t20_kll_quantiles")
     assert(h == PlanFingerprint.dataDependentPlans(name) && nodes.isEmpty)
+    assert(exprs.isEmpty)
   }
 
   test("the written plans file reads back as {name: {plan_md5, nodes}}") {
@@ -89,7 +90,8 @@ class PlanFingerprintSpec extends AnyFunSuite {
     val marker = PlanFingerprint.dataDependentPlans("t20_kll_quantiles")
     val f = java.nio.file.Files.createTempFile("graft_plans", ".json")
     PlanFingerprint.write(f.toString,
-      Seq(("agg", h, nodes), ("t20_kll_quantiles", marker, Map.empty[String, Int])))
+      Seq(("agg", h, nodes, Some(12)),
+        ("t20_kll_quantiles", marker, Map.empty[String, Int], None)))
     val json = new ObjectMapper().readTree(f.toFile)
     assert(json.fieldNames.asScala.toSeq == Seq("agg", "t20_kll_quantiles"))
     assert(json.get("agg").get("plan_md5").asText == h)
@@ -97,6 +99,27 @@ class PlanFingerprintSpec extends AnyFunSuite {
       .map(e => e.getKey -> e.getValue.asInt).toMap == nodes)
     assert(json.get("t20_kll_quantiles").get("plan_md5").asText == marker)
     assert(json.get("t20_kll_quantiles").get("nodes").isEmpty)
+    assert(json.get("agg").get("expr_nodes").asInt == 12)
+    assert(!json.get("t20_kll_quantiles").has("expr_nodes"))
+  }
+
+  test("expression nodes count every node under every operator") {
+    val cols = spark.read.parquet(s"$dirA/t.parquet").select(col("id"), col("k"))
+    val n0 = PlanFingerprint.exprNodes(cols.queryExecution.analyzed)
+    val n1 = PlanFingerprint.exprNodes(
+      cols.select(col("id"), col("k"), (col("id") + lit(1L)).as("j")).queryExecution.analyzed)
+    // the new Project: id, k, and Alias(Add(id, 1)) — six nodes
+    assert(n0 > 0 && n1 - n0 == 6, s"$n0 -> $n1")
+  }
+
+  test("a bench run labels its plan dump past every BENCH and PLANS dump") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_rounds")
+    try {
+      assert(Bench.nextRound(dir.toFile) == 1)
+      Seq("BENCH_r19.json", "BENCH_r19_c8.json", "PLANS_r20.json", "PERF_r30.json")
+        .foreach(n => java.nio.file.Files.createFile(dir.resolve(n)))
+      assert(Bench.nextRound(dir.toFile) == 21)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }
 
   test("canonical form contains no absolute paths or expression ids") {

@@ -5,12 +5,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.functions.GeoFunctions._
+import graft.functions.GeohashChain.{decodeCenterLat, decodeCenterLon, geohashBits, geohashParse, renderBits}
 
-/** GeoFunctions (q78) against the classic bisection encoder: the Column
-  * builder quantizes-then-interleaves in one pass; the reference halves
+/** GeoFunctions (q78) against the classic bisection encoder: the kernel
+  * quantizes-then-interleaves in one pass; the reference halves
   * intervals bit by bit (Niemeyer's original formulation). Equal on
   * everything off dyadic boundaries — plus the public test vectors, the
-  * prefix property, parse/render round-trip, and decode-center bounds.
+  * prefix property, and, on the composed reference ([[GeohashChain]]),
+  * parse/render round-trip and decode-center bounds.
   */
 class GeoFunctionsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
