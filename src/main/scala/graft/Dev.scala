@@ -11,7 +11,9 @@ import org.apache.spark.sql.execution.FormattedMode
   * {{{
   * Dev show <name> [sfDir] [maxRows]       print an entry's rows
   * Dev time <names> [sfDir] [reps]         Bench's protocol: warm-up, then
-  *                                         median/min/max of reps noop writes
+  *                                         median/min/max of reps noop writes,
+  *                                         with the median DataFrame build
+  *                                         seconds and the jobs a build runs
   * Dev plan [sfDir] [names] [--write F] [--explain DIR]
   *                                         plan fingerprints; F in PLANS_rNN
   *                                         format, DIR/<name>.txt formatted
@@ -38,8 +40,9 @@ object Dev {
       val entries = names(ns)
       Measure.warm(spark, entries, "time")
       entries.foreach { name =>
-        val s = Measure.entry(spark, name, sfDir, reps, "time")
-        println(f"[time] $name%-28s median=${s.median}%.2fs min=${s.min}%.2fs max=${s.max}%.2fs")
+        val (s, jobs) = Measure.buildJobs(spark)(Measure.entry(spark, name, sfDir, reps, "time"))
+        println(f"[time] $name%-28s median=${s.median}%.2fs min=${s.min}%.2fs max=${s.max}%.2fs " +
+          f"build=${s.build}%.3fs build_jobs=${jobs.toDouble / reps}%.1f")
       }
     }
     case "plan" :: rest => plan(rest)

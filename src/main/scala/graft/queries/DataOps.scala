@@ -30,6 +30,12 @@ object DataOps {
   private def tp(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.loadParallel(s, dir, name)
 
+  /** The documents table's row count, from its parquet footer: the
+    * minCount thresholds derive from it without a count job.
+    */
+  private def docCount(s: SparkSession, dir: String): Long =
+    Tables.rowCount(s, dir, "documents")
+
   /** Ingest-parity config: 7-field nginx access-log format (native casts
     * only — remote_addr:String, time_local:DateTime, status:UInt16,
     * bytes_sent:UInt32, request_time:Float32).
@@ -1503,7 +1509,7 @@ object DataOps {
         val docsFull = tp(s, dir, "documents")
         val sn = expr("cast(substr(source, 4, 10) as int)")
         val surp = TextAnalysis.bigramSurprisal(docsFull,
-          minCount = math.max(1L, docsFull.count() / 10))
+          minCount = math.max(1L, docCount(s, dir) / 10))
         val scored = docsFull.select(col("doc_id"),
             when(sn <= 11, "web").when(sn <= 15, "books")
               .when(sn <= 18, "code").otherwise("wiki").as("domain"))
@@ -2187,7 +2193,7 @@ object DataOps {
         // clamped like every other minCount site: a sub-10-doc corpus
         // yields 0 otherwise (threshold 0 keeps everything — harmless for
         // unkRewrite, but the ≥1 invariant should be uniform)
-        TextAnalysis.unkRewrite(docs, minCount = math.max(1L, docs.count() / 10))
+        TextAnalysis.unkRewrite(docs, minCount = math.max(1L, docCount(s, dir) / 10))
       },
       Some(s"""WITH tk AS (SELECT doc_id, $NormToksSql AS toks FROM documents)
              |SELECT doc_id, rewritten, n_unk FROM tk, (
@@ -2212,7 +2218,7 @@ object DataOps {
     "t15_bigram_surprisal" -> Q(
       (s, dir) => {
         val docs = tp(s, dir, "documents")
-        TextAnalysis.bigramSurprisal(docs, minCount = math.max(1L, docs.count() / 10))
+        TextAnalysis.bigramSurprisal(docs, minCount = math.max(1L, docCount(s, dir) / 10))
       },
       Some(s"""WITH tk AS (SELECT doc_id, $NormToksSql AS toks FROM documents),
              |mc AS (SELECT greatest(1, count(*) // 10) AS m FROM documents),
@@ -2254,7 +2260,7 @@ object DataOps {
       (s, dir) => {
         val docs = tp(s, dir, "documents")
         val surp = TextAnalysis.bigramSurprisal(docs,
-          minCount = math.max(1L, docs.count() / 10))
+          minCount = math.max(1L, docCount(s, dir) / 10))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val cap = surp.where(col("nb") > 0)
           .agg(expr("2 * (sum(surp_mean_e4) div count(1))")).head.getLong(0)
@@ -2362,7 +2368,7 @@ object DataOps {
     "t16_trigram_surprisal" -> Q(
       (s, dir) => {
         val docs = tp(s, dir, "documents")
-        TextAnalysis.trigramSurprisal(docs, minCount = math.max(1L, docs.count() / 10))
+        TextAnalysis.trigramSurprisal(docs, minCount = math.max(1L, docCount(s, dir) / 10))
       },
       Some(s"""WITH tk AS (SELECT doc_id, $NormToksSql AS toks FROM documents),
              |mc AS (SELECT greatest(1, count(*) // 10) AS m FROM documents),
@@ -2626,7 +2632,7 @@ object DataOps {
         val docs = tp(s, dir, "documents")
         // max(1, …): a sub-10-doc corpus would otherwise compute 0 and
         // trip rarityScore's require — degrade to "keep every term" instead
-        TextAnalysis.rarityScore(docs, minCount = math.max(1L, docs.count() / 10))
+        TextAnalysis.rarityScore(docs, minCount = math.max(1L, docCount(s, dir) / 10))
       },
       Some(s"""WITH tk AS (SELECT doc_id, $NormToksSql AS toks FROM documents),
              |mc AS (SELECT greatest(1, count(*) // 10) AS m FROM documents),
@@ -2844,7 +2850,7 @@ object DataOps {
     "p03_quality_curation_pipeline" -> Q(
       (s, dir) => {
         val corpus = docsWithNearDups(s, dir)
-        val minCount = math.max(1L, tp(s, dir, "documents").count() / 10)
+        val minCount = math.max(1L, docCount(s, dir) / 10)
         val keepIds = TextAnalysis.c4Filters(corpus, minToks = 15)
           .where(col("keep")).select("doc_id")
         // the gated corpus feeds five consumers (pair gen, quality, the
@@ -2970,7 +2976,7 @@ object DataOps {
     "p04_target_matching_pipeline" -> Q(
       (s, dir) => {
         val docs = tp(s, dir, "documents").select("doc_id", "text", "source")
-        val minCount = math.max(1L, docs.count() / 10) // see t13: tiny-corpus clamp
+        val minCount = math.max(1L, docCount(s, dir) / 10) // see t13: tiny-corpus clamp
         // rarity is one numeric row per doc (4 longs) — persist it so the
         // eager cap scalar and the gate join don't each re-run the two
         // tokenize passes (measured: p04 5.3 s → the rarity recompute was

@@ -1,41 +1,115 @@
 package graft.sources
 
+import java.io.FileNotFoundException
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
-/** Loaders for the driver-provided analytical tables
-  * (`/root/repo/TESTDATA.md`). One parquet file per table; scans are
-  * column-pruned and filter-pushed by Catalyst, so helpers never cache or
-  * materialize.
+/** Loaders for the analytical testdata tables (TESTDATA.md). One
+  * parquet file per table; scans are column-pruned and filter-pushed by
+  * Catalyst, so helpers never cache or materialize.
+  *
+  * A table's schema comes from its file's footer, read where the DataFrame
+  * is built (no task runs) and converted by the same
+  * `ParquetToSparkSchemaConverter` Spark's own inference runs, under the
+  * session's conf. The DataFrame is then read
+  * with that schema given, so building it runs no Spark job: plain
+  * `spark.read.parquet` runs its schema merge as a job even for one file.
+  * The footer is read again on every call, so a rewritten file is always
+  * seen. A path that is not one file (a directory of part files, or a
+  * missing path) goes through plain `spark.read.parquet`, with its
+  * inference and its errors.
   */
 object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    if (name == "events") {
-      // events.ts has shipped as parquet TIMESTAMP(NANOS) — which Spark's
-      // reader rejects outright — and as TIMESTAMP(MICROS) without the
-      // isAdjustedToUTC flag, which Spark reads as TIMESTAMP_NTZ (breaking
-      // unix_millis & friends). Normalize both to the session-zone
-      // TIMESTAMP the queries and the DuckDB oracle agree on: nanos read
-      // raw and truncated ns → µs (DuckDB's TIMESTAMP_NS → TIMESTAMP
-      // cast), NTZ cast wall-clock in the session zone (UTC everywhere
-      // in this engine, so byte-identical to DuckDB's naive reading).
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$sfDir/$name.parquet")
-      raw.schema("ts").dataType match {
-        case LongType =>
-          raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          raw.withColumn("ts",
-            col("ts").cast(org.apache.spark.sql.types.TimestampType))
-        case _ => raw
-      }
-    } else spark.read.parquet(s"$sfDir/$name.parquet")
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** A table stored as one parquet file: its status and its footer. */
+  private case class TableFile(status: FileStatus, footer: ParquetMetadata)
+
+  private def pathOf(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
+
+  /** The table file at `path` with its footer, or None when `path` is not
+    * one file.
+    */
+  private def tableFile(spark: SparkSession, path: String): Option[TableFile] = {
+    val hconf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val status =
+      try Some(p.getFileSystem(hconf).getFileStatus(p))
+      catch { case _: FileNotFoundException => None }
+    status.filter(_.isFile).map { st =>
+      TableFile(st, ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(st, hconf),
+        ParquetMetadataConverter.NO_FILTER))
+    }
   }
+
+  private def hasNanos(footer: ParquetMetadata): Boolean =
+    footer.getFileMetaData.getSchema.getColumns.asScala.exists { c =>
+      c.getPrimitiveType.getLogicalTypeAnnotation match {
+        case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+        case _                                 => false
+      }
+    }
+
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = pathOf(sfDir, name)
+    read(spark, name, path, tableFile(spark, path))
+  }
+
+  private def read(spark: SparkSession, name: String, path: String,
+      file: Option[TableFile]): DataFrame = {
+    // events.ts has shipped as parquet TIMESTAMP(NANOS), which Spark's
+    // reader rejects unless nanosAsLong is on, and as TIMESTAMP(MICROS)
+    // without the isAdjustedToUTC flag, which Spark reads as
+    // TIMESTAMP_NTZ (breaking unix_millis & friends). Both are normalized
+    // to the session-zone TIMESTAMP the queries and the DuckDB oracle agree
+    // on: nanos read raw and truncated ns → µs (DuckDB's TIMESTAMP_NS →
+    // TIMESTAMP cast), NTZ cast wall-clock in the session zone (UTC
+    // everywhere in this engine, so byte-identical to DuckDB's naive
+    // reading). The scan reads nanosAsLong when it runs, so it is set in
+    // the session, but only for a file that has a nanos column (or a
+    // directory, whose footers are not read here).
+    val isEvents = name == "events"
+    if (isEvents && file.forall(f => hasNanos(f.footer))) spark.conf.set(NanosAsLong, "true")
+    val raw = file match {
+      case Some(f) =>
+        val schema = ParquetFileFormat.readSchemaFromFooter(
+          new Footer(f.status.getPath, f.footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+    if (!isEvents) raw
+    else raw.schema("ts").dataType match {
+      case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
+      case _                => raw
+    }
+  }
+
+  /** The table's row count: the sum of its row groups' counts in the
+    * footer, so no Spark job runs; a path that is not one file is counted
+    * by a scan.
+    */
+  def rowCount(spark: SparkSession, sfDir: String, name: String): Long =
+    tableFile(spark, pathOf(sfDir, name)) match {
+      case Some(f) => f.footer.getBlocks.asScala.map(_.getRowCount).sum
+      case None    => load(spark, sfDir, name).count()
+    }
 
   /** [[load]] with a SCALE-ADAPTIVE parallelism floor (r19, guide §2/§6).
     *
@@ -63,11 +137,17 @@ object Tables {
     * counts and shuffle partitioning).
     */
   def loadParallel(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = load(spark, sfDir, name)
+    val path = pathOf(sfDir, name)
+    val file = tableFile(spark, path)
+    val df = read(spark, name, path, file)
     val par = spark.sparkContext.defaultParallelism
     val conf = spark.sessionState.conf
-    val files = leafFiles(s"$sfDir/$name.parquet")
-    val bytes = if (files.isEmpty) -1L else files.map(_.length).sum
+    val (bytes, nFiles) = file match {
+      case Some(f) => (f.status.getLen, 1L)
+      case None =>
+        val files = leafFiles(path)
+        (if (files.isEmpty) -1L else files.map(_.length).sum, files.size.toLong)
+    }
     // SMALL-TABLE EXEMPTION (r20, the r19 verdict's q-dimension item): a
     // table under openCost/8 (512 KB at the 4 MB default) is
     // dimension-scale — a full single-core pass over it costs less than
@@ -78,7 +158,7 @@ object Tables {
     // session's own split policy, not a constant: it scales with
     // whatever open-cost the deployment configured.
     if (bytes >= 0 && bytes < conf.filesOpenCostInBytes / 8) df
-    else if (naturalSplits(spark, bytes, files.size) >= par) df
+    else if (naturalSplits(spark, bytes, nFiles) >= par) df
     else df.repartition(par)
   }
 

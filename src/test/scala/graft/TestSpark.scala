@@ -1,10 +1,10 @@
 package graft
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test run; 4 workers keep the
@@ -26,32 +26,9 @@ object TestSpark {
     finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
-  /** Runs `body` with `listener` on the shared context, and returns once the
-    * listener has seen every event of `body`: events arrive in order, so
-    * once a marker job started after `body` is seen, so is all before it.
-    */
-  def listening[T](listener: SparkListener)(body: => T): T = {
-    val sc = spark.sparkContext
-    val marker = s"listening-marker-${java.util.UUID.randomUUID}"
-    val seen = new CountDownLatch(1)
-    val flush = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
-          seen.countDown()
-    }
-    sc.addSparkListener(listener)
-    sc.addSparkListener(flush)
-    try {
-      val out = body
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      if (!seen.await(30, TimeUnit.SECONDS)) throw new AssertionError("listener events did not arrive")
-      out
-    } finally {
-      sc.removeSparkListener(flush)
-      sc.removeSparkListener(listener)
-    }
-  }
+  /** [[Measure.listening]] on the shared session. */
+  def listening[T](listener: SparkListener)(body: => T): T =
+    Measure.listening(spark, listener)(body)
 
   /** Runs `body` and returns its result with, for each stage that read
     * input meanwhile, the records each of its tasks read.
